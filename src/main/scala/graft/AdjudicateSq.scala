@@ -42,36 +42,36 @@ object AdjudicateSq {
     }
 
     // pre-trained weights for the scorer phases (excluded from timing)
-    val wt = graft.text.QualityClassifier
-      .train(docs, "doc_id", "text", col("lang") === "en")
-      .localCheckpoint(eager = true)
+    scala.util.Using.resource(graft.core.Par.materialize(graft.text.QualityClassifier
+        .train(docs, "doc_id", "text", col("lang") === "en"))) { cp =>
+      val wt = cp.df
+      // phase 2: the gram-level scorer as a BATCH plan (no streaming)
+      bestOf("score_batch") {
+        graft.text.QualityClassifier
+          .scoreStream(docs, "doc_id", "text", wt)
+          .queryExecution.toRdd.count()
+      }
 
-    // phase 2: the gram-level scorer as a BATCH plan (no streaming)
-    bestOf("score_batch") {
-      graft.text.QualityClassifier
-        .scoreStream(docs, "doc_id", "text", wt)
-        .queryExecution.toRdd.count()
-    }
+      // phase 3: the same scorer through Structured Streaming
+      bestOf("score_stream") {
+        val src = spark.readStream.schema(docs.schema)
+          .parquet(s"$dir/{documents.parquet}")
+        val out = graft.text.QualityClassifier
+          .scoreStream(src, "doc_id", "text", wt)
+        val qn = "adj_sq_" + java.util.UUID.randomUUID().toString.replace("-", "")
+        val q = out.writeStream.format("memory").queryName(qn)
+          .outputMode("complete")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        spark.table(qn).queryExecution.toRdd.count()
+      }
 
-    // phase 3: the same scorer through Structured Streaming
-    bestOf("score_stream") {
-      val src = spark.readStream.schema(docs.schema)
-        .parquet(s"$dir/{documents.parquet}")
-      val out = graft.text.QualityClassifier
-        .scoreStream(src, "doc_id", "text", wt)
-      val qn = "adj_sq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(qn).queryExecution.toRdd.count()
-    }
-
-    // full gate query for reference (train + stream + memory-sink read)
-    bestOf("gate_full") {
-      SparkEntry.queries("q_stream_quality")(spark, dir)
-        .queryExecution.toRdd.count()
+      // full gate query for reference (train + stream + memory-sink read)
+      bestOf("gate_full") {
+        SparkEntry.queries("q_stream_quality")(spark, dir)
+          .queryExecution.toRdd.count()
+      }
     }
 
     spark.stop()

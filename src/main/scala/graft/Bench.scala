@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * measures the append (ingest) path against the reference's published
@@ -25,14 +26,16 @@ object Bench {
   /** The canonical-record acceptance rule (BenchGateSpec pins it):
     * quiet sentinel AND same sf AND total no slower than the existing
     * canonical's beyond 2% — the canonical is the fastest clean record,
-    * not the latest (r17 verdict §3). A missing/other-sf canonical
-    * gates on pristineness alone. */
+    * not the latest — AND no failed query: a failure is left out of the
+    * total, so a record with one would look faster than it is. A
+    * missing/other-sf canonical gates on pristineness alone. */
   private[graft] def canonAccept(drift: Double, sfMatches: Boolean,
                                  prevTotal: Option[Double],
-                                 total: Double): Boolean = {
+                                 total: Double,
+                                 failed: Seq[String] = Nil): Boolean = {
     val pristine = drift <= 1.05 && drift >= 1 / 1.05
     val fasterOrClose = !sfMatches || prevTotal.forall(p => total <= p * 1.02)
-    pristine && sfMatches && fasterOrClose
+    pristine && sfMatches && fasterOrClose && failed.isEmpty
   }
 
   def main(args: Array[String]): Unit = {
@@ -149,15 +152,20 @@ object Bench {
     }
 
     var shuffles, broadcasts, codegenSpans, globalWindows = 0
-    val results = SparkEntry.queries.map { case (name, fn) =>
+    // a query that throws goes here, never into a total
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    val results = SparkEntry.queries.flatMap { case (name, fn) =>
       var lastDf: DataFrame = null
       val runs = (1 to 2).map { _ =>
-        try time1 {
+        try Some(time1 {
           lastDf = fn(spark, sfDir)
           // executes THIS plan (df.count() would rewrite it into a count
           // aggregate, skipping sorts/projections and leaving AQE unset)
           lastDf.queryExecution.toRdd.count()
-        } catch { case _: Throwable => -1d }
+        }) catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name failed: $e")
+          None
+        }
       }
       // audit the EXECUTED plan — AQE's final plan carries the real
       // shuffle/broadcast/codegen structure (the unexecuted one doesn't)
@@ -185,7 +193,8 @@ object Bench {
         }.size
       } catch { case _: Throwable => }
       cohortTick()
-      name -> (if (runs.exists(_ < 0)) -1d else runs.min)
+      if (runs.contains(None)) { failed += name; None }
+      else Some(name -> runs.flatten.min)
     }
     // close the final partial cohort
     if (sweepIdx % cohortSize != 0) {
@@ -261,8 +270,7 @@ object Bench {
     // precision + planAudit go to bench_full.json and an earlier line,
     // which the tail may truncate harmlessly.
     def d3(v: Double): String =
-      if (v < 0) "-1"
-      else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
     // keys lose their uniform "q_" prefix in the compact line only (full
     // names stay in bench_full.json) — 70+ queries × 2 chars matters here.
     // The line must fit the driver's ~2000-char stdout tail WITH sbt's
@@ -271,7 +279,7 @@ object Bench {
     // first is what regression analysis needs) with a "qdrop" count.
     def qsLine(scale: Int, entries: Seq[(String, Double)]): String =
       entries.map { case (k, v) =>
-        val s = if (v < 0) "-1" else BigDecimal(v).setScale(scale,
+        val s = BigDecimal(v).setScale(scale,
           BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
         s"\"" + k.stripPrefix("q_") + "\":" + s
       }.mkString("{", ",", "}")
@@ -289,6 +297,7 @@ object Bench {
     val audit =
       s"""{"shuffles":$shuffles,"broadcasts":$broadcasts,"codegenSpans":$codegenSpans,"globalWindows":$globalWindows}"""
     val sfName = new java.io.File(sfDir).getName
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def retriesJson(stripPrefix: Boolean): String =
       retried.map { case (k, (b2, r3)) =>
         val key = if (stripPrefix) k.stripPrefix("q_") else k
@@ -313,7 +322,7 @@ object Bench {
     // r8/r9) overflowed once the retries map appeared and cut the line's
     // head off mid-key → "parsed": null in two straight round records.
     val fixedFrame =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
     // 60-char slack only: showSuccess=false + raw forked output mean
     // nothing follows this line in stdout anymore (was 140 for sbt's
     // trailing "[success] Total time …" line)
@@ -340,7 +349,7 @@ object Bench {
       .map { case (k, (f, kn)) =>
         s"\"" + k + s"\":{\"fixed\":${d3(f)},\"kernel\":${d3(kn)}}"
       }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":$audit,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":$audit,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"failed":$failedJson,"sf":"$sfDir"}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => }
@@ -366,7 +375,7 @@ object Bench {
         System.err.println("[bench] WARNING: BENCH_CANONICAL.json exists but its total could not be parsed — slower-run gate degraded to pristine-only")
       val sfMatches = !Files.exists(canonPath) ||
         Files.readString(canonPath).contains(s""""sf":"$sfDir"""")
-      if (canonAccept(drift, sfMatches, prevTotal, total) ||
+      if (canonAccept(drift, sfMatches, prevTotal, total, failed.toSeq) ||
           sys.env.get("GRAFT_BENCH_FORCE").contains("1")) {
         Files.write(canonPath, (fullLine + "\n").getBytes("UTF-8"))
         System.err.println("[bench] BENCH_CANONICAL.json updated (pristine window)")
@@ -380,7 +389,7 @@ object Bench {
     // after it in a merged stdout+stderr capture (r19: every BENCH_rNN
     // record through r18 has "parsed": null; with run/fork raw output and
     // showSuccess=false this line now ends the process output).
-    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"sf":"$sfName"}"""
+    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
     try {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(scratch)).deleteRecursively()

@@ -23,25 +23,9 @@ object PlanDump {
     val spark = graft.core.Sessions.local(cpus)
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
-    // pseudo-queries: the lazy inner chains of the checkpointing kernels
-    // (the declared queries eager-localCheckpoint, which truncates the
-    // lineage explain would show — same hook PlanAuditSpec uses)
-    val extra: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "x_qc_train_lazy" -> ((s, d) => {
-        import org.apache.spark.sql.functions._
-        graft.text.QualityClassifier.trainAndScore(
-          graft.core.Tables.load(s, d, "documents"), "doc_id", "text",
-          col("lang") === "en", materialize = false)
-      }),
-      "x_dsir_lazy" -> ((s, d) => {
-        import org.apache.spark.sql.functions._
-        graft.text.Dsir.weightedScores(
-          graft.core.Tables.load(s, d, "documents"), "doc_id", "text",
-          col("source") === "src1", materialize = false)
-      }))
     for (name <- names) {
       val t0 = System.nanoTime()
-      val df = (SparkEntry.queries ++ extra)(name)(spark, dir)
+      val df = SparkEntry.queries(name)(spark, dir)
       df.queryExecution.toRdd.count() // settle AQE on the real plan
       val sec = (System.nanoTime() - t0) / 1e9
       val formatted = df.queryExecution.explainString(

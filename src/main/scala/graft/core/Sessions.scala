@@ -23,7 +23,6 @@ object Sessions {
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
     // let AQE coalesce CACHED plans too (off by default): the iterative
     // kernels (classifier GD, Platt fit, kmeans) persist a small
     // intermediate and then run many tiny stages over it — without this

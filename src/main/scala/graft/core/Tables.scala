@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Loaders for the driver-provided parquet star schema (TESTDATA.md).
   *
@@ -22,56 +22,60 @@ object Tables {
     all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }
 
-/** Pre-expansion rebalance (optimization guide §2.5, "input skew"): a
+/** Partitioning and materialization helpers for the iterative kernels.
+  *
+  * `expand` is the pre-expansion rebalance against input skew: a
   * corpus arriving in fewer splits than the cluster is wide — one small
-  * file locally, a skewed directory at scale — would run a CPU-heavy
-  * row expansion (tokenize + n-gram explode + per-gram hashing) on
-  * those few threads while the rest of the cluster idles. The cheap
-  * pre-shuffle of raw rows buys full-width expansion; a no-op whenever
-  * the source is already at least cluster-wide. Streaming frames have
-  * no static partitioning to inspect (micro-batch width is the
-  * source's concern), so they rebalance unconditionally. */
+  * file locally, a skewed directory at scale — would run a CPU-heavy row
+  * expansion (tokenize + n-gram explode + per-gram hashing) on those few
+  * threads while the rest of the cluster idles. The cheap pre-shuffle of
+  * raw rows buys full-width expansion; a no-op whenever the source is
+  * already at least cluster-wide. Streaming frames have no static
+  * partitioning to inspect (micro-batch width is the source's concern),
+  * so they rebalance unconditionally. Batch callers may pass `by`
+  * columns: the rebalance then hashes on them, so later aggregations
+  * keyed on those columns need no exchange of their own.
+  *
+  * `materialize` is the one lineage cut for INTERMEDIATE relations. The
+  * lifetime rule:
+  *   - a relation read only inside one method is materialized through a
+  *     [[Par.Checkpoint]] handle scoped by `scala.util.Using.resource`,
+  *     so its blocks are freed on every exit — normal return, early
+  *     return, `require` failure or exception;
+  *   - a rolling loop (one live round at a time) closes round i−1 once
+  *     round i is materialized; its last round backs the frame it
+  *     returns (see below), and a failure closes the live handle;
+  *   - a frame the method RETURNS is a plain
+  *     `.localCheckpoint(eager = true)` as the body's last step — the
+  *     caller owns it and the ContextCleaner frees it once unreachable.
+  * A locally-checkpointed RDD is not recomputable: nothing may read a
+  * handle's frame (or a lazy frame built on it) after `close()`. */
 object Par {
-  def expand(df: DataFrame): DataFrame = {
+  def expand(df: DataFrame, by: Column*): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.isStreaming) df.repartition(par)
-    else if (df.rdd.getNumPartitions < par) df.repartition(par)
+    else if (df.rdd.getNumPartitions < par) df.repartition(par, by: _*)
     else df
   }
 
-  /** Eager localCheckpoint that KEEPS the plan's shuffle width instead
-    * of letting AQE coalesce it (r19): an iteration loop re-scans the
-    * checkpointed relation many times, so a relation whose per-pass
-    * work is non-trivial (the classifier's per-doc feature arrays:
-    * ~0.2 s of decimal folds per pass at sf0.1) must not collapse to
-    * one partition just because it is smaller than the AQE advisory
-    * size — the coalesce saves one stage's scheduling overhead once
-    * but serializes every later pass. No extra exchange: only the
-    * checkpoint execution's coalesce step is disabled, so at scale
-    * (where AQE would not coalesce anyway) the plan is identical.
-    * Only for relations whose downstream reductions are order-free
-    * (decimal/count discipline) — partition contents change. */
-  def checkpointWide(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.coalescePartitions.enabled"
-    val prev = s.conf.get(key, "true")
-    s.conf.set(key, "false")
-    try df.localCheckpoint(eager = true)
-    finally s.conf.set(key, prev)
+  /** One eager local checkpoint: `df` reads it as a bare RDD scan;
+    * `close()` unpersists exactly the RDD this handle created. */
+  final class Checkpoint private[Par] (val df: DataFrame,
+                                       rdd: org.apache.spark.rdd.RDD[_])
+      extends AutoCloseable {
+    def close(): Unit = rdd.unpersist(blocking = false)
   }
 
-  /** Drop the storage blocks behind eager localCheckpoints whose LAST
-    * consumer has materialized (r19, guide §5): the ContextCleaner only
-    * frees checkpoint blocks when the frame is GC'd, so a long-lived
-    * JVM running hundreds of queries accumulates dead blocks that
-    * compete with execution memory. A locally-checkpointed RDD is not
-    * recomputable — never call this on a frame that will be read again
-    * (returned results stay alive; only intermediates are freed). */
-  def freeCheckpoint(dfs: DataFrame*): Unit = dfs.foreach { df =>
-    try df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case _: Throwable => () }
+  /** Eagerly checkpoint `df` — each later pass plans over a bare RDD
+    * scan instead of re-analyzing (and re-running) its lineage — and
+    * return the handle that owns the blocks. No session conf is read or
+    * written. */
+  def materialize(df: DataFrame): Checkpoint = {
+    val cp = df.localCheckpoint(eager = true)
+    cp.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => new Checkpoint(cp, l.rdd)
+      case other => throw new IllegalStateException(
+        s"localCheckpoint did not yield an RDD scan: ${other.nodeName}")
+    }
   }
 }

@@ -1,7 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.Par
+import scala.util.Using
+import scala.util.control.NonFatal
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -41,64 +45,62 @@ object Dedup {
     // DIRECTED list's lineage first — the symmetrizing union would
     // otherwise run the producer (a pair-similarity join, typically the
     // dominant cost) twice, and every propagation round reads `sym`
-    // twice more. localCheckpoint (not persist) so the rounds also plan
+    // twice more. A checkpoint (not persist) so the rounds also plan
     // over a bare RDD scan instead of re-analyzing the producer lineage.
-    val directed = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .localCheckpoint(eager = true)
-    val sym = directed
-      .union(directed.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    // sym materialized — the directed list has no consumers left; free
-    // its blocks now instead of at ContextCleaner GC time (guide §5)
-    graft.core.Par.freeCheckpoint(directed)
-    val nEdges = sym.count()
-    // Similarity graphs shrink drastically after thresholding: when the
-    // edge set fits on the driver, path-compressed union-find beats any
-    // number of distributed rounds (each round costs 2 joins + an agg of
-    // scheduling latency). The distributed path below remains the
-    // 100 TB-scale route for billions of edges.
-    if (nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        var p = parent.getOrDefault(x, x)
-        while (p != x) { // path halving
-          val gp = parent.getOrDefault(p, p)
-          parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
-        }
-        x
-      }
-      val verts = new java.util.TreeSet[java.lang.Long]()
-      sym.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect().foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          verts.add(a); verts.add(b)
-          val (ra, rb) = (find(a), find(b))
-          // min-root union keeps the reference label = min vertex id,
-          // matching the propagation fixpoint exactly
-          if (ra < rb) parent.put(rb, ra)
-          else if (rb < ra) parent.put(ra, rb)
-        }
-      graft.core.Par.freeCheckpoint(sym) // collected — free (guide §5)
-      import scala.jdk.CollectionConverters._
-      val rows = verts.asScala.toSeq.map(v =>
-        org.apache.spark.sql.Row(v.longValue, find(v)))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("v",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("cluster",
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    val symCp = Using.resource(Par.materialize(
+        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))) { d =>
+      Par.materialize(d.df
+        .union(d.df.select(col("dst").as("src"), col("src").as("dst"))))
     }
-    // localCheckpoint (not persist): each round's plan embeds two copies
-    // of the previous round's — without lineage truncation the logical
-    // plan grows 2^rounds and the DRIVER dies in the optimizer long
-    // before any data pressure
-    var labels = sym.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint()
+    Using.resource(symCp) { cp =>
+      val sym = cp.df
+      // Similarity graphs shrink drastically after thresholding: when the
+      // edge set fits on the driver, path-compressed union-find beats any
+      // number of distributed rounds (each round costs 2 joins + an agg of
+      // scheduling latency). The distributed path remains the 100 TB-scale
+      // route for billions of edges.
+      if (sym.count() <= driverMaxEdges) unionFind(sym)
+      else labelRounds(sym, maxIter)
+    }
+  }
+
+  /** Driver union-find over a collected symmetric edge list; min-root
+    * union keeps the label = min vertex id, the propagation fixpoint. */
+  private def unionFind(sym: DataFrame): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      var p = parent.getOrDefault(x, x)
+      while (p != x) { // path halving
+        val gp = parent.getOrDefault(p, p)
+        parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
+      }
+      x
+    }
+    val verts = new java.util.TreeSet[java.lang.Long]()
+    sym.select(col("src").cast("long"), col("dst").cast("long"))
+      .collect().foreach { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        verts.add(a); verts.add(b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra < rb) parent.put(rb, ra)
+        else if (rb < ra) parent.put(ra, rb)
+      }
+    import scala.jdk.CollectionConverters._
+    val rows = verts.asScala.toSeq.map(v => Row(v.longValue, find(v)))
+    sym.sparkSession.createDataFrame(new java.util.ArrayList[Row](rows.asJava),
+      StructType(Seq(StructField("v", LongType, nullable = false),
+        StructField("cluster", LongType, nullable = false))))
+  }
+
+  /** Distributed min-label propagation rounds over `sym`. Each round is
+    * materialized — each round's plan embeds two copies of the previous
+    * round's, so without lineage truncation the logical plan grows
+    * 2^rounds and the DRIVER dies in the optimizer long before any data
+    * pressure. One round is live at a time: round i−1 closes once round
+    * i is materialized. The last round backs the returned frame, so the
+    * caller owns it; a failure closes it. */
+  private def labelRounds(sym: DataFrame, maxIter: Int): DataFrame = {
     def propagate(l: DataFrame): DataFrame = {
       val nbrMin = sym
         .join(l.select(col("v").as("dst2"), col("label").as("nlabel")),
@@ -115,25 +117,28 @@ object Dedup {
       l.select(col("v"), col("label").as("mid"))
         .join(l.select(col("v").as("mid"), col("label")), Seq("mid"))
         .select("v", "label")
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // propagate twice then jump, one materialization per round; carry
-      // the previous label so convergence is a filter, not another join
-      val stepped = jump(propagate(propagate(labels)))
-      val next = labels.select(col("v"), col("label").as("old"))
-        .join(stepped, Seq("v"))
-        .localCheckpoint()
-      val changed = next.filter(col("label") =!= col("old")).count()
-      // next is materialized and the convergence count is done — the
-      // previous round's label blocks have no consumers left (guide §5)
-      graft.core.Par.freeCheckpoint(labels)
-      labels = next.select("v", "label")
-      converged = changed == 0
-      i += 1
-    }
-    graft.core.Par.freeCheckpoint(sym) // rounds done — free (guide §5)
-    labels.select(col("v"), col("label").as("cluster"))
+    var live = Par.materialize(sym.select(col("src").as("v")).distinct()
+      .select(col("v"), col("v").as("label")))
+    try {
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        // propagate twice then jump, one materialization per round; the
+        // round carries the previous label as `old` and counts changed
+        // labels while it materializes, so convergence costs no job
+        val labels = live.df.select("v", "label")
+        val stepped = jump(propagate(propagate(labels)))
+        val changed = Observation()
+        val next = Par.materialize(
+          labels.select(col("v"), col("label").as("old")).join(stepped, Seq("v"))
+            .observe(changed, count(when(col("label") =!= col("old"), 1)).as("n")))
+        live.close()
+        live = next
+        converged = changed.get("n") == 0L
+        i += 1
+      }
+    } catch { case NonFatal(e) => live.close(); throw e }
+    live.df.select(col("v"), col("label").as("cluster"))
   }
 
   /** SemDeDup-style embedding near-dup (Abbas et al. 2023 shape):
@@ -157,24 +162,27 @@ object Dedup {
     // k interpreted higher-order aggregates per row, and the relation is
     // read three times below (both pair-join sides + the final output
     // join) — without the checkpoint the k-way distance scan runs 3×
-    val e = df.select(col(idCol).cast("long").as("id"),
+    val assigned = df.select(col(idCol).cast("long").as("id"),
         transform(col(vecCol), x => x.cast("double")).as("v"))
       .withColumn("cell",
         graft.similarity.Ivf.cellOf(col("v"), index).cast("long"))
-      .localCheckpoint()
-    val a = e.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
-    val b = e.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
-    val edges = a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
-      .filter(graft.functions.ArrayExprs.cosineSim(spark,
-        col("va"), col("vb")) >= threshold)
-      .select("id_a", "id_b")
-    val cc = connectedComponents(edges, "id_a", "id_b")
-      .withColumnRenamed("v", "id")
-    e.select(col("id"), col("cell"))
-      .join(cc, Seq("id"), "left")
-      .select(col("id"), col("cell"),
-        coalesce(col("cluster"), col("id")).as("cluster"))
-      .withColumn("keep", col("id") === col("cluster"))
+    Using.resource(Par.materialize(assigned)) { cp =>
+      val e = cp.df
+      val a = e.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
+      val b = e.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
+      val edges = a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
+        .filter(graft.functions.ArrayExprs.cosineSim(spark,
+          col("va"), col("vb")) >= threshold)
+        .select("id_a", "id_b")
+      val cc = connectedComponents(edges, "id_a", "id_b")
+        .withColumnRenamed("v", "id")
+      e.select(col("id"), col("cell"))
+        .join(cc, Seq("id"), "left")
+        .select(col("id"), col("cell"),
+          coalesce(col("cluster"), col("id")).as("cluster"))
+        .withColumn("keep", col("id") === col("cluster"))
+        .localCheckpoint(eager = true)
+    }
   }
 
   /** Distinct word-bigram shingle set of a text column — the

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Distributed PageRank over an edge relation — the centrality pass of a
   * document-similarity graph (e.g. near-dup edges from
@@ -60,38 +61,47 @@ object PageRank {
     // materialization jobs outweigh the planning it saves).
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     var ranks = nodes.select(col("v"), lit(1d / nD).as("r"))
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      val prev = ranks // ≤ CheckpointEvery iterations of lineage
-      val contrib = edges
-        .join(ranks.withColumnRenamed("v", "src"), "src")
-        .join(deg, "src")
-        .groupBy(col("dst").as("v"))
-        .agg(sum(fr(col("r") / col("deg"), 12).cast("decimal(38,12)"))
-          .cast("double").as("s"))
-      ranks = nodes.join(contrib, Seq("v"), "left")
-        .select(col("v"),
-          fr(lit(reset) + lit(d) * coalesce(col("s"), lit(0d)), 9).as("r"))
-      it += 1
-      // lineage truncation: without it each iteration's plan embeds the
-      // whole previous plan and DRIVER planning time grows superlinearly
-      // with iters — same cure as Dedup.connectedComponents. Values are
-      // 9-dp-pinned per iteration, so checkpointing never changes them.
-      if (it % CheckpointEvery == 0 && it < iters) {
-        ranks = ranks.localCheckpoint()
-        tol.foreach { eps =>
-          // compare THIS iteration against the one before it — a
-          // consecutive-step delta, so eps=0 certifies a true fixpoint
-          // (the update is deterministic: unchanged input ⇒ unchanged
-          // output), not a longer-period cycle
-          val delta = ranks
-            .join(prev.withColumnRenamed("r", "rp"), "v")
-            .agg(max(abs(col("r") - col("rp")))).head().getDouble(0)
-          if (delta <= eps) converged = true
+    // the checkpoint behind `ranks`, once one is taken; one live at a time
+    var live: Option[graft.core.Par.Checkpoint] = None
+    try {
+      var it = 0
+      var converged = false
+      while (it < iters && !converged) {
+        val prev = ranks // ≤ CheckpointEvery iterations of lineage
+        val contrib = edges
+          .join(ranks.withColumnRenamed("v", "src"), "src")
+          .join(deg, "src")
+          .groupBy(col("dst").as("v"))
+          .agg(sum(fr(col("r") / col("deg"), 12).cast("decimal(38,12)"))
+            .cast("double").as("s"))
+        ranks = nodes.join(contrib, Seq("v"), "left")
+          .select(col("v"),
+            fr(lit(reset) + lit(d) * coalesce(col("s"), lit(0d)), 9).as("r"))
+        it += 1
+        // lineage truncation: without it each iteration's plan embeds the
+        // whole previous plan and DRIVER planning time grows superlinearly
+        // with iters — same cure as Dedup.connectedComponents. Values are
+        // 9-dp-pinned per iteration, so checkpointing never changes them.
+        if (it % CheckpointEvery == 0 && it < iters) {
+          val next = graft.core.Par.materialize(ranks)
+          ranks = next.df
+          tol.foreach { eps =>
+            // compare THIS iteration against the one before it — a
+            // consecutive-step delta, so eps=0 certifies a true fixpoint
+            // (the update is deterministic: unchanged input ⇒ unchanged
+            // output), not a longer-period cycle
+            val delta = ranks
+              .join(prev.withColumnRenamed("r", "rp"), "v")
+              .agg(max(abs(col("r") - col("rp")))).head().getDouble(0)
+            if (delta <= eps) converged = true
+          }
+          // `prev` was the last reader of the older checkpoint
+          live.foreach(_.close())
+          live = Some(next)
         }
       }
-    }
+    } catch { case NonFatal(e) => live.foreach(_.close()); throw e }
+    // the result reads the last checkpoint, so the caller owns it
     ranks.select(col("v"), col("r").as("rank"))
   }
 }

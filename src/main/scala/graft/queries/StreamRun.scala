@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import scala.util.control.NonFatal
 
 /** Shared runner for the bounded streaming gate queries (AvailableNow →
   * memory sink), recording each run's fixed-vs-kernel time split.
@@ -46,20 +47,22 @@ object StreamRun {
     def rm(f: java.io.File): Unit = {
       val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
     }
-    try rm(new java.io.File(path)) catch { case _: Throwable => }
+    try rm(new java.io.File(path)) catch { case NonFatal(_) => }
   }
 
   /** Start the writer, wait for the bounded run to finish, record the
     * split. The memory-sink table the caller reads afterwards is
     * unaffected — this only wraps start/awaitTermination, pointing the
-    * (ephemeral) checkpoint at [[ckRoot]] and deleting it after. */
+    * (ephemeral) checkpoint at [[ckRoot]] and deleting it after, also
+    * when the stream fails. */
   def run(name: String, w: DataStreamWriter[Row]): Unit = {
     val ck = freshCk()
-    val t0 = System.nanoTime()
-    val q = w.option("checkpointLocation", ck).start()
-    q.awaitTermination()
-    record(name, q, t0)
-    rmTree(ck)
+    try {
+      val t0 = System.nanoTime()
+      val q = w.option("checkpointLocation", ck).start()
+      q.awaitTermination()
+      record(name, q, t0)
+    } finally rmTree(ck)
   }
 
   /** Split-record an already-started query (streams launched by library

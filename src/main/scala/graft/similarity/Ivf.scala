@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
   * corpus into cells; a query scans only its `nprobe` nearest cells.
@@ -52,42 +53,40 @@ object Ivf {
     // NO Par.expand here: the Lloyd sums are plain doubles (recall-gated
     // quantizer), so repartitioning would reorder the fold and drift the
     // centroids; the lineage cut alone preserves partition contents.
-    val e = (if (sampleInv <= 1) all else sampled)
-      .localCheckpoint(eager = true)
-    locally {
-      var head = e.orderBy("id").limit(k).select("v")
+    val trained = Using.resource(graft.core.Par.materialize(
+        if (sampleInv <= 1) all else sampled)) { cp =>
+      val e = cp.df
+      val head = e.orderBy("id").limit(k).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
-      if (head.length < k && sampleInv > 1) {
-        // sample too small for k seeds — train on everything
-        return train(corpus, k, iters, idCol, vecCol, sampleInv = 1)
-      }
-      // corpus itself smaller than k: degrade to head.length centroids
-      require(head.nonEmpty, s"Ivf.train: empty corpus, cannot seed $k centroids")
-      var centroids = head
-      var it = 0
-      while (it < iters) {
-        val idx = Index(centroids)
-        // per-cell mean via distributed agg: sum each dim + count
-        val assigned = e.withColumn("cell", cellOf(col("v"), idx))
-        val dims = centroids(0).length
-        val agg = assigned.groupBy("cell").agg(
-          count(lit(1)).as("n"),
-          (0 until dims).map(d => sum(element_at(col("v"), d + 1)).as(s"s$d")): _*)
-        val rows = agg.collect()
-        val next = centroids.clone()
-        rows.foreach { r =>
-          val cell = r.getInt(r.fieldIndex("cell"))
-          val n = r.getLong(r.fieldIndex("n")).toDouble
-          next(cell) = Array.tabulate(dims)(d => r.getDouble(r.fieldIndex(s"s$d")) / n)
+      // sample too small for k seeds: None retrains on everything below
+      if (head.length < k && sampleInv > 1) None
+      else {
+        // corpus itself smaller than k: degrade to head.length centroids
+        require(head.nonEmpty, s"Ivf.train: empty corpus, cannot seed $k centroids")
+        var centroids = head
+        var it = 0
+        while (it < iters) {
+          val idx = Index(centroids)
+          // per-cell mean via distributed agg: sum each dim + count
+          val assigned = e.withColumn("cell", cellOf(col("v"), idx))
+          val dims = centroids(0).length
+          val agg = assigned.groupBy("cell").agg(
+            count(lit(1)).as("n"),
+            (0 until dims).map(d => sum(element_at(col("v"), d + 1)).as(s"s$d")): _*)
+          val rows = agg.collect()
+          val next = centroids.clone()
+          rows.foreach { r =>
+            val cell = r.getInt(r.fieldIndex("cell"))
+            val n = r.getLong(r.fieldIndex("n")).toDouble
+            next(cell) = Array.tabulate(dims)(d => r.getDouble(r.fieldIndex(s"s$d")) / n)
+          }
+          centroids = next
+          it += 1
         }
-        centroids = next
-        it += 1
+        Some(Index(centroids))
       }
-      // the index is driver data — drop the sample's checkpoint blocks
-      // now instead of waiting for the ContextCleaner (guide §5)
-      graft.core.Par.freeCheckpoint(e)
-      Index(centroids)
     }
+    trained.getOrElse(train(corpus, k, iters, idCol, vecCol, sampleInv = 1))
   }
 
   /** Persist the quantizer as a tiny (cell, pos, coeff) parquet relation:

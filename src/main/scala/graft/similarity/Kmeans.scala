@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Embedding-corpus statistics: oracle-deterministic Lloyd k-means and
   * robust (median/MAD) centroid-distance outlier detection — the
@@ -62,9 +63,9 @@ object Kmeans {
     // re-analyzing the embedding-scan lineage. No Par.expand: at bench
     // shapes the per-task fixed cost of widening exceeded the compute
     // it spread (measured r18).
-    val e = emb.select(col(idCol).cast("long").as("id"),
-      toDouble(col(vecCol)).as("v")).localCheckpoint(eager = true)
-    locally {
+    Using.resource(graft.core.Par.materialize(emb.select(
+        col(idCol).cast("long").as("id"), toDouble(col(vecCol)).as("v")))) { cp =>
+      val e = cp.df
       var cents = e.orderBy("id").limit(k).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
       require(cents.length == k, s"Kmeans.fitStats: corpus smaller than k=$k")
@@ -85,10 +86,9 @@ object Kmeans {
         round6(math.sqrt(s))
       }
       val nn = nearestStruct(col("v"), fin)
-      // materialize the <=k-row result so the Lloyd relation's blocks can
-      // be freed NOW rather than at ContextCleaner GC time (guide §5);
-      // the caller's action then scans k rows
-      val out = e.select(col("id"), nn.getField("i").cast("long").as("cluster"),
+      // materialize the <=k-row result so the Lloyd relation's blocks
+      // free when the handle closes; the caller's action then scans k rows
+      e.select(col("id"), nn.getField("i").cast("long").as("cluster"),
           nn.getField("d").as("dist"))
         .groupBy("cluster")
         .agg(count(lit(1)).as("n"), min("id").as("min_vec"),
@@ -98,8 +98,6 @@ object Kmeans {
         .select("cluster", "n", "min_vec", "c_norm", "inertia")
         .orderBy("cluster")
         .localCheckpoint(eager = true)
-      graft.core.Par.freeCheckpoint(e)
-      out
     }
   }
 
@@ -116,31 +114,30 @@ object Kmeans {
     // probe, centroid agg, median, MAD) — each otherwise re-ran the
     // scan + array-decode; no widening (per-task overhead exceeded the
     // spread compute at bench shape, measured r18)
-    val base = emb.select(
-      (col(idCol) +: keepCols.map(col)) :+ toDouble(col(vecCol)).as("__v"): _*)
-      .localCheckpoint(eager = true)
-    val dims = base.select(size(col("__v"))).head.getInt(0)
-    val crow = base.groupBy().agg(
-      count(lit(1)).as("n"),
-      (0 until dims).map(d =>
-        sum(element_at(col("__v"), d + 1).cast("decimal(28,9)")).as(s"s$d")): _*)
-      .head()
-    val n = crow.getLong(crow.fieldIndex("n")).toDouble
-    val centroid = Array.tabulate(dims)(d =>
-      crow.getDecimal(crow.fieldIndex(s"s$d")).doubleValue / n)
-    val withDist = base.withColumn("__dist", sqrt(distSq(col("__v"), centroid)))
-    val med = withDist.agg(percentile(col("__dist"), lit(0.5))).head.getDouble(0)
-    val mad = withDist
-      .agg(percentile(abs(col("__dist") - med), lit(0.5))).head.getDouble(0)
-    // materialize the (small) outlier set so the widened base's blocks
-    // free NOW rather than at ContextCleaner GC time (guide §5)
-    val out = withDist.filter(abs(col("__dist") - med) > nMads * mad)
-      .select((col(idCol) +: keepCols.map(col)) :+
-        round6(col("__dist")).as("dist") :+
-        round6(abs(col("__dist") - med)).as("dev"): _*)
-      .orderBy(idCol)
-      .localCheckpoint(eager = true)
-    graft.core.Par.freeCheckpoint(base)
-    out
+    Using.resource(graft.core.Par.materialize(emb.select(
+        (col(idCol) +: keepCols.map(col)) :+ toDouble(col(vecCol)).as("__v"): _*))) { cp =>
+      val base = cp.df
+      val dims = base.select(size(col("__v"))).head.getInt(0)
+      val crow = base.groupBy().agg(
+        count(lit(1)).as("n"),
+        (0 until dims).map(d =>
+          sum(element_at(col("__v"), d + 1).cast("decimal(28,9)")).as(s"s$d")): _*)
+        .head()
+      val n = crow.getLong(crow.fieldIndex("n")).toDouble
+      val centroid = Array.tabulate(dims)(d =>
+        crow.getDecimal(crow.fieldIndex(s"s$d")).doubleValue / n)
+      val withDist = base.withColumn("__dist", sqrt(distSq(col("__v"), centroid)))
+      val med = withDist.agg(percentile(col("__dist"), lit(0.5))).head.getDouble(0)
+      val mad = withDist
+        .agg(percentile(abs(col("__dist") - med), lit(0.5))).head.getDouble(0)
+      // materialize the (small) outlier set so the base's blocks free
+      // when the handle closes
+      withDist.filter(abs(col("__dist") - med) > nMads * mad)
+        .select((col(idCol) +: keepCols.map(col)) :+
+          round6(col("__dist")).as("dist") :+
+          round6(abs(col("__dist") - med)).as("dev"): _*)
+        .orderBy(idCol)
+        .localCheckpoint(eager = true)
+    }
   }
 }

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Product quantization (IVF-PQ's storage half): the vector splits into
   * `m` subspaces, each quantized against its own `ksub`-entry codebook,
@@ -39,30 +40,28 @@ object Pq {
     val sampled = all.filter(pmod(hash(col("id")), lit(sampleInv)) === 0)
     // lineage-cut materialization — see Ivf.train
     // NO Par.expand: plain-double partial sums — see Ivf.train
-    val e = (if (sampleInv <= 1) all else sampled)
-      .localCheckpoint(eager = true)
-    locally {
+    val trained = Using.resource(graft.core.Par.materialize(
+        if (sampleInv <= 1) all else sampled)) { cp =>
+      val e = cp.df
       val head = e.orderBy("id").limit(ksub).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
-      if (head.length < ksub && sampleInv > 1) {
-        return train(corpus, m, ksub, iters, idCol, vecCol, sampleInv = 1)
-      }
-      require(head.nonEmpty, s"Pq.train: empty corpus, cannot seed $ksub codes")
-      val d = head(0).length
-      require(d % m == 0, s"Pq.train: dim $d not divisible by m=$m")
-      val dsub = d / m
-      // seed subspace s from the head rows' s-th slices
-      var books: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-        head.map(v => v.slice(s * dsub, s * dsub + dsub))
-      }
-      // classic distributed Lloyd: each partition accumulates per-(s,cell)
-      // dim sums + counts in flat arrays, one small partial per partition
-      // reaches the driver — no per-row expression interpretation
-      val spark = corpus.sparkSession
-      import spark.implicits._
-      val vecs = e.select(col("v")).as[Seq[Double]]
-        .localCheckpoint(eager = true)
-      locally {
+      // sample too small for ksub seeds: None retrains on everything below
+      if (head.length < ksub && sampleInv > 1) None
+      else {
+        require(head.nonEmpty, s"Pq.train: empty corpus, cannot seed $ksub codes")
+        val d = head(0).length
+        require(d % m == 0, s"Pq.train: dim $d not divisible by m=$m")
+        val dsub = d / m
+        // seed subspace s from the head rows' s-th slices
+        var books: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
+          head.map(v => v.slice(s * dsub, s * dsub + dsub))
+        }
+        // classic distributed Lloyd: each partition accumulates per-(s,cell)
+        // dim sums + counts in flat arrays, one small partial per partition
+        // reaches the driver — no per-row expression interpretation
+        val spark = corpus.sparkSession
+        import spark.implicits._
+        val vecs = e.select(col("v")).as[Seq[Double]]
         var it = 0
         while (it < iters) {
           val bcBooks = spark.sparkContext.broadcast(books)
@@ -115,12 +114,10 @@ object Pq {
           bcBooks.destroy()
           it += 1
         }
+        Some(Index(m, dsub, books))
       }
-      // the codebooks are driver data — drop both checkpoint layers'
-      // blocks now instead of waiting for the ContextCleaner (guide §5)
-      graft.core.Par.freeCheckpoint(vecs.toDF(), e)
-      Index(m, dsub, books)
     }
+    trained.getOrElse(train(corpus, m, ksub, iters, idCol, vecCol, sampleInv = 1))
   }
 
   /** Persist the codebooks as a (sub, code, pos, coeff) parquet relation

@@ -4,6 +4,7 @@ import java.io.{InputStream, OutputStream}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.CopyOnWriteArrayList
+import scala.util.control.NonFatal
 
 /** Loopback-only MQTT 3.1.1 and NATS broker doubles with minimal
   * clients — the socket edge of the subscriber surface (reference
@@ -28,8 +29,14 @@ object BrokerLoop {
     require(ok, s"non-loopback broker host refused: $host")
   }
 
-  private def spawn(name: String)(body: => Unit): Thread = {
-    val t = new Thread(() => try body catch { case _: Throwable => () }, name)
+  /** Daemon worker; one that dies while its owner is still open says
+    * which one and why. A deliberate close ends the loop quietly (its
+    * blocked accept/read throws once `closed` holds). */
+  private def spawn(name: String, closed: => Boolean)(body: => Unit): Thread = {
+    val t = new Thread(() =>
+      try body
+      catch { case NonFatal(e) => if (!closed) System.err.println(s"[broker] $name stopped: $e") },
+      name)
     t.setDaemon(true); t.start(); t
   }
 
@@ -188,10 +195,10 @@ object BrokerLoop {
     private val subs = new CopyOnWriteArrayList[Sub]()
     @volatile private var open = true
 
-    spawn("mqtt-broker-accept") {
+    spawn("mqtt-broker-accept", !open) {
       while (open) {
         val sock = server.accept()
-        spawn(s"mqtt-broker-conn-${sock.getPort}")(connLoop(sock))
+        spawn(s"mqtt-broker-conn-${sock.getPort}", !open)(connLoop(sock))
       }
     }
 
@@ -310,7 +317,7 @@ object BrokerLoop {
       out.write(mqttPacket(0x82, u16(1) ++ v5SubProps ++ lenPrefixed(filter) :+ 0.toByte))
       out.flush()
       if (readerOn.compareAndSet(false, true))
-        spawn(s"mqtt-client-read-$clientId") {
+        spawn(s"mqtt-client-read-$clientId", sock.isClosed) {
           var live = true
           while (live) {
             val h = in.read()
@@ -389,10 +396,10 @@ object BrokerLoop {
     private val rr = new java.util.concurrent.atomic.AtomicLong()
     @volatile private var open = true
 
-    spawn("nats-broker-accept") {
+    spawn("nats-broker-accept", !open) {
       while (open) {
         val sock = server.accept()
-        spawn(s"nats-broker-conn-${sock.getPort}")(connLoop(sock))
+        spawn(s"nats-broker-conn-${sock.getPort}", !open)(connLoop(sock))
       }
     }
 
@@ -464,7 +471,7 @@ object BrokerLoop {
     out.write("CONNECT {\"verbose\":false}\r\nPING\r\n".getBytes(UTF_8)); out.flush()
     require(Option(readCrlfLine(in)).exists(_.startsWith("PONG")), "nats: no PONG")
 
-    spawn(s"nats-client-read-$port") {
+    spawn(s"nats-client-read-$port", sock.isClosed) {
       var line = readCrlfLine(in)
       while (line != null) {
         val toks = line.trim.split("\\s+")

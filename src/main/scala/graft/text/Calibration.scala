@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** Per-domain Platt scaling (Platt 1999, "Probabilistic Outputs for
   * Support Vector Machines..." — public method, no reference analogue):
@@ -42,43 +43,31 @@ object Calibration {
     * `scored` must carry idCol, domainCol, scoreCol (double in [0,1])
     * and labelCol (0/1). Output `cal_score` = round6 sigmoid(A_d*s+B_d),
     * `score` echoes the input score, `label` the 0/1 label as BIGINT.
-    *
-    * `materialize = false` returns the lazy final plan instead (the
-    * plan-audit hook — an eager localCheckpoint truncates the lineage
-    * the audit assertions inspect), at the cost of re-running the
-    * calibration scan on each action.
     */
   def plattCalibrate(scored: DataFrame, idCol: String, domainCol: String,
                      scoreCol: String, labelCol: String,
-                     iters: Int = 3, lr: Double = 2.0,
-                     materialize: Boolean = true): DataFrame = {
-    val spark = scored.sparkSession
+                     iters: Int = 3, lr: Double = 2.0): DataFrame = {
     val base0 = scored.select(col(idCol), col(domainCol),
       col(scoreCol).cast("double").as("__s"),
       col(labelCol).cast("double").as("__y"))
     // lineage-cut materialization (the classifier-trainer pattern):
     // each fit iteration then plans over a bare RDD scan instead of
     // re-analyzing the full upstream lineage
-    val base: DataFrame =
-      if (materialize) base0.localCheckpoint(eager = true) else base0
-    val fit = fitParams(base, domainCol, iters, lr)
-    // (A_d, B_d) inline as |domains|-entry map literals (domains are a
-    // bounded label set) — the calibration pass is a pure projection,
-    // no join (r18; was a broadcast join of the fit table)
-    val aM = domainMap(fit.map { case (d, (a, _)) => d -> a })
-    val bM = domainMap(fit.map { case (d, (_, b)) => d -> b })
-    val out = base
-      .select(col(idCol), col(domainCol), col("__s").as("score"),
-        fr6(sigmoid9(element_at(aM, col(domainCol)) * col("__s") +
-          element_at(bM, col(domainCol)))).as("cal_score"),
-        col("__y").cast("long").as("label"))
-    if (materialize) {
-      val o = out.localCheckpoint(eager = true)
-      // calibrated result materialized — the fit base has no consumers
-      // left; free its blocks now (guide §5)
-      graft.core.Par.freeCheckpoint(base)
-      o
-    } else out
+    Using.resource(graft.core.Par.materialize(base0)) { cp =>
+      val base = cp.df
+      val fit = fitParams(base, domainCol, iters, lr)
+      // (A_d, B_d) inline as |domains|-entry map literals (domains are a
+      // bounded label set) — the calibration pass is a pure projection,
+      // no join (was a broadcast join of the fit table)
+      val aM = domainMap(fit.map { case (d, (a, _)) => d -> a })
+      val bM = domainMap(fit.map { case (d, (_, b)) => d -> b })
+      base
+        .select(col(idCol), col(domainCol), col("__s").as("score"),
+          fr6(sigmoid9(element_at(aM, col(domainCol)) * col("__s") +
+            element_at(bM, col(domainCol)))).as("cal_score"),
+          col("__y").cast("long").as("label"))
+        .localCheckpoint(eager = true)
+    }
   }
 
   /** |domains|-entry map literal — the bounded-label-set lookup that
@@ -96,13 +85,12 @@ object Calibration {
   def plattFit(scored: DataFrame, domainCol: String, scoreCol: String,
                labelCol: String, iters: Int = 3,
                lr: Double = 2.0): DataFrame = {
-    val base = scored.select(col(domainCol),
-      col(scoreCol).cast("double").as("__s"),
-      col(labelCol).cast("double").as("__y"))
-      .localCheckpoint(eager = true)
-    val fit = fitOn(base, domainCol, iters, lr)
-    graft.core.Par.freeCheckpoint(base) // fit is driver data (guide §5)
-    fit
+    // the fit is driver data, so the handle closes here
+    Using.resource(graft.core.Par.materialize(scored.select(col(domainCol),
+        col(scoreCol).cast("double").as("__s"),
+        col(labelCol).cast("double").as("__y")))) { cp =>
+      fitOn(cp.df, domainCol, iters, lr)
+    }
   }
 
   /** GD loop over a (domainCol, __s, __y) relation → per-domain
@@ -186,11 +174,11 @@ object Calibration {
                         scoreCol: String, labelCol: String): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    val base = scored.select(col(idCol), col(domainCol),
-      col(scoreCol).cast("double").as("score"),
-      col(labelCol).cast("double").as("__y"))
-      .localCheckpoint(eager = true) // lineage cut — see plattCalibrate
-    locally {
+    // lineage cut — see plattCalibrate
+    Using.resource(graft.core.Par.materialize(scored.select(col(idCol),
+        col(domainCol), col(scoreCol).cast("double").as("score"),
+        col(labelCol).cast("double").as("__y")))) { cp =>
+      val base = cp.df
       val bins = base.groupBy(col(domainCol), col("score"))
         .agg(count(lit(1)).as("n"), sum(col("__y").cast("long")).as("sy"))
         .select(col(domainCol).as("__d"), col("score"), col("n"), col("sy"))
@@ -218,13 +206,11 @@ object Calibration {
           }
         }
         .toDF(domainCol, "score", "__iso")
-      val out = base.join(broadcast(fit), Seq(domainCol, "score"))
+      base.join(broadcast(fit), Seq(domainCol, "score"))
         .select(col(idCol), col(domainCol), col("score"),
           fr6(col("__iso")).as("iso_score"),
           col("__y").cast("long").as("label"))
         .localCheckpoint(eager = true)
-      graft.core.Par.freeCheckpoint(base) // result materialized (guide §5)
-      out
     }
   }
 

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** DSIR-style hashed n-gram importance weighting (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling",
@@ -104,8 +105,7 @@ object Dsir {
     * because tokenize+explode dominates the single-query cost and the
     * two passes read the same stream. */
   def weightedScores(docs: DataFrame, idCol: String, textCol: String,
-                     targetPred: Column, width: Int = 1024,
-                     materialize: Boolean = true): DataFrame = {
+                     targetPred: Column, width: Int = 1024): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val stream0 = graft.core.Par.expand(docs)
@@ -113,14 +113,10 @@ object Dsir {
         Curation.words(col(textCol)).as("__ws"))
       .select(col(idCol), col("__t"), explode(gramsOf(col("__ws"))).as("__g"))
       .select(col(idCol), col("__t"), bucket(col("__g"), width).as("b"))
-    // materialize=false is the plan-audit hook: the eager localCheckpoint
-    // below truncates the lineage the plan assertions inspect, so audits
-    // read the identical lazy inner plan instead. Materialized runs cut
-    // the lineage up front (the classifier-trainer pattern) so the two
-    // consumers plan over a bare RDD scan.
-    val stream: DataFrame =
-      if (materialize) stream0.localCheckpoint(eager = true) else stream0
-    locally {
+    // cut the lineage up front (the classifier-trainer pattern) so the
+    // two consumers plan over a bare RDD scan
+    Using.resource(graft.core.Par.materialize(stream0)) { cp =>
+      val stream = cp.df
       val counts = stream.groupBy("b").agg(
           count(lit(1)).as("rcnt"),
           sum(when(col("__t"), 1L).otherwise(0L)).as("tcnt"))
@@ -137,14 +133,8 @@ object Dsir {
       }.toDF("b", "wgt")
       // materialize the (one row per doc) scored relation so the caller
       // never re-runs the tokenize when it finally consumes the result
-      val scored = scoreBuckets(stream.select(col(idCol), col("b")), idCol, weights)
-      if (materialize) {
-        val out = scored.localCheckpoint(eager = true)
-        // the gram stream has no consumers left — free its blocks now
-        // instead of waiting for the ContextCleaner (guide §5)
-        graft.core.Par.freeCheckpoint(stream)
-        out
-      } else scored
+      scoreBuckets(stream.select(col(idCol), col("b")), idCol, weights)
+        .localCheckpoint(eager = true)
     }
   }
 }

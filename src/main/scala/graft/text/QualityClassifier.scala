@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.util.Using
 
 /** fastText-style quality/language classifier over hashed n-gram
   * features (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -38,12 +39,13 @@ object QualityClassifier {
     * the streaming scorer ride — change it in one place only, or the
     * batch and stream oracles desynchronize. */
   private def gramBuckets(docs: DataFrame, idCol: String, textCol: String,
-                          width: Int, carry: Seq[String] = Nil): DataFrame = {
+                          width: Int, carry: Seq[String] = Nil,
+                          by: Seq[Column] = Nil): DataFrame = {
     val keep = (idCol +: carry).map(col)
     // full-width tokenize+hash regardless of source splits (guide §2.5);
     // also parallelizes the STREAMING scorers, whose one-file micro-
     // batches otherwise expand single-threaded
-    graft.core.Par.expand(docs)
+    graft.core.Par.expand(docs, by: _*)
       .select(keep :+ Curation.words(col(textCol)).as("__ws"): _*)
       .select(keep :+ explode(Dsir.gramsOf(col("__ws"))).as("__g"): _*)
       .select(keep :+ Dsir.bucket(col("__g"), width).as("b"): _*)
@@ -53,9 +55,9 @@ object QualityClassifier {
     * the b-sorted (b, c) bucket-count array, __n the total gram count,
     * and __fs the normalized feature array with the bias entry
     * (-1, 1.0) prepended — x = r9(c/n), exactly the values of the old
-    * (doc, b, x) row relation. TWO shuffles build it (the (doc, b)
-    * partial agg, then the doc-keyed collect_list — same count as the
-    * old build, which paid a (doc,b) agg plus a doc-keyed window);
+    * (doc, b, x) row relation. Its (doc, b) count and doc-keyed
+    * collect_list plan no exchange when the pre-expansion rebalance ran
+    * (it hashes raw rows by doc id), and at most one each otherwise;
     * every GD iteration and the scoring pass are then SHUFFLE-FREE
     * column math over this relation (plus one ≤width+1-row gradient
     * agg per step) — the r18 optimization that removed the
@@ -72,8 +74,14 @@ object QualityClassifier {
     // `carry` columns (constant per doc, e.g. the domain) ride the
     // grouping keys so downstream consumers skip a corpus-scale
     // doc_id join back to the source relation (r19).
+    //
+    // gramBuckets' rebalance hashes the raw rows by doc id, so both doc-keyed
+    // aggregations below find their input already clustered and plan no
+    // exchange: the relation keeps the cluster's width instead of being
+    // coalesced by AQE to a partition or two, which would serialize every
+    // GD pass over it (measured slower across the classifier family).
     gramBuckets(docs.withColumn("__y", y), idCol, textCol, width,
-        carry = "__y" +: carry)
+        carry = "__y" +: carry, by = Seq(col(idCol)))
       .groupBy(col(idCol) +: col("__y") +: carry.map(col) :+ col("b"): _*)
       .agg(count(lit(1)).as("c"))
       .groupBy(col(idCol) +: col("__y") +: carry.map(col): _*)
@@ -164,48 +172,35 @@ object QualityClassifier {
             lr: Double = 5.0): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // localCheckpoint instead of persist: the GD loop plans one job per
+    // materialize instead of persist: the GD loop plans one job per
     // iteration over this relation, and a persisted frame still carries
     // the full tokenize lineage through analysis/optimization every
-    // time — the lineage cut makes each iteration plan a bare RDD scan
-    // (guide §5). Storage is freed by the ContextCleaner when the
-    // frame goes out of scope.
-    val df = graft.core.Par.checkpointWide(
-      docFeatures(docs, idCol, textCol, labelPred, width))
-    val w = trainOnDocFeats(df, width, iters, lr)
-    graft.core.Par.freeCheckpoint(df) // weights are driver data (guide §5)
+    // time — the lineage cut makes each iteration plan a bare RDD scan.
+    // The weights are driver data, so the handle closes here.
+    val w = Using.resource(graft.core.Par.materialize(
+        docFeatures(docs, idCol, textCol, labelPred, width))) { cp =>
+      trainOnDocFeats(cp.df, width, iters, lr)
+    }
     w.toSeq.sortBy(_._1).toDF("b", "w")
   }
 
   /** Train + score in ONE corpus tokenize: the scoring pass is a pure
     * projection over the per-doc feature relation the trainer already
-    * persisted (no join, no shuffle) and the one-row-per-doc result
-    * materializes before unpersist (the Dsir weightedScores pattern).
-    * `materialize = false` returns the lazy inner plan instead — the
-    * audit hook, since an eager localCheckpoint truncates the lineage
-    * the plan assertions inspect. */
+    * materialized (no join, no shuffle) and the one-row-per-doc result
+    * materializes before the feature relation is freed (the Dsir
+    * weightedScores pattern). */
   def trainAndScore(docs: DataFrame, idCol: String, textCol: String,
                     labelPred: Column, width: Int = 32, iters: Int = 3,
-                    lr: Double = 5.0, materialize: Boolean = true,
-                    carry: Seq[String] = Nil,
-                    labelAs: Option[String] = None): DataFrame = {
-    if (!materialize) {
-      val df = docFeatures(docs, idCol, textCol, labelPred, width, carry)
-      val w = trainOnDocFeats(df, width, iters, lr)
-      return scoreDocFeats(df, idCol, w, width, carry, labelAs)
+                    lr: Double = 5.0, carry: Seq[String] = Nil,
+                    labelAs: Option[String] = None): DataFrame =
+    // the scoring projection is shuffle-free, so the final checkpoint is
+    // one cheap map job
+    Using.resource(graft.core.Par.materialize(
+        docFeatures(docs, idCol, textCol, labelPred, width, carry))) { cp =>
+      val w = trainOnDocFeats(cp.df, width, iters, lr)
+      scoreDocFeats(cp.df, idCol, w, width, carry, labelAs)
+        .localCheckpoint(eager = true)
     }
-    // lineage-cut materialization (see train); the scoring projection
-    // is shuffle-free, so the final checkpoint is one cheap map job
-    val df = graft.core.Par.checkpointWide(
-      docFeatures(docs, idCol, textCol, labelPred, width, carry))
-    val w = trainOnDocFeats(df, width, iters, lr)
-    val out = scoreDocFeats(df, idCol, w, width, carry, labelAs)
-      .localCheckpoint(eager = true)
-    // the scored result is materialized — the feature relation has no
-    // consumers left; free its blocks now (guide §5)
-    graft.core.Par.freeCheckpoint(df)
-    out
-  }
 
   /** shuffle-free scoring projection over the per-doc feature relation:
     * (idCol, score, pred [, carry..., labelAs]), value-identical to the
@@ -299,7 +294,7 @@ object QualityClassifier {
     * where twin is bit-identical to `scoreStream(docs, …, weights)` —
     * the calibrator-fitting input for [[scoreStreamCalibrated]] without
     * a second pass over the corpus. The twin materializes before the
-    * shared per-doc relation unpersists. */
+    * shared per-doc relation is freed. */
   def trainWithStreamTwin(docs: DataFrame, idCol: String, textCol: String,
                           labelPred: Column, width: Int = 32,
                           iters: Int = 3, lr: Double = 5.0,
@@ -307,15 +302,13 @@ object QualityClassifier {
                           labelAs: Option[String] = None): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val df = graft.core.Par.checkpointWide(
-      docFeatures(docs, idCol, textCol, labelPred, width, carry))
-    val w = trainOnDocFeats(df, width, iters, lr)
-    val twin = twinFromDocFeats(df, idCol, w, width, carry, labelAs)
-      .localCheckpoint(eager = true)
-    // twin materialized, weights are driver data — free the feature
-    // relation's blocks now (guide §5)
-    graft.core.Par.freeCheckpoint(df)
-    (w.toSeq.sortBy(_._1).toDF("b", "w"), twin)
+    Using.resource(graft.core.Par.materialize(
+        docFeatures(docs, idCol, textCol, labelPred, width, carry))) { cp =>
+      val w = trainOnDocFeats(cp.df, width, iters, lr)
+      val twin = twinFromDocFeats(cp.df, idCol, w, width, carry, labelAs)
+        .localCheckpoint(eager = true)
+      (w.toSeq.sortBy(_._1).toDF("b", "w"), twin)
+    }
   }
 
   /** Streaming scoring WITH per-domain Platt calibration applied in the

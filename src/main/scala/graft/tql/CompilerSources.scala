@@ -364,17 +364,20 @@ private[tql] trait CompilerSources { this: Compiler.type =>
     }
     var df = spark.table(table).filter(col(baseName) === tag)
     between.foreach { case (a, b) => df = Lake.betweenFilter(df, timeCol, a, b, nowNs) }
+    // epoch ns whether the table keeps TIME as LONG ns or as a
+    // TIMESTAMP (every tag table does); the type is read through the
+    // analyzer, which matches the column name case-insensitively
+    val timeNs = df.select(col(timeCol)).schema.head.dataType match {
+      case org.apache.spark.sql.types.LongType => col(timeCol)
+      case _ => col(timeCol).cast("decimal(38,9)")
+        .*(lit(1000000000L)).cast("long")
+    }
     df = periodNs match {
       case Some(prd) =>
         // the generator's `round(time/period)*period` bucket — machbase
         // round() is arithmetic half-up (fm_dbsrc.go:188-227); column
         // strings are aggregate expressions over the bucket
         val half = prd / 2
-        val timeNs = df.schema(timeCol).dataType match {
-          case org.apache.spark.sql.types.LongType => col(timeCol)
-          case _ => col(timeCol).cast("decimal(38,9)")
-            .*(lit(1000000000L)).cast("long")
-        }
         val bucket = floor((timeNs + half).cast("double") / prd.toDouble)
           .cast("long") * prd
         val aggCols = cols.map { c =>
@@ -387,7 +390,7 @@ private[tql] trait CompilerSources { this: Compiler.type =>
       case None =>
         // time column surfaces as a datetime value (µs timestamp)
         df.select(
-          timestamp_micros(floor(col(timeCol).cast("decimal(25,0)") / lit(1000)).cast("long")).as(timeCol) +:
+          timestamp_micros(floor(timeNs.cast("decimal(25,0)") / lit(1000)).cast("long")).as(timeCol) +:
             cols.map(vcol): _*)
     }
     var ordered = if (needKey) df else df.orderBy(timeCol)

@@ -27,4 +27,10 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.canonAccept(1.00, sfMatches = true, None, 999.0))
     assert(!Bench.canonAccept(1.30, sfMatches = true, None, 1.0))
   }
+  test("rejects a record with any failed query, however fast and quiet") {
+    assert(!Bench.canonAccept(1.00, sfMatches = true, Some(150.0), 100.0,
+      failed = Seq("q_pagerank")))
+    assert(!Bench.canonAccept(1.00, sfMatches = true, None, 1.0,
+      failed = Seq("q_a", "q_b")))
+  }
 }

@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the r19 checkpoint-lifecycle optimization (guide §5): kernels
-  * that eager-localCheckpoint an INTERMEDIATE relation free its storage
-  * blocks at kernel exit instead of leaving them to the ContextCleaner —
-  * a 208-query bench JVM otherwise accumulates dead blocks that compete
-  * with execution memory. The returned (still-consumable) frame's own
-  * blocks stay alive and readable. */
+/** Pins the checkpoint lifetime rule (`Par.materialize`): kernels that
+  * checkpoint an INTERMEDIATE relation free its storage blocks at kernel
+  * exit — on normal return, early return and exception alike — instead
+  * of leaving them to the ContextCleaner; a 208-query bench JVM
+  * otherwise accumulates dead blocks that compete with execution
+  * memory. The returned (still-consumable) frame's own blocks stay
+  * alive and readable. */
 class CheckpointLifecycleSpec extends SparkSpec {
 
   private def persistedIds(): Set[Int] =
@@ -61,5 +62,47 @@ class CheckpointLifecycleSpec extends SparkSpec {
       emb, "vec_id", "embedding", k = 4, iters = 2)
     eventuallyAtMost(1, base) // only the k-row result checkpoint survives
     assert(stats.count() <= 4)
+  }
+
+  test("Ivf.train frees the sample when it falls back to the full corpus") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val base = persistedIds()
+    // ~1/8 of 500 vectors cannot seed 100 centroids: the early-return
+    // path retrains on everything
+    val idx = graft.similarity.Ivf.train(emb, k = 100, iters = 1)
+    assert(idx.centroids.length == 100)
+    eventuallyAtMost(0, base)
+  }
+
+  test("Pq.train frees its sample when the dimension check throws") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val base = persistedIds()
+    val e = intercept[IllegalArgumentException] {
+      graft.similarity.Pq.train(emb, m = 5, ksub = 4, iters = 1) // 64 % 5 != 0
+    }
+    assert(e.getMessage.contains("not divisible"), e.getMessage)
+    eventuallyAtMost(0, base)
+  }
+
+  test("kmeans fitStats frees its base when k exceeds the corpus") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val base = persistedIds()
+    val e = intercept[IllegalArgumentException] {
+      graft.similarity.Kmeans.fitStats(emb, "vec_id", "embedding", k = 1000, iters = 1)
+    }
+    assert(e.getMessage.contains("corpus smaller than k"), e.getMessage)
+    eventuallyAtMost(0, base)
+  }
+
+  test("connectedComponents distributed rounds leave only the result") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val edges = graft.dedup.Dedup.jaccardPairs(docs, "source", 0.05)
+    val driver = graft.dedup.Dedup.connectedComponents(edges)
+      .orderBy("v").collect().toSeq
+    val base = persistedIds()
+    val cc = graft.dedup.Dedup.connectedComponents(edges, driverMaxEdges = 0L)
+    eventuallyAtMost(1, base)
+    // the rolling rounds reach the same labels as the driver union-find
+    assert(cc.orderBy("v").collect().toSeq == driver)
   }
 }

@@ -31,10 +31,10 @@ class PlanAuditSpec extends SparkSpec {
     "q_triangles", "q_perplexity_buckets", "q_source_cap",
     "q_vocab_coverage", "q_lsh_bucket_stats", "q_chunk_fixed",
     "q_hard_negatives", "q_fuzzy_vocab")
-    // DSIR and the quality classifier are audited via their lazy inner
-    // plans in a dedicated test below: the production forms
-    // localCheckpoint the scored relation, which truncates the lineage
-    // these generic asserts read
+    // DSIR, the quality classifier and calibration are audited in a
+    // dedicated test below: their production forms localCheckpoint the
+    // scored relation, which truncates the lineage these generic asserts
+    // read, so that test captures the plans the checkpoints execute
 
   test("no cartesian products in any heavy gate query") {
     heavy.foreach { name =>
@@ -69,11 +69,40 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** The (action, executed plan) of every query execution `body` runs —
+    * the localCheckpoint and collect jobs of an eager kernel, whose
+    * plans the returned frame's truncated lineage no longer shows. */
+  private def executionsOf(body: => Unit): Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+    val events = new java.util.concurrent.CopyOnWriteArrayList[
+      (String, org.apache.spark.sql.execution.SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        events.add((funcName, qe.executedPlan))
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive asynchronously; the kernel ends in one
+      // localCheckpoint, so wait until that last one has been seen
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.Eventually.timeout(
+          org.scalatest.time.Span(10, org.scalatest.time.Seconds))) {
+        assert(events.size > 0 &&
+          events.get(events.size - 1)._1 == "localCheckpoint", events)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    events.asScala.toSeq
+  }
+
   test("DSIR + quality-classifier inner plans: scale shapes, no cartesian, no global window") {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    // materialize=false yields the exact plan the production forms
-    // execute eagerly inside localCheckpoint — auditable lineage.
     // The calibration audit reads plattCalibrate's OWN plan shape, so a
     // synthetic join-free scored relation keeps the input out of the
     // join count (the production input's doc join is audited via the
@@ -82,41 +111,48 @@ class PlanAuditSpec extends SparkSpec {
       (pmod(xxhash64(col("doc_id")), lit(1000)).cast("double") / 1000.0d)
         .as("score"),
       when(col("lang") === "en", 1.0d).otherwise(0.0d).as("y"))
-    val inner = Seq(
-      "dsir" -> graft.text.Dsir.weightedScores(docs, "doc_id", "text",
-        col("source") === "src1", materialize = false),
-      "quality" -> graft.text.QualityClassifier.trainAndScore(docs,
-        "doc_id", "text", col("lang") === "en", materialize = false),
-      "calibrate" -> graft.text.Calibration.plattCalibrate(scoredForCal,
-        "doc_id", "source", "score", "y", materialize = false))
-    inner.foreach { case (name, df) =>
-      df.queryExecution.toRdd.count()
-      val plan = df.queryExecution.executedPlan.toString()
-        .split("== Initial Plan ==")(0)
+    val kernels = Seq[(String, () => Unit)](
+      "dsir" -> (() => graft.text.Dsir.weightedScores(docs, "doc_id", "text",
+        col("source") === "src1")),
+      "quality" -> (() => graft.text.QualityClassifier.trainAndScore(docs,
+        "doc_id", "text", col("lang") === "en")),
+      "calibrate" -> (() => graft.text.Calibration.plattCalibrate(scoredForCal,
+        "doc_id", "source", "score", "y")))
+    kernels.foreach { case (name, run) =>
+      val execs = executionsOf(run())
+      assert(execs.exists(_._1 == "collect"), s"$name: ${execs.map(_._1)}")
+      def text(p: org.apache.spark.sql.execution.SparkPlan): String =
+        p.toString().split("== Initial Plan ==")(0)
+      // the scoring/calibration pass is the kernel's last checkpoint
+      val scoring = text(execs.last._2)
       name match {
         case "dsir" =>
           // DSIR still broadcasts its B=1024-row weight table into the
           // doc-keyed scoring aggregation
-          assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
-            s"$name scoring does not broadcast the weight table:\n${plan.take(2000)}")
+          assert(scoring.contains("BroadcastHashJoin") || scoring.contains("BroadcastExchange"),
+            s"$name scoring does not broadcast the weight table:\n${scoring.take(2000)}")
         case _ =>
           // r18: classifier scoring and Platt calibration inline their
           // bounded parameter tables as literals — the scale assertion
-          // is NO join of any kind in the scoring/calibration pass
-          assert(!plan.contains("Join"),
-            s"$name scoring plans a join (expected literal-parameter projection):\n${plan.take(2000)}")
+          // is NO join of any kind in any of their executions
+          execs.foreach { case (fn, p) =>
+            assert(!text(p).contains("Join"),
+              s"$name $fn plans a join (expected literal-parameter projection):\n${text(p).take(2000)}")
+          }
       }
-      assert(!plan.contains("CartesianProduct"), s"$name:\n${plan.take(2000)}")
-      val tree = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
+      execs.foreach { case (fn, p) =>
+        assert(!text(p).contains("CartesianProduct"), s"$name $fn:\n${text(p).take(2000)}")
+        val tree = p match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan
+          case other => other
+        }
+        val bad = tree.collect {
+          case w: org.apache.spark.sql.execution.window.WindowExec
+            if w.partitionSpec.isEmpty => w
+        }
+        assert(bad.isEmpty, s"$name $fn has a global window: $bad")
       }
-      val bad = tree.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(bad.isEmpty, s"$name has a global window: $bad")
     }
   }
 
