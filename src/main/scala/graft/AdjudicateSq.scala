@@ -54,17 +54,9 @@ object AdjudicateSq {
 
       // phase 3: the same scorer through Structured Streaming
       bestOf("score_stream") {
-        val src = spark.readStream.schema(docs.schema)
-          .parquet(s"$dir/{documents.parquet}")
-        val out = graft.text.QualityClassifier
-          .scoreStream(src, "doc_id", "text", wt)
-        val qn = "adj_sq_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = out.writeStream.format("memory").queryName(qn)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        spark.table(qn).queryExecution.toRdd.count()
+        graft.queries.StreamRun.gate("adj_score_stream", docs, "complete") { src =>
+          graft.text.QualityClassifier.scoreStream(src, "doc_id", "text", wt)
+        }.queryExecution.toRdd.count()
       }
 
       // full gate query for reference (train + stream + memory-sink read)

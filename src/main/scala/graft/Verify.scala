@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Exits 1, naming
+  * them, when any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -16,14 +18,8 @@ object Verify {
     ).getOrCreate()
     graft.core.Sessions.installRules(spark)
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,5 +36,29 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write each builder's result to `outDir/<name>` as parquet and return
+    * the names of the builders that threw. An earlier run's output is
+    * deleted before each write, so a failed query leaves no stale parquet
+    * for the compare to pass. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           builders: Map[String, graft.queries.Q.QueryFn]): Seq[String] = {
+    new java.io.File(outDir).mkdirs()
+    builders.toSeq.flatMap { case (name, fn) =>
+      val out = s"$outDir/$name"
+      new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(out)
+        None
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
   }
 }

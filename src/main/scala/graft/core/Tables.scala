@@ -59,11 +59,13 @@ object Par {
   }
 
   /** One eager local checkpoint: `df` reads it as a bare RDD scan;
-    * `close()` unpersists exactly the RDD this handle created. */
+    * `close()` frees the blocks of exactly the RDD this handle created
+    * (without `RDD.unpersist`'s per-call "cannot be recomputed" WARN —
+    * not being recomputable is this handle's contract). */
   final class Checkpoint private[Par] (val df: DataFrame,
                                        rdd: org.apache.spark.rdd.RDD[_])
       extends AutoCloseable {
-    def close(): Unit = rdd.unpersist(blocking = false)
+    def close(): Unit = org.apache.spark.sql.graft.RddBlocks.free(rdd)
   }
 
   /** Eagerly checkpoint `df` — each later pass plans over a bare RDD

@@ -77,16 +77,9 @@ object Analytics {
       val d0 = t(s, dir, "documents")
       val wt = graft.text.QualityClassifier.train(d0, "doc_id", "text",
         col("lang") === "en")
-      val src = s.readStream.schema(d0.schema)
-        .parquet(s"$dir/{documents.parquet}")
-      val out = graft.text.QualityClassifier.scoreStream(src, "doc_id",
-        "text", wt)
-      val qn = "stream_qc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_quality",
-        out.writeStream.format("memory").queryName(qn)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("doc_id")
+      StreamRun.gate("q_stream_quality", d0, "complete") { src =>
+        graft.text.QualityClassifier.scoreStream(src, "doc_id", "text", wt)
+      }.orderBy("doc_id")
     }),
 
     // ---- per-domain Platt calibration (Platt 1999) of the classifier
@@ -143,16 +136,10 @@ object Analytics {
         .trainWithStreamTwin(d0, "doc_id", "text", col("lang") === "en",
           carry = Seq("source"), labelAs = Some("y"))
       val fit = graft.text.Calibration.plattFit(twin, "source", "score", "y")
-      val src = s.readStream.schema(d0.schema)
-        .parquet(s"$dir/{documents.parquet}")
-      val out = graft.text.QualityClassifier.scoreStreamCalibrated(src,
-        "doc_id", "source", "text", wt, fit)
-      val qn = "stream_cal_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_calibrated",
-        out.writeStream.format("memory").queryName(qn)
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("doc_id")
+      StreamRun.gate("q_stream_calibrated", d0, "complete") { src =>
+        graft.text.QualityClassifier.scoreStreamCalibrated(src,
+          "doc_id", "source", "text", wt, fit)
+      }.orderBy("doc_id")
     }),
 
     // ---- DoReMi domain reweighting (Xie et al. 2023, arXiv:2305.10429):
@@ -375,21 +362,15 @@ object Analytics {
     // sink, complete mode so the bounded stream emits every window);
     // must hash-match the batch kernel's oracle exactly.
     "q_stream_hopping" -> ((s, dir) => {
-      val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: bare file fails basePath inference
-      val agg = src
-        .select(timestamp_micros(Q.tsUs(src)).as("__t"), col("event_type"),
-          fround(col("value"), 6).cast("decimal(38,6)").as("__v"))
-        .groupBy(window(col("__t"), "10 minutes", "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum("__v").cast("double").as("vsum"))
-        .select(unix_micros(col("window.start")).as("w_start"),
-          col("event_type"), col("n"), fround(col("vsum"), 4).as("vsum"))
-      val qn = "stream_hop_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_hopping", agg.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("w_start", "event_type")
+      StreamRun.gate("q_stream_hopping", t(s, dir, "events"), "complete") { src =>
+        src
+          .select(timestamp_micros(Q.tsUs(src)).as("__t"), col("event_type"),
+            fround(col("value"), 6).cast("decimal(38,6)").as("__v"))
+          .groupBy(window(col("__t"), "10 minutes", "5 minutes"), col("event_type"))
+          .agg(count(lit(1)).as("n"), sum("__v").cast("double").as("vsum"))
+          .select(unix_micros(col("window.start")).as("w_start"),
+            col("event_type"), col("n"), fround(col("vsum"), 4).as("vsum"))
+      }.orderBy("w_start", "event_type")
     }),
 
     // ---- rolling z-score anomaly detection (exact integer baseline) ----
@@ -407,17 +388,12 @@ object Analytics {
     // replay must hash-match the batch window kernel's oracle.
     "q_stream_anomaly" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: bare file fails basePath inference
-      val in = src.select(col("user_id").cast("string").as("name"),
-        tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.zscoreStream(in,
-        window = 20, threshold = 3.0)
-      val qn = "stream_zs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_anomaly", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_anomaly", e0, "append") { src =>
+        graft.streaming.StatefulOps.zscoreStream(
+          src.select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value")),
+          window = 20, threshold = 3.0)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           col("value"), col("zscore"))

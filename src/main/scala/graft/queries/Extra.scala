@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.{GapFill, SeqOps, StatOps}
@@ -22,6 +23,35 @@ object Extra {
     scala.collection.concurrent.TrieMap.empty[String, graft.similarity.Ivf.Index]
   private val pqCache =
     scala.collection.concurrent.TrieMap.empty[String, graft.similarity.Pq.Index]
+
+  /** The batch-built rollup `tier` of the raw events at `rawPath`, built
+    * once per (JVM, source, `name`) under a `name`-prefixed temp dir:
+    * rollups are maintained continuously (streaming.Watch.rollupStream);
+    * a gate query only reads them. `beforeNs` rolls up only the raw
+    * rows older than that horizon. */
+  private def rollupTier(s: SparkSession, rawPath: String,
+                         name: String, tier: String,
+                         beforeNs: Option[Long] = None): String =
+    rollupCache.getOrElseUpdate(s"$rawPath#$name", {
+      val raw = s.read.parquet(rawPath)
+      val d = java.nio.file.Files.createTempDirectory(name).toString + "/r"
+      graft.operators.Lake.rollup(beforeNs.fold(raw)(h => raw.filter(tsNs(raw) < h)),
+          col("user_id"), tsNs(raw), col("value"), tier)
+        .write.mode("overwrite").parquet(d)
+      d
+    })
+
+  /** Per-(user, `widthNs` bucket) min/max/sum/count of `raw`'s values —
+    * the aggregate shape the rollup routing rule answers from a tier;
+    * the bucket start comes out as `<alias>_us`. */
+  private def bucketStats(raw: DataFrame, widthNs: Long, alias: String): DataFrame =
+    raw
+      .groupBy(col("user_id"),
+        graft.time.TimeFns.roundTimeNs(tsNs(raw), widthNs).as(s"${alias}_ns"))
+      .agg(min("value").as("min_value"), max("value").as("max_value"),
+        r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
+      .select(col("user_id"), graft.time.TimeFns.nsToUs(col(s"${alias}_ns")).as(s"${alias}_us"),
+        col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
 
   val defs: Map[String, QueryFn] = Map(
     // ---- FILTER_CHANGED(retain(dur)) ----------------------------------
@@ -123,26 +153,10 @@ object Extra {
     // source values, where partial-sum reassociation cannot flip rounding.
     "q_rollup_routed" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
-      // rollups are maintained continuously (streaming.Watch.rollupStream);
-      // a query only reads them — so build once per (JVM, source dir)
-      val rollDir = rollupCache.getOrElseUpdate(rawPath, {
-        val raw = s.read.parquet(rawPath)
-        val d = java.nio.file.Files.createTempDirectory("graft_route").toString + "/r"
-        graft.operators.Lake.rollup(raw, col("user_id"), tsNs(raw),
-          col("value"), "HOUR")
-          .write.mode("overwrite").parquet(d)
-        d
-      })
+      val rollDir = rollupTier(s, rawPath, "graft_route", "HOUR")
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      val raw2 = s.read.parquet(rawPath)
-      raw2
-        .groupBy(col("user_id"),
-          graft.time.TimeFns.roundTimeNs(tsNs(raw2), graft.time.TimeFns.NsPerDay).as("day_ns"))
-        .agg(min("value").as("min_value"), max("value").as("max_value"),
-          r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
-        .select(col("user_id"), graft.time.TimeFns.nsToUs(col("day_ns")).as("day_us"),
-          col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
+      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 
@@ -151,27 +165,12 @@ object Extra {
     // ("raw ts in range" ⟺ "bucket start in range" when bounds align).
     "q_rollup_routed_range" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
-      val rollDir = rollupCache.getOrElseUpdate(rawPath, {
-        val raw = s.read.parquet(rawPath)
-        val d = java.nio.file.Files.createTempDirectory("graft_route").toString + "/r"
-        graft.operators.Lake.rollup(raw, col("user_id"), tsNs(raw),
-          col("value"), "HOUR")
-          .write.mode("overwrite").parquet(d)
-        d
-      })
+      val rollDir = rollupTier(s, rawPath, "graft_route", "HOUR")
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      val fromNs = DayFromUs * 1000L
-      val untilNs = DayUntilUs * 1000L
       val raw2 = s.read.parquet(rawPath)
-      raw2
-        .filter(tsRangeNs(raw2, fromNs, untilNs))
-        .groupBy(col("user_id"),
-          graft.time.TimeFns.roundTimeNs(tsNs(raw2), 6 * graft.time.TimeFns.NsPerHour).as("h6_ns"))
-        .agg(min("value").as("min_value"), max("value").as("max_value"),
-          r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
-        .select(col("user_id"), graft.time.TimeFns.nsToUs(col("h6_ns")).as("h6_us"),
-          col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
+      bucketStats(raw2.filter(tsRangeNs(raw2, DayFromUs * 1000L, DayUntilUs * 1000L)),
+          6 * graft.time.TimeFns.NsPerHour, "h6")
         .orderBy("user_id", "h6_us")
     }),
 
@@ -182,35 +181,13 @@ object Extra {
     // not 2880 (tier pick pinned in RollupRoutingSpec).
     "q_rollup_tiered" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
-      val hourDir = rollupCache.getOrElseUpdate(rawPath, {
-        val raw = s.read.parquet(rawPath)
-        val d = java.nio.file.Files.createTempDirectory("graft_route").toString + "/r"
-        graft.operators.Lake.rollup(raw, col("user_id"), tsNs(raw),
-          col("value"), "HOUR")
-          .write.mode("overwrite").parquet(d)
-        d
-      })
-      val minDir = rollupCache.getOrElseUpdate(rawPath + "#min", {
-        val raw = s.read.parquet(rawPath)
-        val d = java.nio.file.Files.createTempDirectory("graft_tmin").toString + "/r"
-        graft.operators.Lake.rollup(raw, col("user_id"), tsNs(raw),
-          col("value"), "MIN")
-          .write.mode("overwrite").parquet(d)
-        d
-      })
+      val hourDir = rollupTier(s, rawPath, "graft_route", "HOUR")
+      val minDir = rollupTier(s, rawPath, "graft_tmin", "MIN")
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         minDir, graft.time.TimeFns.NsPerMin, "user_id", "ts", "value"))
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         hourDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      val raw2 = s.read.parquet(rawPath)
-      raw2
-        .groupBy(col("user_id"),
-          graft.time.TimeFns.roundTimeNs(tsNs(raw2),
-            2 * graft.time.TimeFns.NsPerDay).as("d2_ns"))
-        .agg(min("value").as("min_value"), max("value").as("max_value"),
-          r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
-        .select(col("user_id"), graft.time.TimeFns.nsToUs(col("d2_ns")).as("d2_us"),
-          col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
+      bucketStats(s.read.parquet(rawPath), 2 * graft.time.TimeFns.NsPerDay, "d2")
         .orderBy("user_id", "d2_us")
     }),
 
@@ -223,25 +200,11 @@ object Extra {
     "q_rollup_fresh" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
       val horizonNs = 1705708800L * 1000000000L // 2024-01-20T00:00Z
-      val rollDir = rollupCache.getOrElseUpdate(rawPath + "#fresh", {
-        val raw = s.read.parquet(rawPath)
-        val d = java.nio.file.Files.createTempDirectory("graft_fresh").toString + "/r"
-        graft.operators.Lake.rollup(raw.filter(tsNs(raw) < horizonNs),
-          col("user_id"), tsNs(raw), col("value"), "HOUR")
-          .write.mode("overwrite").parquet(d)
-        d
-      })
+      val rollDir = rollupTier(s, rawPath, "graft_fresh", "HOUR", Some(horizonNs))
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
       graft.plans.RollupRouting.setHorizon(rollDir, horizonNs)
-      val raw2 = s.read.parquet(rawPath)
-      raw2
-        .groupBy(col("user_id"),
-          graft.time.TimeFns.roundTimeNs(tsNs(raw2), graft.time.TimeFns.NsPerDay).as("day_ns"))
-        .agg(min("value").as("min_value"), max("value").as("max_value"),
-          r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
-        .select(col("user_id"), graft.time.TimeFns.nsToUs(col("day_ns")).as("day_us"),
-          col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
+      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 
@@ -258,25 +221,15 @@ object Extra {
       val rawPath = s"$dir/events.parquet"
       val rollDir = rollupCache.getOrElseUpdate(rawPath + "#stream", {
         val d = java.nio.file.Files.createTempDirectory("graft_rstream").toString + "/r"
-        // ephemeral gate checkpoint on the fast scratch root (StreamRun)
-        val ck = StreamRun.freshCk()
-        val raw = s.read.parquet(rawPath)
-        val t0 = System.nanoTime()
-        StreamRun.await("q_rollup_stream",
-          graft.streaming.Watch.maintainRollup(s, rawPath, raw.schema,
+        val schema = s.read.parquet(rawPath).schema
+        StreamRun.run("q_rollup_stream")(ck =>
+          graft.streaming.Watch.maintainRollup(s, rawPath, schema,
             "user_id", "ts", "value", "1 hour", "0 seconds",
-            graft.time.TimeFns.NsPerHour, d, ck), t0)
+            graft.time.TimeFns.NsPerHour, d, ck))
         d
       })
       graft.plans.RollupRouting.load(s, rollDir) // registration from the artifact
-      val raw2 = s.read.parquet(rawPath)
-      raw2
-        .groupBy(col("user_id"),
-          graft.time.TimeFns.roundTimeNs(tsNs(raw2), graft.time.TimeFns.NsPerDay).as("day_ns"))
-        .agg(min("value").as("min_value"), max("value").as("max_value"),
-          r2(sum(col("value"))).as("sum_value"), count(col("value")).as("cnt"))
-        .select(col("user_id"), graft.time.TimeFns.nsToUs(col("day_ns")).as("day_us"),
-          col("min_value"), col("max_value"), col("sum_value"), col("cnt"))
+      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 

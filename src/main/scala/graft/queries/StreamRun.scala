@@ -1,11 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.util.control.NonFatal
 
-/** Shared runner for the bounded streaming gate queries (AvailableNow →
-  * memory sink), recording each run's fixed-vs-kernel time split.
+/** The one runner for bounded gate streams: [[gate]] tails a batch
+  * table's file as a stream, runs the caller's kernel into a memory sink
+  * under AvailableNow and hands back the sink's rows; [[run]] owns the
+  * ephemeral checkpoint of any bounded stream and records its
+  * fixed-vs-kernel time split.
   *
   * Every `q_stream_*` row carries ~1–2 s of Structured-Streaming fixed
   * cost (checkpoint setup, micro-batch loop scheduling, memory-sink
@@ -40,9 +43,6 @@ object StreamRun {
       else System.getProperty("java.io.tmpdir") + "/graft_ck"
     }
 
-  private[graft] def freshCk(): String =
-    s"$ckRoot/${java.util.UUID.randomUUID().toString}"
-
   private def rmTree(path: String): Unit = {
     def rm(f: java.io.File): Unit = {
       val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
@@ -50,26 +50,50 @@ object StreamRun {
     try rm(new java.io.File(path)) catch { case NonFatal(_) => }
   }
 
-  /** Start the writer, wait for the bounded run to finish, record the
-    * split. The memory-sink table the caller reads afterwards is
-    * unaffected — this only wraps start/awaitTermination, pointing the
-    * (ephemeral) checkpoint at [[ckRoot]] and deleting it after, also
-    * when the stream fails. */
-  def run(name: String, w: DataStreamWriter[Row]): Unit = {
-    val ck = freshCk()
+  /** Run a bounded gate stream over `batch`'s one input file: `body`
+    * turns the tailed source (same schema as `batch`) into the sink
+    * frame, which runs to completion in `mode` under AvailableNow into a
+    * memory sink. Returns the sink's rows; the frame keeps its plan over
+    * the sink, so callers project and order it as usual. The sink's temp
+    * view is dropped and the checkpoint deleted on every exit, also when
+    * `body` or the stream throws. */
+  def gate(name: String, batch: DataFrame, mode: String)(
+      body: DataFrame => DataFrame): DataFrame = {
+    val s = batch.sparkSession
+    val file = batch.inputFiles match {
+      case Array(f) => f
+      case fs => throw new IllegalArgumentException(
+        s"$name: a gate stream tails one file, the batch frame reads ${fs.length}")
+    }
+    val sink = "gate_" + java.util.UUID.randomUUID().toString.replace("-", "")
     try {
-      val t0 = System.nanoTime()
-      val q = w.option("checkpointLocation", ck).start()
-      q.awaitTermination()
-      record(name, q, t0)
-    } finally rmTree(ck)
+      val out = body(graft.streaming.Watch.tail(s, file, batch.schema))
+      run(name)(ck => out.writeStream.format("memory").queryName(sink)
+        .outputMode(mode)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start())
+      s.table(sink)
+    } finally s.catalog.dropTempView(sink)
   }
 
-  /** Split-record an already-started query (streams launched by library
-    * code, e.g. Watch.maintainRollup): call with the start() timestamp. */
-  def await(name: String, q: StreamingQuery, startNanos: Long): Unit = {
-    q.awaitTermination()
-    record(name, q, startNanos)
+  /** Start a bounded stream on a fresh ephemeral checkpoint under
+    * [[ckRoot]] (`start` receives its path), wait for it to finish and
+    * record its split under `name`. The checkpoint is deleted after,
+    * also when the stream fails or the wait is interrupted (a stream
+    * still running then is stopped first). */
+  def run(name: String)(start: String => StreamingQuery): Unit = {
+    val ck = s"$ckRoot/${java.util.UUID.randomUUID()}"
+    var q: StreamingQuery = null
+    try {
+      val t0 = System.nanoTime()
+      q = start(ck)
+      q.awaitTermination()
+      record(name, q, t0)
+    } finally {
+      if (q != null && q.isActive) q.stop()
+      rmTree(ck)
+    }
   }
 
   private def record(name: String, q: StreamingQuery, t0: Long): Unit = {

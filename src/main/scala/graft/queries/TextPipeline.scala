@@ -237,18 +237,12 @@ object TextPipeline {
     // must hash-match the identical DuckDB oracle as the batch twin
     "q_stream_neardup" -> ((s, dir) => {
       val d0 = t(s, dir, "documents")
-      val src = s.readStream.schema(d0.schema)
-        .parquet(s"$dir/{documents.parquet}")
-      val out = Dedup.minhashLshPairsAgainst(
-        src.filter(col("doc_id") % 10 === 9),
-        d0.filter(col("doc_id") % 10 < 9),
-        numHashes = 32, bands = 8, verifyThreshold = 0.3)
-      val qn = "stream_nd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_neardup", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn)
-        .select(col("in_id"), col("corpus_id"), fround(col("jaccard"), 4).as("jaccard"))
+      StreamRun.gate("q_stream_neardup", d0, "append") { src =>
+        Dedup.minhashLshPairsAgainst(
+          src.filter(col("doc_id") % 10 === 9),
+          d0.filter(col("doc_id") % 10 < 9),
+          numHashes = 32, bands = 8, verifyThreshold = 0.3)
+      }.select(col("in_id"), col("corpus_id"), fround(col("jaccard"), 4).as("jaccard"))
         .orderBy("in_id", "corpus_id")
     }),
 
@@ -544,17 +538,13 @@ object TextPipeline {
     // result exactly once the source drains.
     "q_stream_decontaminate" -> ((s, dir) => {
       val d0 = t(s, dir, "documents")
-      val src = s.readStream.schema(d0.schema)
-        .parquet(s"$dir/{documents.parquet}") // {}-glob: a bare file path fails basePath inference
-      val out = graft.text.Curation.decontaminate(
-        src.filter(col("doc_id") % 10 < 9),
-        d0.filter(col("doc_id") % 10 === 9),
-        "doc_id", "text", n = 4)
-      val qn = "stream_dc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_decontaminate", out.writeStream.format("memory").queryName(qn)
-        .outputMode("complete") // running per-doc counts; no watermark needed
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("doc_id")
+      // complete mode: running per-doc counts; no watermark needed
+      StreamRun.gate("q_stream_decontaminate", d0, "complete") { src =>
+        graft.text.Curation.decontaminate(
+          src.filter(col("doc_id") % 10 < 9),
+          d0.filter(col("doc_id") % 10 === 9),
+          "doc_id", "text", n = 4)
+      }.orderBy("doc_id")
     }),
 
     // ---- STREAMING per-source admission quota --------------------------
@@ -563,16 +553,9 @@ object TextPipeline {
     // admission is ascending doc_id, the same relation the batch
     // row_number cap yields.
     "q_stream_source_cap" -> ((s, dir) => {
-      val d0 = t(s, dir, "documents")
-      val src = s.readStream.schema(d0.schema)
-        .parquet(s"$dir/{documents.parquet}") // {}-glob: a bare file path fails basePath inference
-      val out = graft.streaming.CuratedStream.quotaAdmit(
-        src, "source", "doc_id", k = 10)
-      val qn = "stream_sc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_source_cap", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("source", "doc_id")
+      StreamRun.gate("q_stream_source_cap", t(s, dir, "documents"), "append") { src =>
+        graft.streaming.CuratedStream.quotaAdmit(src, "source", "doc_id", k = 10)
+      }.orderBy("source", "doc_id")
     }),
 
     // ---- curation: decontamination, beyond-broadcast eval plan --------

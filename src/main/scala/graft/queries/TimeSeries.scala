@@ -240,17 +240,12 @@ object TimeSeries {
     // that StreamingSpec pins into the oracle gate itself.
     "q_stream_lowpass" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.lowpassStream(in, alpha = 0.3)
-      val qn = "stream_lp_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_lowpass", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_lowpass", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value"))
+        graft.streaming.StatefulOps.lowpassStream(in, alpha = 0.3)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           r4(col("value")).as("lowpass"))
@@ -262,17 +257,12 @@ object TimeSeries {
     // must equal the batch lag() oracle exactly
     "q_stream_changed" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.filterChangedStream(in)
-      val qn = "stream_fc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_changed", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_changed", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value"))
+        graft.streaming.StatefulOps.filterChangedStream(in)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           col("value"))
@@ -284,18 +274,13 @@ object TimeSeries {
     // the batch kernel's recursive-CTE oracle
     "q_stream_kalman" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.kalmanStream(in,
-        initVar = 1d, procVar = 0.01, obsVar = 4d)
-      val qn = "stream_ka_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_kalman", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_kalman", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value"))
+        graft.streaming.StatefulOps.kalmanStream(in,
+          initVar = 1d, procVar = 0.01, obsVar = 4d)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           r4(col("value")).as("kalman"))
@@ -307,17 +292,12 @@ object TimeSeries {
     // null exactly like the batch kernel / fm_monad.go:2023-2073
     "q_stream_movavg" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.movavgStream(in, window = 5)
-      val qn = "stream_ma_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_movavg", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_movavg", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value"))
+        graft.streaming.StatefulOps.movavgStream(in, window = 5)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           r4(col("value")).as("movavg5"))
@@ -329,17 +309,12 @@ object TimeSeries {
     // makes the stream bit-identical to the batch DECIMAL window sum
     "q_stream_avg" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), dec2(col("value")).cast("double").as("value"))
-      val out = graft.streaming.StatefulOps.avgStream(in, scaleDigits = 2)
-      val qn = "stream_av_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_avg", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_avg", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), dec2(col("value")).cast("double").as("value"))
+        graft.streaming.StatefulOps.avgStream(in, scaleDigits = 2)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           // fround, not round: a running mean of 2-decimal values lands
@@ -354,19 +329,14 @@ object TimeSeries {
     // mirrors the batch Column kernel operation-for-operation
     "q_stream_distance" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 10)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"),
-          ((col("value") - 250d) / 10d).as("lat"),
-          (pmod(col("event_id"), lit(360)).cast("double") - 180d).as("lon"))
-      val out = graft.streaming.StatefulOps.distanceStream(in)
-      val qn = "stream_di_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_distance", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_distance", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 10)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"),
+            ((col("value") - 250d) / 10d).as("lat"),
+            (pmod(col("event_id"), lit(360)).cast("double") - 180d).as("lon"))
+        graft.streaming.StatefulOps.distanceStream(in)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           round(col("meters") / 1000d, 0).as("dist_km"))
@@ -377,17 +347,12 @@ object TimeSeries {
     // crosses micro-batch boundaries; first record per tag emits null
     "q_stream_diff" -> ((s, dir) => {
       val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val in = src.filter(col("user_id") < 20)
-        .select(col("user_id").cast("string").as("name"),
-          tsNs(src).as("time"), col("value"))
-      val out = graft.streaming.StatefulOps.diffStream(in)
-      val qn = "stream_df_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_diff", out.writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).select(
+      StreamRun.gate("q_stream_diff", e0, "append") { src =>
+        val in = src.filter(col("user_id") < 20)
+          .select(col("user_id").cast("string").as("name"),
+            tsNs(src).as("time"), col("value"))
+        graft.streaming.StatefulOps.diffStream(in)
+      }.select(
           col("name").cast(e0.schema("user_id").dataType).as("user_id"),
           unix_micros(col("time")).as("t_us"),
           r4(col("value")).as("diff"))
@@ -395,25 +360,19 @@ object TimeSeries {
     }),
 
     "q_stream_sessionize" -> ((s, dir) => {
-      val e0 = t(s, dir, "events")
-      val src = s.readStream.schema(e0.schema)
-        .parquet(s"$dir/{events.parquet}") // {}-glob: a bare file path fails basePath inference
-      val e = src.filter(col("user_id") < 50)
-        .select(col("user_id"), tsUs(src).as("t_us"), dec2(col("value")).as("v"))
-        .withColumn("ts2", timestamp_micros(col("t_us")))
       // complete mode: every session is in the final table — append mode
       // would hold back sessions the closing watermark never passes
-      val sessions = e.groupBy(col("user_id"), session_window(col("ts2"), "4 hours"))
-        .agg(min("t_us").as("session_start_us"), max("t_us").as("session_end_us"),
-          count(lit(1)).as("n_events"),
-          r2(sum(col("v")).cast("double")).as("sum_value"))
-        .select(col("user_id"), col("session_start_us"), col("session_end_us"),
-          col("n_events"), col("sum_value"))
-      val qn = "stream_sess_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      StreamRun.run("q_stream_sessionize", sessions.writeStream.format("memory").queryName(qn)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      s.table(qn).orderBy("user_id", "session_start_us")
+      StreamRun.gate("q_stream_sessionize", t(s, dir, "events"), "complete") { src =>
+        val e = src.filter(col("user_id") < 50)
+          .select(col("user_id"), tsUs(src).as("t_us"), dec2(col("value")).as("v"))
+          .withColumn("ts2", timestamp_micros(col("t_us")))
+        e.groupBy(col("user_id"), session_window(col("ts2"), "4 hours"))
+          .agg(min("t_us").as("session_start_us"), max("t_us").as("session_end_us"),
+            count(lit(1)).as("n_events"),
+            r2(sum(col("v")).cast("double")).as("sum_value"))
+          .select(col("user_id"), col("session_start_us"), col("session_end_us"),
+            col("n_events"), col("sum_value"))
+      }.orderBy("user_id", "session_start_us")
     }),
 
     // ---- last value per tag (lake current/last endpoint) --------------

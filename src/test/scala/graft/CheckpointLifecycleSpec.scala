@@ -105,4 +105,40 @@ class CheckpointLifecycleSpec extends SparkSpec {
     // the rolling rounds reach the same labels as the driver union-find
     assert(cc.orderBy("v").collect().toSeq == driver)
   }
+
+  test("close frees the checkpoint RDD without the lineage WARN") {
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("checkpointCapture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(capture)
+    def warned = lines.toArray.exists(_.toString.contains("cannot be recomputed"))
+    try {
+      // control: RDD.unpersist on a locally-checkpointed RDD logs the line
+      val direct = spark.sparkContext.parallelize(1 to 10).localCheckpoint()
+      direct.count()
+      direct.unpersist()
+      assert(warned, "the capturing appender saw no unpersist WARN")
+      lines.clear()
+
+      val before = persistedIds()
+      val cp = graft.core.Par.materialize(spark.range(100).toDF())
+      val ids = persistedIds().diff(before)
+      assert(ids.size == 1, ids)
+      cp.close()
+      assert(persistedIds().intersect(ids).isEmpty)
+      assert(!warned, lines)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
 }
