@@ -38,6 +38,27 @@ object Bench {
     pristine && sfMatches && fasterOrClose && failed.isEmpty
   }
 
+  /** The compact line's `queries` object, most expensive first, sized to
+    * `budget` chars: 3-decimal seconds, else 2-decimal, else the cheapest
+    * queries dropped. Returns the object and the number dropped, which
+    * the line carries as its own top-level `qdrop` key (BenchGateSpec). */
+  private[graft] def compactQueries(byCost: Seq[(String, Double)],
+                                    budget: Int): (String, Int) = {
+    def line(scale: Int, entries: Seq[(String, Double)]): String =
+      entries.map { case (k, v) =>
+        val s = BigDecimal(v).setScale(scale,
+          BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
+        s"\"" + k.stripPrefix("q_") + "\":" + s
+      }.mkString("{", ",", "}")
+    val qs3 = line(3, byCost)
+    if (qs3.length <= budget) (qs3, 0)
+    else {
+      var keep = byCost.length
+      while (keep > 1 && line(2, byCost.take(keep)).length > budget) keep -= 1
+      (line(2, byCost.take(keep)), byCost.length - keep)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -191,7 +212,7 @@ object Bench {
           case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
             if w.partitionSpec.isEmpty => w
         }.size
-      } catch { case _: Throwable => }
+      } catch { case NonFatal(_) => }
       cohortTick()
       if (runs.contains(None)) { failed += name; None }
       else Some(name -> runs.flatten.min)
@@ -242,7 +263,7 @@ object Bench {
           val sec = if (sec0 > p) {
             val third = try time1 {
               SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-            } catch { case _: Throwable => sec0 }
+            } catch { case NonFatal(_) => sec0 }
             val best = math.min(sec0, third)
             System.err.println(f"[bench] retry: $name 3rd run $third%.3f s (was $sec0%.3f, keeping $best%.3f)")
             retried(name) = (sec0, third)
@@ -253,7 +274,7 @@ object Bench {
             System.err.println(f"[bench] WARNING: $name moved ${sec / p}%.2fx vs previous run ($p%.3f -> $sec%.3f s)")
         }
       }
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     val resultsHealed = results.map { case (k, v) => k -> healed.getOrElse(k, v) }
 
     // post-sweep sentinel: same workload, same median-of-3 — drift >1.5×
@@ -273,16 +294,9 @@ object Bench {
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
     // keys lose their uniform "q_" prefix in the compact line only (full
     // names stay in bench_full.json) — 70+ queries × 2 chars matters here.
-    // The line must fit the driver's ~2000-char stdout tail WITH sbt's
-    // trailing "[success]" line, so it self-sizes: 3-decimal seconds,
-    // then 2-decimal, then drop the cheapest queries (most-expensive
-    // first is what regression analysis needs) with a "qdrop" count.
-    def qsLine(scale: Int, entries: Seq[(String, Double)]): String =
-      entries.map { case (k, v) =>
-        val s = BigDecimal(v).setScale(scale,
-          BigDecimal.RoundingMode.HALF_UP).underlying.stripTrailingZeros.toPlainString
-        s"\"" + k.stripPrefix("q_") + "\":" + s
-      }.mkString("{", ",", "}")
+    // The line must fit the ~2000-char stdout tail a record keeps, so its
+    // queries object self-sizes (compactQueries; most-expensive first is
+    // what regression analysis needs) and "qdrop" counts what it left out.
     val byCost = resultsHealed.toSeq.sortBy(-_._2)
     val qsFull = resultsHealed.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -322,22 +336,12 @@ object Bench {
     // r8/r9) overflowed once the retries map appeared and cut the line's
     // head off mid-key → "parsed": null in two straight round records.
     val fixedFrame =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"qdrop":${byCost.length},"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
     // 60-char slack only: showSuccess=false + raw forked output mean
     // nothing follows this line in stdout anymore (was 140 for sbt's
     // trailing "[success] Total time …" line)
     val qsBudget = math.max(250, 2000 - 60 - fixedFrame.length)
-    val qs3 = qsLine(3, byCost)
-    val qs = if (qs3.length <= qsBudget) qs3 else {
-      val qs2 = qsLine(2, byCost)
-      if (qs2.length <= qsBudget) qs2 else {
-        var keep = byCost.length
-        while (keep > 1 && qsLine(2, byCost.take(keep)).length > qsBudget - 12)
-          keep -= 1
-        qsLine(2, byCost.take(keep)).dropRight(1) +
-          s",\"qdrop\":${byCost.length - keep}}"
-      }
-    }
+    val (qs, qdrop) = compactQueries(byCost, qsBudget)
     val jvmCohorts = cohorts.mkString("[", ",", "]")
     // fixed-vs-kernel split of the streaming rows (StreamRun records the
     // LAST run of each, i.e. the retry if one happened): lets a >1.5×
@@ -352,7 +356,7 @@ object Bench {
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":$audit,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"failed":$failedJson,"sf":"$sfDir"}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     // The PROTECTED canonical record: bench_full.json is the scratch
     // every run (driver record runs, dev smokes) overwrites; the quiet
     // pristine record lives under BENCH_CANONICAL.json, which only a
@@ -381,7 +385,7 @@ object Bench {
         System.err.println("[bench] BENCH_CANONICAL.json updated (pristine window)")
       } else
         System.err.println(f"[bench] BENCH_CANONICAL.json left untouched (drift $drift%.3f, sfMatch=$sfMatches, total ${d3(total)} vs canonical ${prevTotal.fold("-")(d3)}; GRAFT_BENCH_FORCE=1 to override)")
-    } catch { case _: Throwable => }
+    } catch { case NonFatal(_) => }
     // NOT printing fullLine to stdout: a partial copy of it surviving in
     // the tail buffer could confuse a brace-matching extractor. The compact
     // line below is the single parseable line in the tail — printed as the
@@ -389,12 +393,14 @@ object Bench {
     // after it in a merged stdout+stderr capture (r19: every BENCH_rNN
     // record through r18 has "parsed": null; with run/fork raw output and
     // showSuccess=false this line now ends the process output).
-    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
+    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"qdrop":$qdrop,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
     try {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(scratch)).deleteRecursively()
-    } catch { case _: Throwable => }
-    spark.stop()
+    } catch { case NonFatal(_) => }
+    // a failing stop must not cost the run its one parseable line
+    try spark.stop()
+    catch { case NonFatal(e) => System.err.println(s"[bench] spark.stop failed: $e") }
     println(compactLine)
     System.out.flush()
   }

@@ -43,7 +43,7 @@ object StreamRun {
       else System.getProperty("java.io.tmpdir") + "/graft_ck"
     }
 
-  private def rmTree(path: String): Unit = {
+  private[graft] def rmTree(path: String): Unit = {
     def rm(f: java.io.File): Unit = {
       val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
     }

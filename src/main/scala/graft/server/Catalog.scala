@@ -2,6 +2,7 @@ package graft.server
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The machbase server catalog surface behind `SHOW …` and the `M$`/`V$`
@@ -271,7 +272,7 @@ object Catalog {
       TagTables.ensure(spark, name)
       val dataSize = try
         spark.table(name).queryExecution.optimizedPlan.stats.sizeInBytes.toLong
-      catch { case _: Throwable => 0L }
+      catch { case NonFatal(_) => 0L }
       val nu = name.toUpperCase
       if (typ == "Tag") {
         val rollups = if (hasRollup) Seq(s"_${nu}_ROLLUP_HOUR" -> 0L,

@@ -12,12 +12,31 @@ import org.apache.spark.sql.SparkSession
   * in-JVM server double exposes the `/db` front doors so the surface is
   * testable end-to-end. On a deployed cluster this loopback check is the
   * seam where a real egress policy would plug in.
+  *
+  * Concurrency: the server runs its exchanges on a bounded pool of N
+  * daemon threads, N = the serving session's
+  * `sparkContext.defaultParallelism`, over a queue of 4·N exchanges.
+  * When the pool and the queue are full, the accepting dispatcher thread
+  * runs the exchange itself (caller-runs), so an overload slows
+  * accepting down and never drops a connection. Each exchange runs in
+  * its own Spark job group (request id, "<method> <path>"), cleared when
+  * it ends, so no pooled thread carries one request's group into the
+  * next. Shared state on the request path is safe under this: the TQL
+  * compiler keeps its per-script state in thread-locals, and
+  * [[TagTables]] serializes each table's writers under one lock while
+  * readers plan over snapshots. A `/db/tql` script whose `HTTP()` source
+  * calls back into this server is served by a second pool thread; only
+  * N such nested calls in flight at once can exhaust the pool and wait
+  * out the loopback client's 30 s socket timeout.
   */
 object HttpLoop {
   import com.sun.net.httpserver.{HttpExchange, HttpServer}
+  import java.util.concurrent.{ArrayBlockingQueue, ThreadPoolExecutor, TimeUnit}
+  import java.util.concurrent.atomic.AtomicLong
 
   @volatile private var server: HttpServer = null
   @volatile private var session: SparkSession = null
+  private val requestIds = new AtomicLong()
 
   /** Extra spec-installed handlers:
     * path → (method, query, headers, body) → (status, contentType, payload). */
@@ -50,6 +69,8 @@ object HttpLoop {
     if (server != null) return port
     val srv = HttpServer.create(new java.net.InetSocketAddress(
       java.net.InetAddress.getLoopbackAddress, 0), 0)
+    val n = spark.sparkContext.defaultParallelism
+    srv.setExecutor(newPool(n, 4 * n))
     srv.createContext("/db/query", (ex: HttpExchange) => respond(ex) {
       // full request decode per the reference handleQuery
       // (http_query.go:25-63): GET reads query params; POST reads a JSON
@@ -258,17 +279,41 @@ object HttpLoop {
 
   def port: Int = server.getAddress.getPort
 
+  /** The running server's request pool (a [[newPool]]). */
+  private[graft] def pool: ThreadPoolExecutor =
+    server.getExecutor.asInstanceOf[ThreadPoolExecutor]
+
+  /** The request pool: `threads` daemon workers over a queue of `queued`
+    * exchanges; a full pool and queue hand the exchange back to the
+    * submitting thread (caller-runs), so nothing is rejected. */
+  private[graft] def newPool(threads: Int, queued: Int): ThreadPoolExecutor = {
+    val ids = new AtomicLong()
+    new ThreadPoolExecutor(threads, threads, 0L, TimeUnit.MILLISECONDS,
+      new ArrayBlockingQueue[Runnable](queued),
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      },
+      new ThreadPoolExecutor.CallerRunsPolicy)
+  }
+
   private def respond(ex: HttpExchange)(
       fn: => (Int, String, Array[Byte])): Unit = {
-    val (code, ctype, payload) = try fn catch {
-      case e: Exception =>
-        (500, "text/plain", String.valueOf(e.getMessage).getBytes("UTF-8"))
-    }
+    val sc = session.sparkContext
+    sc.setJobGroup(s"http-${requestIds.incrementAndGet()}",
+      s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}", interruptOnCancel = false)
     try {
-      ex.getResponseHeaders.set("Content-Type", ctype)
-      ex.sendResponseHeaders(code, if (payload.isEmpty) -1 else payload.length)
-      if (payload.nonEmpty) ex.getResponseBody.write(payload)
-    } finally ex.close()
+      val (code, ctype, payload) = try fn catch {
+        case e: Exception =>
+          (500, "text/plain", String.valueOf(e.getMessage).getBytes("UTF-8"))
+      }
+      try {
+        ex.getResponseHeaders.set("Content-Type", ctype)
+        ex.sendResponseHeaders(code, if (payload.isEmpty) -1 else payload.length)
+        if (payload.nonEmpty) ex.getResponseBody.write(payload)
+      } finally ex.close()
+    } finally sc.clearJobGroup()
   }
 
   /** Query params with repeats kept (the lake door takes multi-values). */

@@ -2,6 +2,7 @@ package graft.server
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -15,6 +16,13 @@ import org.apache.spark.sql.types._
   * This is the interactive DML surface (one `SQL('insert …', ?…)` sink
   * statement per record, presentation-sized); the bulk ingest path stays
   * `sinks.TableSinks` writing parquet.
+  *
+  * Concurrency: every mutation of a table (its buffer, base segments,
+  * metadata rows, definition) and the view refresh that follows it run
+  * under that table's writer lock ([[writing]]), so concurrent writers
+  * never lose rows and a late refresh never registers a stale view.
+  * Readers take no lock: a refresh copies the buffer into the view's
+  * `LocalRelation`, so a query plans over a snapshot.
   */
 object TagTables {
   private def f(name: String, dt: DataType, mach: String): StructField =
@@ -109,6 +117,13 @@ object TagTables {
     Map("log_data" -> "Log", "tag_data" -> "Tag", "tag_simple" -> "Tag")
 
   private val rows = TrieMap.empty[String, ArrayBuffer[Row]]
+  private val writeLocks = TrieMap.empty[String, AnyRef]
+
+  /** Run `body` under `table`'s writer lock (one reentrant monitor per
+    * lower-cased table name). */
+  private def writing[A](table: String)(body: => A): A =
+    writeLocks.getOrElseUpdate(table.toLowerCase, new AnyRef).synchronized(body)
+
   /** Distributed base segments per table: parquet directories unioned
     * under the in-memory buffer at view refresh — the landing zone for
     * bulk restores too big to ride the driver (Backup.restore above its
@@ -128,7 +143,9 @@ object TagTables {
   private val dynamicDescs = TrieMap.empty[String, Seq[ColDesc]]
   /** dynamic table bookkeeping for the catalog surface (SHOW …):
     * creation order fixes table IDs, `with rollup` fixes shadow tables. */
-  private val dynamicOrder = ArrayBuffer.empty[String]
+  @volatile private var dynamicOrder = Vector.empty[String]
+  private def reorder(f: Vector[String] => Vector[String]): Unit =
+    synchronized { dynamicOrder = f(dynamicOrder) }
   private val dynamicTypes = TrieMap.empty[String, String] // Tag | Log
   private val rollupEnabled = TrieMap.empty[String, Boolean]
   /** row count at the last `EXEC table_flush(t)`. V$*_STAT value
@@ -171,14 +188,14 @@ object TagTables {
     * first (static IDs), then dynamic in creation order. */
   def allVisibleTables: Seq[(String, String, Boolean)] =
     tableTypes.toSeq.sortBy(_._1).map { case (t, typ) => (t, typ, false) } ++
-      dynamicOrder.toSeq.map(t =>
+      dynamicOrder.map(t =>
         (t, dynamicTypes.getOrElse(t, "Tag"), rollupEnabled.getOrElse(t, false)))
 
   def allTagTables: Seq[String] =
     allVisibleTables.collect { case (t, "Tag", _) => t }
 
   def dynamicTagTables: Seq[String] =
-    dynamicOrder.toSeq.filter(t => dynamicTypes.getOrElse(t, "Tag") == "Tag")
+    dynamicOrder.filter(t => dynamicTypes.getOrElse(t, "Tag") == "Tag")
 
   def hasRollup(table: String): Boolean =
     rollupEnabled.getOrElse(table.toLowerCase, false)
@@ -226,25 +243,24 @@ object TagTables {
   /** test seam: forget all dynamic tables and flush marks (a fresh
     * engine), keeping the fixture tables. */
   def resetDynamicForTest(spark: SparkSession): Unit = {
-    dynamicOrder.toSeq.foreach(t => dropTable(spark, t))
+    dynamicOrder.foreach(t => dropTable(spark, t))
     flushMark.clear()
   }
 
   /** DROP [TAG|LOG] TABLE t [CASCADE] — dynamic tables only. */
-  def dropTable(spark: SparkSession, table: String): Unit = {
+  def dropTable(spark: SparkSession, table: String): Unit = writing(table) {
     val t = table.toLowerCase
     dynamicSchemas.remove(t); dynamicDescs.remove(t)
     dynamicTypes.remove(t); rollupEnabled.remove(t); flushMark.remove(t)
-    val i = dynamicOrder.indexOf(t)
-    if (i >= 0) dynamicOrder.remove(i)
+    reorder(_.filterNot(_ == t))
     rows.remove(t)
     dropBase(t)
-    try spark.catalog.dropTempView(t) catch { case _: Throwable => }
-    try spark.catalog.dropTempView(arrivalViewName(t)) catch { case _: Throwable => }
+    try spark.catalog.dropTempView(t) catch { case NonFatal(_) => }
+    try spark.catalog.dropTempView(arrivalViewName(t)) catch { case NonFatal(_) => }
     dynamicMetaDescs.remove(t)
     metaRows.remove(t)
     // declared-metadata AND derived dictionaries both drop with the owner
-    try spark.catalog.dropTempView(metaViewName(t)) catch { case _: Throwable => }
+    try spark.catalog.dropTempView(metaViewName(t)) catch { case NonFatal(_) => }
   }
 
   private def schemaFor(table: String): StructType = table.toLowerCase match {
@@ -306,7 +322,7 @@ object TagTables {
 
   private def createParsed(spark: SparkSession, kind: String, name: String,
                            body: String, metaBody: Option[String],
-                           options: String): Unit = {
+                           options: String): Unit = writing(name) {
         val kindLower = kind.toLowerCase
         val cols = body.split(",").map(_.trim).filter(_.nonEmpty).map { defn =>
           val parts = defn.split("\\s+")
@@ -342,7 +358,7 @@ object TagTables {
         })
         rollupEnabled.put(t,
           Option(options).exists(_.toLowerCase.contains("rollup")))
-        if (!dynamicOrder.contains(t)) dynamicOrder += t
+        reorder(o => if (o.contains(t)) o else o :+ t)
         rows.put(t, ArrayBuffer.empty[Row])
         // METADATA(...) columns live in the _T_META side table keyed by
         // tag name with a 1-based _ID in insert order
@@ -394,7 +410,7 @@ object TagTables {
     * row; _ID is assigned in insert order starting at 1
     * (machsvr_test.go testInsertMeta: _id "1"/"2"). */
   def insertMeta(spark: SparkSession, table: String, columns: Seq[String],
-                 values: Seq[Any]): Unit = {
+                 values: Seq[Any]): Unit = writing(table) {
     val t = table.toLowerCase
     val descs = dynamicMetaDescs.getOrElse(t,
       throw new IllegalArgumentException(s"table '$table' has no metadata columns"))
@@ -458,7 +474,8 @@ object TagTables {
     * from `setCols` when given — the `… UPDATE SET a=1` form — else all
     * inserted columns), append otherwise. Returns true when it updated. */
   def upsert(spark: SparkSession, table: String, columns: Seq[String],
-             values: Seq[Any], setCols: Option[Seq[(String, Any)]] = None): Boolean = {
+             values: Seq[Any],
+             setCols: Option[Seq[(String, Any)]] = None): Boolean = writing(table) {
     val t = table.toLowerCase
     ensure(spark, t)
     val buf = rows.getOrElseUpdate(t, ArrayBuffer.empty[Row])
@@ -486,7 +503,8 @@ object TagTables {
   /** UPDATE <t> SET … WHERE <pk> = v for keyed classes. The engine only
     * allows addressing by the primary key. Returns rows updated (0/1). */
   def updateByKey(spark: SparkSession, table: String,
-                  sets: Seq[(String, Any)], whereCol: String, key: Any): Long = {
+                  sets: Seq[(String, Any)], whereCol: String,
+                  key: Any): Long = writing(table) {
     val t = table.toLowerCase
     val pk = primaryKeyOf(t).getOrElse(
       throw new IllegalArgumentException(s"table '$t' has no primary key"))
@@ -571,9 +589,11 @@ object TagTables {
   /** Register the table as a temp view if this session hasn't yet. */
   def ensure(spark: SparkSession, table: String): Unit = {
     val t = table.toLowerCase
-    if (!spark.catalog.tableExists(t)) {
-      rows.putIfAbsent(t, ArrayBuffer.empty[Row])
-      refresh(spark, t)
+    if (!spark.catalog.tableExists(t)) writing(t) {
+      if (!spark.catalog.tableExists(t)) {
+        rows.putIfAbsent(t, ArrayBuffer.empty[Row])
+        refresh(spark, t)
+      }
     }
   }
 
@@ -638,7 +658,7 @@ object TagTables {
   /** Column-name-addressed insert; absent columns null. Values must
     * already be JVM types matching the schema (see coerce). */
   def insert(spark: SparkSession, table: String, columns: Seq[String],
-             values: Seq[Any]): Unit = {
+             values: Seq[Any]): Unit = writing(table) {
     val t = table.toLowerCase
     ensure(spark, t)
     val fresh = buildRow(t, columns, values)
@@ -765,7 +785,7 @@ object TagTables {
   }
 
   /** DELETE FROM t [WHERE name = 'x'] → number of rows removed. */
-  def delete(spark: SparkSession, table: String, name: Option[String]): Long = {
+  def delete(spark: SparkSession, table: String, name: Option[String]): Long = writing(table) {
     val t = table.toLowerCase
     ensure(spark, t)
     val data = rows.getOrElseUpdate(t, ArrayBuffer.empty[Row])
@@ -800,7 +820,7 @@ object TagTables {
     * `time < to_date(...)` — fm_dbsink.go DELETE passthrough) and keep
     * the non-matching rows. Fixture tables are session-local and small,
     * so a driver-side replace is the right cost model here. */
-  def deleteWhere(spark: SparkSession, table: String, whereSql: String): Long = {
+  def deleteWhere(spark: SparkSession, table: String, whereSql: String): Long = writing(table) {
     val t = table.toLowerCase
     ensure(spark, t)
     val data = rows.getOrElseUpdate(t, ArrayBuffer.empty[Row])
@@ -873,32 +893,32 @@ object TagTables {
   }
 
   /** Bulk insert: one view refresh for the whole batch (the statement
-    * sinks loop per record — per-row refresh would be O(n^2)). */
+    * sinks loop per record — per-row refresh would be O(n^2)). The rows
+    * are built before the writer lock is taken: a sink's iterator runs
+    * Spark jobs, which must not hold up the table's other writers. */
   def insertAll(spark: SparkSession, table: String, columns: Seq[String],
                 valueRows: Iterator[Seq[Any]]): Long = {
     val t = table.toLowerCase
-    ensure(spark, t)
-    val buf = rows.getOrElseUpdate(t, ArrayBuffer.empty[Row])
-    var n = 0L
-    valueRows.foreach { values =>
-      buf += buildRow(t, columns, values)
-      n += 1
+    val fresh = valueRows.map(buildRow(t, columns, _)).toVector
+    writing(t) {
+      ensure(spark, t)
+      rows.getOrElseUpdate(t, ArrayBuffer.empty[Row]) ++= fresh
+      refresh(spark, t)
     }
-    refresh(spark, t)
-    n
+    fresh.size.toLong
   }
 
   /** Re-register a table from an archived descriptor (Backup.restore):
     * the defineTable half of createTagTable without re-parsing DDL. */
   def defineTable(spark: SparkSession, name: String, kind: String,
-                  descs: Seq[ColDesc], rollup: Boolean): Unit = {
+                  descs: Seq[ColDesc], rollup: Boolean): Unit = writing(name) {
     val t = name.toLowerCase
     dynamicSchemas.put(t, StructType(descs.map(d =>
       f(d.name, sparkTypeOf(d.typ), machTypeOf(d.typ)))))
     dynamicDescs.put(t, descs)
     dynamicTypes.put(t, kind)
     rollupEnabled.put(t, rollup)
-    if (!dynamicOrder.contains(t)) dynamicOrder += t
+    reorder(o => if (o.contains(t)) o else o :+ t)
     rows.putIfAbsent(t, ArrayBuffer.empty[Row])
     refresh(spark, t)
   }
@@ -906,7 +926,7 @@ object TagTables {
   /** Append already-typed storage rows (Backup.restore replaying an
     * archive) — rows must match [[storageSchemaFor]] positionally; log
     * tables keep the supplied order as arrival order. */
-  def restoreRows(spark: SparkSession, table: String, data: Seq[Row]): Long = {
+  def restoreRows(spark: SparkSession, table: String, data: Seq[Row]): Long = writing(table) {
     val t = table.toLowerCase
     ensure(spark, t)
     val buf = rows.getOrElseUpdate(t, ArrayBuffer.empty[Row])
@@ -923,7 +943,7 @@ object TagTables {
     * from the archive (the default view orders on it, so replay order is
     * inherent, not a write-order property). Keyed classes are excluded:
     * their upsert/PK machinery scans the in-memory buffer. */
-  def restoreSegment(spark: SparkSession, table: String, df: DataFrame): Long = {
+  def restoreSegment(spark: SparkSession, table: String, df: DataFrame): Long = writing(table) {
     val t = table.toLowerCase
     require(!isKeyedClass(t),
       s"table '$t' is a keyed class; restore it through restoreRows")
@@ -942,16 +962,15 @@ object TagTables {
     n
   }
 
-  def dropAll(spark: SparkSession): Unit = {
-    rows.keys.foreach { t =>
-      spark.catalog.dropTempView(t)
-      // log tables also registered an arrival view in refresh()
-      try spark.catalog.dropTempView(arrivalViewName(t)) catch { case _: Throwable => }
-    }
-    rows.clear()
-    baseSegs.keys.foreach(dropBase)
-    baseRows.clear()
-  }
+  def dropAll(spark: SparkSession): Unit =
+    (rows.keySet ++ baseSegs.keySet).foreach(t => writing(t) {
+      if (rows.remove(t).isDefined) {
+        spark.catalog.dropTempView(t)
+        // log tables also registered an arrival view in refresh()
+        try spark.catalog.dropTempView(arrivalViewName(t)) catch { case NonFatal(_) => }
+      }
+      dropBase(t)
+    })
 
   private[server] def coerce(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null

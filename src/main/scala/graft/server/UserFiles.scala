@@ -2,6 +2,7 @@ package graft.server
 
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sinks.GoJs
@@ -122,7 +123,7 @@ object UserFiles {
     // just-written file")
     try TagTables.insert(spark, table, columns, values)
     catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         savedPaths.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => })
         throw e
     }

@@ -3,6 +3,7 @@ package graft.tql
 import graft.sinks.{Chart, ChartCompat, GeoMap, GoJs}
 import graft.tql.Compiler.Compiled
 import Expr._
+import scala.util.control.NonFatal
 
 /** TQL CHART()/GEOMAP()/CHART_LINE… statement sinks: apply the codec
   * options from the statement args (reference: fx_codec_opts.gen.go name
@@ -143,7 +144,7 @@ object ChartRender {
     rowValues(c).foreach { r =>
       gm.addRow(r.map {
         case s: String if s.trim.startsWith("{") =>
-          try graft.script.Builtins.jsonParse(s) catch { case _: Throwable => s }
+          try graft.script.Builtins.jsonParse(s) catch { case NonFatal(_) => s }
         case v => v
       })
     }

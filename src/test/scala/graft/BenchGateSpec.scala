@@ -33,4 +33,14 @@ class BenchGateSpec extends AnyFunSuite {
     assert(!Bench.canonAccept(1.00, sfMatches = true, None, 1.0,
       failed = Seq("q_a", "q_b")))
   }
+  test("compact queries hold only queries; the drop count comes back on its own") {
+    val byCost = (1 to 60).map(i => f"q_query_$i%02d" -> (100.0 / i + 0.0004))
+    val (all, none) = Bench.compactQueries(byCost, budget = 10000)
+    assert(none == 0 && all.count(_ == ':') == 60 && all.contains("\"query_01\":100"))
+    val (qs, qdrop) = Bench.compactQueries(byCost, budget = 400)
+    assert(qs.length <= 400 && qdrop > 0)
+    assert(!qs.contains("qdrop"), qs)
+    val keys = "\"([^\"]+)\":".r.findAllMatchIn(qs).map(_.group(1)).toSeq
+    assert(keys == byCost.take(60 - qdrop).map(_._1.stripPrefix("q_")), qs)
+  }
 }
