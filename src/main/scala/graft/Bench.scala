@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -18,9 +18,9 @@ import scala.util.control.NonFatal
   *    single-partition run for the per-core figure — dividing a 32-way
   *    I/O-contended aggregate by 32 would understate per-core throughput
   *    vs the single-core Go benchmark it is compared against;
-  *  - plan audit: total Exchange/BroadcastExchange/WholeStageCodegen
-  *    counts across all query plans, so scale regressions (new shuffles)
-  *    show up in the round-over-round JSON.
+  *  - plan audit: each query's [[graft.core.PlanShape]] and their
+  *    totals, so scale regressions (new shuffles) show up in the
+  *    round-over-round JSON and can be traced to the query.
   */
 object Bench {
   /** The canonical-record acceptance rule (BenchGateSpec pins it):
@@ -61,20 +61,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.Sessions.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        // StreamRun sums addBatch over recentProgress for the bench
-        // fixed-vs-kernel split; the default retention (100) would
-        // silently undercount kernel time for gate streams with many
-        // micro-batches. Bench-only: retaining 10k progress objects per
-        // stream is avoidable driver overhead for ordinary sessions.
-        .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    ).getOrCreate()
-    graft.core.Sessions.installRules(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
+    graft.queries.StreamRun.retainProgress(spark)
     // JVM/session warm-up so the first measured query isn't charged for
     // codegen compiler + executor spin-up.
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -172,7 +160,7 @@ object Bench {
       }
     }
 
-    var shuffles, broadcasts, codegenSpans, globalWindows = 0
+    val plans = scala.collection.mutable.LinkedHashMap[String, graft.core.PlanShape]()
     // a query that throws goes here, never into a total
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val results = SparkEntry.queries.flatMap { case (name, fn) =>
@@ -188,34 +176,12 @@ object Bench {
           None
         }
       }
-      // audit the EXECUTED plan — AQE's final plan carries the real
-      // shuffle/broadcast/codegen structure (the unexecuted one doesn't)
-      try {
-        val plan = lastDf.queryExecution.executedPlan.toString()
-          .split("== Initial Plan ==")(0) // AQE echoes the pre-adaptive plan below
-        val nEx = "Exchange".r.findAllMatchIn(plan).length
-        val nBc = "BroadcastExchange".r.findAllMatchIn(plan).length
-        shuffles += nEx - nBc // "Exchange" also matches inside "BroadcastExchange"
-        broadcasts += nBc
-        codegenSpans += "\\*\\(\\d+\\)".r.findAllMatchIn(plan)
-          .map(_.matched).toSet.size
-        // single-partition window exchanges — the 100-TB anti-pattern.
-        // MUST stay 0 (VERDICT r3); counted on the AQE-final plan tree.
-        val tree = lastDf.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case p => p
-        }
-        globalWindows += tree.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty => w
-          case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
-            if w.partitionSpec.isEmpty => w
-        }.size
-      } catch { case NonFatal(_) => }
       cohortTick()
       if (runs.contains(None)) { failed += name; None }
-      else Some(name -> runs.flatten.min)
+      else {
+        plans(name) = graft.core.PlanShape.of(lastDf)
+        Some(name -> runs.flatten.min)
+      }
     }
     // close the final partial cohort
     if (sweepIdx % cohortSize != 0) {
@@ -223,8 +189,10 @@ object Bench {
       cohorts += s"""{"upto":$sweepIdx,"gc_ms":${ms - cohortGcMs},""" +
         s""""gc_n":${n - cohortGcN},"heap_mb":${heapMb()}}"""
     }
-    if (globalWindows > 0)
-      System.err.println(s"[bench] WARNING: $globalWindows global-window exchanges in plans")
+    val audit = plans.values.foldLeft(graft.core.PlanShape.zero)(_ + _)
+    // single-partition windows are the 100-TB anti-pattern: MUST stay 0
+    if (audit.globalWindows > 0)
+      System.err.println(s"[bench] WARNING: ${audit.globalWindows} global-window exchanges in plans")
 
     // round-over-round drift check: queries that moved >1.5× vs the
     // previous bench_full.json are flagged so environment noise is
@@ -308,8 +276,8 @@ object Bench {
       s""""tag_data_rows_per_sec_core":${(nWide1 / wide1Sec).toLong}}"""
     val sentinel =
       s"""{"before":${d3(sentinelBefore)},"after":${d3(sentinelAfter)},"drift":${d3(drift)}}"""
-    val audit =
-      s"""{"shuffles":$shuffles,"broadcasts":$broadcasts,"codegenSpans":$codegenSpans,"globalWindows":$globalWindows}"""
+    val plansJson = plans.map { case (k, v) => "\"" + k + "\":" + v.json }
+      .mkString("{", ",", "}")
     val sfName = new java.io.File(sfDir).getName
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     def retriesJson(stripPrefix: Boolean): String =
@@ -353,10 +321,11 @@ object Bench {
       .map { case (k, (f, kn)) =>
         s"\"" + k + s"\":{\"fixed\":${d3(f)},\"kernel\":${d3(kn)}}"
       }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":$audit,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"failed":$failedJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"failed":$failedJson,"sf":"$sfDir"}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
-    catch { case NonFatal(_) => }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write bench_full.json: $e") }
     // The PROTECTED canonical record: bench_full.json is the scratch
     // every run (driver record runs, dev smokes) overwrites; the quiet
     // pristine record lives under BENCH_CANONICAL.json, which only a
@@ -385,7 +354,8 @@ object Bench {
         System.err.println("[bench] BENCH_CANONICAL.json updated (pristine window)")
       } else
         System.err.println(f"[bench] BENCH_CANONICAL.json left untouched (drift $drift%.3f, sfMatch=$sfMatches, total ${d3(total)} vs canonical ${prevTotal.fold("-")(d3)}; GRAFT_BENCH_FORCE=1 to override)")
-    } catch { case NonFatal(_) => }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not update BENCH_CANONICAL.json: $e") }
     // NOT printing fullLine to stdout: a partial copy of it surviving in
     // the tail buffer could confuse a brace-matching extractor. The compact
     // line below is the single parseable line in the tail — printed as the

@@ -10,14 +10,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing names: dump only those queries (dev iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Sessions.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    graft.core.Sessions.installRules(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     val failed = dump(spark, sfDir, outDir,
       SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

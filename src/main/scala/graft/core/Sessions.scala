@@ -46,14 +46,15 @@ object Sessions {
     s
   }
 
-  /** Local session for tests/benchmarks. */
-  def local(cores: Int = 4, shufflePartitions: Int = 0): SparkSession = {
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores
+  /** Local session on `cores` task threads and as many shuffle
+    * partitions. The mains (Bench, Verify, Profile, EntrySmoke) take
+    * the default: `SPARK_GRAFT_CPUS`, else 4. */
+  def local(cores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)): SparkSession = {
     val s = configure(
       SparkSession.builder()
         .master(s"local[$cores]")
         .appName("graft")
-        .config("spark.sql.shuffle.partitions", sp.toString)
+        .config("spark.sql.shuffle.partitions", cores.toString)
     ).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     installRules(s)

@@ -24,20 +24,6 @@ object Extra {
   private val pqCache =
     scala.collection.concurrent.TrieMap.empty[String, graft.similarity.Pq.Index]
 
-  /** The per-JVM fixture dirs behind [[rollupCache]] and [[logCache]]:
-    * they live as long as the caches, so one shutdown hook deletes them
-    * all at JVM exit. */
-  private val jvmDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-  Runtime.getRuntime.addShutdownHook(
-    new Thread(() => jvmDirs.forEach(d => StreamRun.rmTree(d)), "graft-fixture-dirs"))
-
-  /** A fresh `prefix` temp dir, deleted at JVM exit. */
-  private def jvmTempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    jvmDirs.add(d)
-    d
-  }
-
   /** The batch-built rollup `tier` of the raw events at `rawPath`, built
     * once per (JVM, source, `name`) under a `name`-prefixed temp dir:
     * rollups are maintained continuously (streaming.Watch.rollupStream);
@@ -48,7 +34,7 @@ object Extra {
                          beforeNs: Option[Long] = None): String =
     rollupCache.getOrElseUpdate(s"$rawPath#$name", {
       val raw = s.read.parquet(rawPath)
-      val d = jvmTempDir(name) + "/r"
+      val d = graft.core.TempDirs.forJvm(name) + "/r"
       graft.operators.Lake.rollup(beforeNs.fold(raw)(h => raw.filter(tsNs(raw) < h)),
           col("user_id"), tsNs(raw), col("value"), tier)
         .write.mode("overwrite").parquet(d)
@@ -234,7 +220,7 @@ object Extra {
     "q_rollup_stream" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
       val rollDir = rollupCache.getOrElseUpdate(rawPath + "#stream", {
-        val d = jvmTempDir("graft_rstream") + "/r"
+        val d = graft.core.TempDirs.forJvm("graft_rstream") + "/r"
         val schema = s.read.parquet(rawPath).schema
         StreamRun.run("q_rollup_stream")(ck =>
           graft.streaming.Watch.maintainRollup(s, rawPath, schema,
@@ -257,7 +243,7 @@ object Extra {
       val rawPath = s"$dir/events.parquet"
       val logDir = logCache.getOrElseUpdate(rawPath, {
         val raw = t(s, dir, "events")
-        val d = jvmTempDir("graft_log") + "/l"
+        val d = graft.core.TempDirs.forJvm("graft_log") + "/l"
         // stamp from the µs-truncated ts: DuckDB reads parquet ns
         // timestamps at µs, so the oracle can only reproduce µs-grid
         // arrival values

@@ -1,8 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import scala.util.control.NonFatal
 
 /** The one runner for bounded gate streams: [[gate]] tails a batch
   * table's file as a stream, runs the caller's kernel into a memory sink
@@ -31,7 +30,7 @@ object StreamRun {
     * so they belong on the fastest scratch storage available: the
     * offset WAL, commit log and every state-store delta are fsynced
     * per micro-batch, and on a disk-backed tmpdir those fsyncs were
-    * 60-80% of a small batch's wall time (r19 DevStreamProbe: 32 state
+    * 60-80% of a small batch's wall time (r19 stream probe: 32 state
     * commits summing 9-43 s on /tmp vs ~0 on tmpfs). Production
     * deployments that need durable recovery set an explicit
     * checkpointLocation (or GRAFT_STREAM_CK_ROOT) on durable storage —
@@ -42,13 +41,6 @@ object StreamRun {
       if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_ck"
       else System.getProperty("java.io.tmpdir") + "/graft_ck"
     }
-
-  private[graft] def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete()
-    }
-    try rm(new java.io.File(path)) catch { case NonFatal(_) => }
-  }
 
   /** Run a bounded gate stream over `batch`'s one input file: `body`
     * turns the tailed source (same schema as `batch`) into the sink
@@ -92,15 +84,21 @@ object StreamRun {
       record(name, q, t0)
     } finally {
       if (q != null && q.isActive) q.stop()
-      rmTree(ck)
+      graft.core.TempDirs.rmTree(ck)
     }
   }
 
+  /** Keep 10k progress updates per stream in `s`, so [[lastSplit]]'s
+    * sum over `recentProgress` does not silently drop early
+    * micro-batches of long runs. For the sessions that report the split
+    * (Bench, Profile): ordinary sessions keep Spark's default of 100,
+    * as retaining 10k progress objects per stream is avoidable driver
+    * overhead. */
+  def retainProgress(s: SparkSession): Unit =
+    s.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
+
   private def record(name: String, q: StreamingQuery, t0: Long): Unit = {
     val totalSec = (System.nanoTime() - t0) / 1e9
-    // recentProgress retention is raised to 10k in Bench's session so
-    // this sum does not silently drop early micro-batches of long runs
-    // (ordinary sessions keep Spark's default retention of 100)
     val kernelSec = q.recentProgress.iterator.map { p =>
       Option(p.durationMs.get("addBatch")).fold(0L)(_.longValue)
     }.sum / 1e3

@@ -136,8 +136,7 @@ object TagTables {
     * surfaces like rowCount don't need a Spark action) */
   private val baseRows = TrieMap.empty[String, Long]
   private val segCounter = new java.util.concurrent.atomic.AtomicLong()
-  private lazy val segRoot: String = java.nio.file.Files
-    .createTempDirectory("graft_tag_segs").toString
+  private lazy val segRoot: String = graft.core.TempDirs.forJvm("graft_tag_segs")
   /** user-created tag tables (`create tag table …` DDL) */
   private val dynamicSchemas = TrieMap.empty[String, StructType]
   private val dynamicDescs = TrieMap.empty[String, Seq[ColDesc]]
@@ -645,12 +644,11 @@ object TagTables {
           .getOrElse("NAME")
         import org.apache.spark.sql.functions.{col => c0, row_number, lit => l0}
         import org.apache.spark.sql.expressions.Window
-        try full.select(c0(pk).as("NAME")).distinct()
+        full.select(c0(pk).as("NAME")).distinct()
           .select(row_number().over(Window.orderBy(c0("NAME"))).as("_ID"),
             c0("NAME"),
             l0(null).cast("timestamp").as("_LAST_UPDATE_TIME"))
           .createOrReplaceTempView(metaViewName(t))
-        catch { case _: Exception => () }
       }
     }
   }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.PlanShape
+
 /** Structural plan assertions for the scale-critical gate queries: the
   * properties that keep each plan viable at 100 TB, pinned so a
   * refactor that silently reintroduces a cartesian product, a global
@@ -36,28 +38,22 @@ class PlanAuditSpec extends SparkSpec {
     // scored relation, which truncates the lineage these generic asserts
     // read, so that test captures the plans the checkpoints execute
 
+  /** Each heavy query runs once; both tests below read its shape. */
+  private lazy val heavyShapes: Seq[(String, PlanShape)] = heavy.map { name =>
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.queryExecution.toRdd.count() // drive AQE to the final plan
+    name -> PlanShape.of(df)
+  }
+
   test("no cartesian products in any heavy gate query") {
-    heavy.foreach { name =>
-      val plan = executedPlan(name)
-      assert(!plan.contains("CartesianProduct"),
-        s"$name plans a CartesianProduct:\n${plan.take(2000)}")
+    heavyShapes.foreach { case (name, shape) =>
+      assert(shape.cartesians == 0, s"$name plans a CartesianProduct: ${shape.json}")
     }
   }
 
   test("no unpartitioned windows (single-partition trap) in heavy queries") {
-    heavy.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      df.queryExecution.toRdd.count()
-      val tree = df.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }
-      val bad = tree.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(bad.isEmpty, s"$name has a global window: $bad")
+    heavyShapes.foreach { case (name, shape) =>
+      assert(shape.globalWindows == 0, s"$name has a global window: ${shape.json}")
     }
   }
 
@@ -141,17 +137,9 @@ class PlanAuditSpec extends SparkSpec {
           }
       }
       execs.foreach { case (fn, p) =>
-        assert(!text(p).contains("CartesianProduct"), s"$name $fn:\n${text(p).take(2000)}")
-        val tree = p match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
-          case other => other
-        }
-        val bad = tree.collect {
-          case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty => w
-        }
-        assert(bad.isEmpty, s"$name $fn has a global window: $bad")
+        val shape = PlanShape.of(p)
+        assert(shape.cartesians == 0 && shape.globalWindows == 0,
+          s"$name $fn: ${shape.json}\n${text(p).take(2000)}")
       }
     }
   }

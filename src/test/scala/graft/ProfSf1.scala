@@ -3,12 +3,13 @@ package graft
 /** Dev-only: candidate/edge/wedge volume counts behind the BENCH_SF1
   * scaling adjudication — how much WORK the pairwise family's inputs
   * generate at each SF (the engine-time-per-unit-work comparison needs
-  * the denominator). Run: `sbt "Test/runMain graft.ProfSf1 <sfDir>"`. */
+  * the denominator). Run: `sbt "Test/runMain graft.ProfSf1 <sfDir>"`,
+  * on `SPARK_GRAFT_CPUS` cores (default 4). */
 object ProfSf1 {
   def main(args: Array[String]): Unit = {
     import org.apache.spark.sql.functions._
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.core.Sessions.local(32)
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
 
