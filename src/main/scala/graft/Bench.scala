@@ -59,6 +59,11 @@ object Bench {
     }
   }
 
+  /** The record's `"tables"` object: how many reads resolved a table
+    * and how many reused the catalog's entry (full record only). */
+  private[graft] def tablesJson(c: graft.core.Tables.Counts): String =
+    s"""{"resolved":${c.resolved},"reused":${c.reused}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local()
@@ -66,7 +71,7 @@ object Bench {
     // JVM/session warm-up so the first measured query isn't charged for
     // codegen compiler + executor spin-up.
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    graft.core.Tables.load(spark, sfDir, "lineitem").count()
 
     def time1(fn: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -321,7 +326,7 @@ object Bench {
       .map { case (k, (f, kn)) =>
         s"\"" + k + s"\":{\"fixed\":${d3(f)},\"kernel\":${d3(kn)}}"
       }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"failed":$failedJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"tables":${tablesJson(graft.core.Tables.counts)},"failed":$failedJson,"sf":"$sfDir"}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) =>

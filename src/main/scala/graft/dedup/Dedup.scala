@@ -215,8 +215,8 @@ object Dedup {
     *
     * `rebalance` gates the pre-expansion spread (Par.expand): the right
     * default for one-shot consumers, but callers that reference the
-    * RESULT repeatedly without materializing it (the iterative graph
-    * kernels) must pass false — the injected RoundRobin exchange is
+    * RESULT repeatedly without materializing it (Triangles' orientation
+    * joins) must pass false — the injected RoundRobin exchange is
     * cloned into every reference of the subtree (r18: pagerank's plan
     * gained 32 RoundRobin exchanges and regressed 0.77×) while
     * ReusedExchange dedupes the un-rebalanced shape for free. */

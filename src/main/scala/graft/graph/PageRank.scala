@@ -18,12 +18,16 @@ import scala.util.control.NonFatal
   * bit-reproducible by a relational engine unrolling the same
   * iterations.
   *
-  * Scale: per iteration, one shuffle join of the edge relation against
-  * the rank relation (both partitioned by the join key) plus a
-  * partial-aggregated contribution shuffle — the textbook distributed
-  * PageRank topology. Nothing ever collects; N is the only driver-side
-  * scalar. At 100 TB the edge relation dominates and AQE handles its
-  * skew (a celebrity node's in-edges partial-aggregate map-side).
+  * Scale: the edges are grouped once into an adjacency relation
+  * (src, dsts) — out-degree is `size(dsts)` — and every iteration is one
+  * shuffle join of that relation against the rank relation, an explode
+  * of each source's share over its out-edges, and a partial-aggregated
+  * contribution shuffle. Every iteration reads the identical adjacency
+  * subtree, so an executed plan computes its exchange once and the other
+  * iterations reuse it: the edge derivation (e.g. a Jaccard self-join)
+  * runs once per Spark job, not once per reference. Nothing ever
+  * collects; N is the only driver-side scalar. At 100 TB the adjacency
+  * relation dominates and AQE handles its skew.
   */
 object PageRank {
   /** Iterations between lineage truncations — deep enough to amortize
@@ -54,12 +58,11 @@ object PageRank {
     require(n > 0, "PageRank.run: empty vertex set")
     val nD = n.toDouble
     val reset = (1d - d) / nD
-    // NO eager edge materialization: Spark's ReusedExchange already
-    // deduplicates the (expensive) edge derivation across the
-    // iteration joins, and an r18 A/B measured the eager
-    // localCheckpoint as pure overhead at bench shape (the extra
-    // materialization jobs outweigh the planning it saves).
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+    // one adjacency relation, not (edges, deg): each iteration then reads
+    // one identical subtree, whose exchange the planner reuses across
+    // iterations — a separate degree aggregate would be a second,
+    // differently-shaped reader of the edges and re-derive them
+    val adj = edges.groupBy(col("src")).agg(collect_list(col("dst")).as("dsts"))
     var ranks = nodes.select(col("v"), lit(1d / nD).as("r"))
     // the checkpoint behind `ranks`, once one is taken; one live at a time
     var live: Option[graft.core.Par.Checkpoint] = None
@@ -68,12 +71,12 @@ object PageRank {
       var converged = false
       while (it < iters && !converged) {
         val prev = ranks // ≤ CheckpointEvery iterations of lineage
-        val contrib = edges
+        val contrib = adj
           .join(ranks.withColumnRenamed("v", "src"), "src")
-          .join(deg, "src")
-          .groupBy(col("dst").as("v"))
-          .agg(sum(fr(col("r") / col("deg"), 12).cast("decimal(38,12)"))
-            .cast("double").as("s"))
+          .select(explode(col("dsts")).as("v"),
+            fr(col("r") / size(col("dsts")), 12).cast("decimal(38,12)").as("c"))
+          .groupBy(col("v"))
+          .agg(sum(col("c")).cast("double").as("s"))
         ranks = nodes.join(contrib, Seq("v"), "left")
           .select(col("v"),
             fr(lit(reset) + lit(d) * coalesce(col("s"), lit(0d)), 9).as("r"))

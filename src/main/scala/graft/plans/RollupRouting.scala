@@ -371,7 +371,7 @@ object RollupRouting {
       if (fpreds.exists(_.isEmpty)) return None
 
       // rollup relation + column handles
-      val rPlan = spark.read.parquet(spec.rollupPath).queryExecution.analyzed
+      val rPlan = graft.core.Tables.relation(spark, spec.rollupPath)
       val h = Seq("name", "time_ns", "min_value", "max_value", "sum_value",
         "sumsq_value", "cnt").map(n => n -> rPlan.output.find(_.name == n)).toMap
       if (h.values.exists(_.isEmpty)) return None

@@ -319,16 +319,17 @@ object Analytics {
 
     // ---- PageRank over the near-dup similarity graph -------------------
     // 3 fixed iterations, per-iteration ranks 9-dp-pinned; each round is
-    // one edge-vs-rank shuffle join + a partial-agg contribution shuffle.
+    // one adjacency-vs-rank shuffle join + a partial-agg contribution
+    // shuffle. The pairs are symmetrized in one pass (no self-union), so
+    // the Jaccard subtree has one reference and keeps its full-width
+    // pre-expansion rebalance.
     "q_pagerank" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // rebalance=false: PageRank references the edge subtree per
-      // iteration without materializing it — the Par.expand RoundRobin
-      // exchange clones into every reference (r18 regression, 0.77×)
-      val pairs = graft.dedup.Dedup.jaccardPairs(docs,
-        blockCol = "source", threshold = 0.1, rebalance = false)
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = graft.dedup.Dedup.jaccardPairs(docs, blockCol = "source", threshold = 0.1)
+        .select(explode(array(
+          struct(col("doc_a").as("src"), col("doc_b").as("dst")),
+          struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
       graft.graph.PageRank.run(docs.select(col("doc_id").as("v")), edges,
           d = 0.85, iters = 3)
         .select(col("v").as("doc_id"), col("rank"))

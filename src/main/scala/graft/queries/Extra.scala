@@ -33,7 +33,7 @@ object Extra {
                          name: String, tier: String,
                          beforeNs: Option[Long] = None): String =
     rollupCache.getOrElseUpdate(s"$rawPath#$name", {
-      val raw = s.read.parquet(rawPath)
+      val raw = graft.core.Tables.read(s, rawPath)
       val d = graft.core.TempDirs.forJvm(name) + "/r"
       graft.operators.Lake.rollup(beforeNs.fold(raw)(h => raw.filter(tsNs(raw) < h)),
           col("user_id"), tsNs(raw), col("value"), tier)
@@ -156,7 +156,7 @@ object Extra {
       val rollDir = rollupTier(s, rawPath, "graft_route", "HOUR")
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
+      bucketStats(graft.core.Tables.read(s, rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 
@@ -168,7 +168,7 @@ object Extra {
       val rollDir = rollupTier(s, rawPath, "graft_route", "HOUR")
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      val raw2 = s.read.parquet(rawPath)
+      val raw2 = graft.core.Tables.read(s, rawPath)
       bucketStats(raw2.filter(tsRangeNs(raw2, DayFromUs * 1000L, DayUntilUs * 1000L)),
           6 * graft.time.TimeFns.NsPerHour, "h6")
         .orderBy("user_id", "h6_us")
@@ -187,7 +187,7 @@ object Extra {
         minDir, graft.time.TimeFns.NsPerMin, "user_id", "ts", "value"))
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         hourDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
-      bucketStats(s.read.parquet(rawPath), 2 * graft.time.TimeFns.NsPerDay, "d2")
+      bucketStats(graft.core.Tables.read(s, rawPath), 2 * graft.time.TimeFns.NsPerDay, "d2")
         .orderBy("user_id", "d2_us")
     }),
 
@@ -204,7 +204,7 @@ object Extra {
       graft.plans.RollupRouting.register(rawPath, graft.plans.RollupRouting.Spec(
         rollDir, graft.time.TimeFns.NsPerHour, "user_id", "ts", "value"))
       graft.plans.RollupRouting.setHorizon(rollDir, horizonNs)
-      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
+      bucketStats(graft.core.Tables.read(s, rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 
@@ -221,7 +221,7 @@ object Extra {
       val rawPath = s"$dir/events.parquet"
       val rollDir = rollupCache.getOrElseUpdate(rawPath + "#stream", {
         val d = graft.core.TempDirs.forJvm("graft_rstream") + "/r"
-        val schema = s.read.parquet(rawPath).schema
+        val schema = graft.core.Tables.read(s, rawPath).schema
         StreamRun.run("q_rollup_stream")(ck =>
           graft.streaming.Watch.maintainRollup(s, rawPath, schema,
             "user_id", "ts", "value", "1 hour", "0 seconds",
@@ -229,7 +229,7 @@ object Extra {
         d
       })
       graft.plans.RollupRouting.load(s, rollDir) // registration from the artifact
-      bucketStats(s.read.parquet(rawPath), graft.time.TimeFns.NsPerDay, "day")
+      bucketStats(graft.core.Tables.read(s, rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
     }),
 

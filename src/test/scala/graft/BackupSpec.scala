@@ -14,7 +14,7 @@ class BackupSpec extends SparkSpec {
     WebRoutes.route(spark, method, s"/web/api$path", Map.empty, body)
 
   private def freshBase(): String = {
-    val d = Files.createTempDirectory("graft_backup").toString
+    val d = tempDir("graft_backup")
     Backup.baseDir = d
     Backup.resetForTest()
     d

@@ -43,4 +43,9 @@ class BenchGateSpec extends AnyFunSuite {
     val keys = "\"([^\"]+)\":".r.findAllMatchIn(qs).map(_.group(1)).toSeq
     assert(keys == byCost.take(60 - qdrop).map(_._1.stripPrefix("q_")), qs)
   }
+
+  test("the full record carries the table catalog's resolve and reuse counts") {
+    val j = Bench.tablesJson(graft.core.Tables.Counts(resolved = 10, reused = 2070))
+    assert(j == """{"resolved":10,"reused":2070}""")
+  }
 }

@@ -63,7 +63,7 @@ class BpeSpec extends SparkSpec {
   test("save/load roundtrips the merge table; corrupt artifacts are rejected") {
     val df = (1L to 30L).map(i => (i, s"foo bar baz qux w$i")).toDF("id", "text")
     val m = Bpe.train(df, "text", numMerges = 15)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_model").toString
+    val dir = tempDir("bpe_model")
     Bpe.save(m, spark, s"$dir/model")
     val loaded = Bpe.load(spark, s"$dir/model")
     assert(loaded.merges == m.merges)

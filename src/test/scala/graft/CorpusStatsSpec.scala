@@ -137,9 +137,9 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("maintainCountMin: streamed partials merge to the batch sketch; replay is idempotent") {
     import java.nio.file.Files
-    val rawDir = Files.createTempDirectory("graft_cms_raw").toString
-    val sketchDir = Files.createTempDirectory("graft_cms").toString + "/s"
-    val ck = Files.createTempDirectory("graft_cms_ck").toString
+    val rawDir = tempDir("graft_cms_raw")
+    val sketchDir = tempDir("graft_cms") + "/s"
+    val ck = tempDir("graft_cms_ck")
     val docs = Seq.tabulate(40)(i => (i.toLong, s"w${i % 6} w${i % 6} common"))
       .toDF("doc_id", "text")
     // two arrival chunks

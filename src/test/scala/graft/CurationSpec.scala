@@ -361,7 +361,7 @@ class CurationSpec extends SparkSpec {
 
   test("exportShards: deterministic shard layout, readable back, stable membership") {
     val df = (1L to 500L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = tempDir("shards")
     Curation.exportShards(df, "doc_id", seed = "r10", rowsPerShard = 100L, s"$dir/out")
     val back = spark.read.parquet(s"$dir/out")
     assert(back.count() == 500L)

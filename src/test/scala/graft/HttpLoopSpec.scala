@@ -160,7 +160,7 @@ class HttpLoopSpec extends SparkSpec {
     assert(rspRaw.startsWith("HTTP/1.1 "), rspRaw.take(40))
 
     // POST body from an OS file via `< @path` (unicode name)
-    val dir = java.nio.file.Files.createTempDirectory("dsl_files")
+    val dir = java.nio.file.Paths.get(tempDir("dsl_files"))
     // (the reference uses a Korean filename; this container's JVM file
     // encoding cannot create one — the directive path handling is the
     // same either way)
@@ -353,7 +353,7 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("/db/public door end-to-end: static file, CGI script, redirect headers") {
-    val tmp = java.nio.file.Files.createTempDirectory("pubdoor")
+    val tmp = java.nio.file.Paths.get(tempDir("pubdoor"))
     val prev = graft.tql.Compiler.templateRoot
     graft.tql.Compiler.templateRoot = tmp.toString
     try {

@@ -13,7 +13,7 @@ class LogLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("arrival-day layout prunes partitions for the log tail query") {
-    val dir = Files.createTempDirectory("graft_loglayout").toString + "/l"
+    val dir = tempDir("graft_loglayout") + "/l"
     val day0 = 1704067200000000000L // 2024-01-01 UTC, ns
     // 5 days × 48 events, arrival = event time (already epoch-ns)
     val rows = for { d <- 0 until 5; i <- 0 until 48 }
@@ -46,7 +46,7 @@ class LogLayoutSpec extends SparkSpec {
     assert(readFiles < totalFiles, s"read $readFiles of $totalFiles files")
 
     // rows missing an arrival stamp get one at write time
-    val dir2 = Files.createTempDirectory("graft_loglayout2").toString + "/l"
+    val dir2 = tempDir("graft_loglayout2") + "/l"
     TableSinks.appendLogTable(Seq((1, "x")).toDF("id", "msg"), dir2)
     val stamped = spark.read.parquet(dir2)
     assert(stamped.columns.contains("_arrival_time"))

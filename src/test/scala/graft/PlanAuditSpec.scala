@@ -186,6 +186,43 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("Union"), plan.take(2000))
   }
 
+  /** How many distinct stages of `plan`'s AQE-final tree evaluate
+    * `jaccard_sorted_min`; a stage starts at each exchange, and a reused
+    * exchange evaluates nothing. */
+  private def jaccardStages(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    var stages = Set.empty[Int]
+    var next = 0
+    def walk(p: SparkPlan, stage: Int): Unit = {
+      if (p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.ArrayExprs.JaccardSortedMin])))
+        stages += stage
+      val kids = p match {
+        case _: ReusedExchangeExec => Nil
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case o => o.children ++ o.subqueries
+      }
+      kids.foreach { k =>
+        walk(k, if (k.isInstanceOf[Exchange]) { next += 1; next } else stage)
+      }
+    }
+    walk(plan, 0)
+    stages.size
+  }
+
+  test("pagerank derives its similarity edges once: one jaccard stage, a stable shape") {
+    val shapes = (1 to 2).map { _ =>
+      val df = SparkEntry.queries("q_pagerank")(spark, sf)
+      df.queryExecution.toRdd.count()
+      val plan = df.queryExecution.executedPlan
+      assert(jaccardStages(plan) == 1, plan.toString.take(4000))
+      PlanShape.of(df)
+    }
+    assert(shapes.distinct.size == 1, shapes.map(_.json))
+  }
+
   test("stratified sampling plans a WindowGroupLimit (rank pushdown)") {
     val plan = executedPlan("q_stratified_sample")
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))

@@ -27,14 +27,14 @@ class PqSpec extends SparkSpec {
 
   test("index save/load round-trips bit-exactly (durable artifact, not per-JVM fit)") {
     import java.nio.file.Files
-    val pqPath = Files.createTempDirectory("graft_pq_idx").toString + "/i"
+    val pqPath = tempDir("graft_pq_idx") + "/i"
     Pq.save(index, spark, pqPath)
     val loaded = Pq.load(spark, pqPath)
     assert(loaded.m == index.m && loaded.dsub == index.dsub && loaded.ksub == index.ksub)
     assert(loaded.codebooks.flatten.flatten.toSeq == index.codebooks.flatten.flatten.toSeq)
 
     val ivf = graft.similarity.Ivf.train(emb, k = 8, iters = 2)
-    val ivfPath = Files.createTempDirectory("graft_ivf_idx").toString + "/i"
+    val ivfPath = tempDir("graft_ivf_idx") + "/i"
     graft.similarity.Ivf.save(ivf, spark, ivfPath)
     val ivf2 = graft.similarity.Ivf.load(spark, ivfPath)
     assert(ivf2.centroids.flatten.toSeq == ivf.centroids.flatten.toSeq)
@@ -49,11 +49,11 @@ class PqSpec extends SparkSpec {
 
   test("a vector stream encodes against a storage-loaded index (stateless map, no shuffle)") {
     import java.nio.file.Files
-    val idxPath = Files.createTempDirectory("graft_pq_sidx").toString + "/i"
+    val idxPath = tempDir("graft_pq_sidx") + "/i"
     Pq.save(index, spark, idxPath)
     val loaded = Pq.load(spark, idxPath)
-    val srcDir = Files.createTempDirectory("graft_pq_src").toString + "/t"
-    val ck = Files.createTempDirectory("graft_pq_ck").toString
+    val srcDir = tempDir("graft_pq_src") + "/t"
+    val ck = tempDir("graft_pq_ck")
     emb.filter($"vec_id" < 20).write.parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema).parquet(srcDir)
     val q = Pq.encode(stream, loaded)

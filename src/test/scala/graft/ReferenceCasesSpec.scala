@@ -142,7 +142,7 @@ class ReferenceCasesSpec extends SparkSpec {
   }
 
   test("CSV file source: datetimeType/floatType fields and undeclared columns stay strings") {
-    val tmp = java.nio.file.Files.createTempFile("graft_csvfile", ".csv")
+    val tmp = tempFile("graft_csvfile", ".csv")
     java.nio.file.Files.write(tmp,
       "a,1705291859,1.5,extra1\nb,1705291860,2.5,extra2\n".getBytes("UTF-8"))
     val out = run(

@@ -48,13 +48,13 @@ class RetainSplineSinkSpec extends SparkSpec {
   }
 
   test("table sinks append and bucket tag layouts") {
-    val dir = Files.createTempDirectory("graft_sink").toString + "/t1"
+    val dir = tempDir("graft_sink") + "/t1"
     val df = Seq(("a", 1L, 1.0), ("b", 2L, 2.0)).toDF("name", "time", "value")
     TableSinks.append(df, dir)
     TableSinks.insert(df, dir, Seq("name", "time", "value"))
     assert(spark.read.parquet(dir).count() == 4)
 
-    val tagDir = Files.createTempDirectory("graft_sink").toString + "/tag"
+    val tagDir = tempDir("graft_sink") + "/tag"
     TableSinks.appendTagTable(
       (0 until 100).map(i => (s"tag${i % 7}", i.toLong, i.toDouble))
         .toDF("name", "time", "value"), tagDir, "name", "time", buckets = 4)

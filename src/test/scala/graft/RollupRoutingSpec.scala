@@ -20,8 +20,8 @@ class RollupRoutingSpec extends SparkSpec {
     }
 
   test("bucket aggregates are routed onto the rollup table") {
-    val rawPath = Files.createTempDirectory("graft_raw").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_roll").toString + "/r"
+    val rawPath = tempDir("graft_raw") + "/t"
+    val rollupPath = tempDir("graft_roll") + "/r"
     // 2 tags × 3 hours of integer-valued data (exact double sums)
     val base = 1704067200000000000L
     val rows = for {
@@ -59,8 +59,8 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("aligned time-range filters route; misaligned ones do not") {
-    val rawPath = Files.createTempDirectory("graft_raw3").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_roll3").toString + "/r"
+    val rawPath = tempDir("graft_raw3") + "/t"
+    val rollupPath = tempDir("graft_roll3") + "/r"
     val base = 1704067200000000000L
     val rows = for {
       tag <- Seq("a", "b"); h <- 0 until 6; i <- 0 until 4
@@ -98,8 +98,8 @@ class RollupRoutingSpec extends SparkSpec {
     // mirrors the gate-query shape since the testdata moved to µs-naive
     // parquet timestamps: grouping on roundTimeNs(Q.tsNs(df)) and a
     // Q.tsRangeNs typed-literal filter must still hit the rollup
-    val rawPath = Files.createTempDirectory("graft_rawntz").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_rollntz").toString + "/r"
+    val rawPath = tempDir("graft_rawntz") + "/t"
+    val rollupPath = tempDir("graft_rollntz") + "/r"
     val base = 1704067200000000000L
     val rows = for {
       tag <- Seq("a", "b"); h <- 0 until 6; i <- 0 until 4
@@ -142,9 +142,9 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("multi-tier: a day-bucket query picks the COARSEST dividing rollup (HOUR, not MIN)") {
-    val rawPath = Files.createTempDirectory("graft_rawt").toString + "/t"
-    val hourPath = Files.createTempDirectory("graft_tier_hour").toString + "/r"
-    val minPath = Files.createTempDirectory("graft_tier_min").toString + "/r"
+    val rawPath = tempDir("graft_rawt") + "/t"
+    val hourPath = tempDir("graft_tier_hour") + "/r"
+    val minPath = tempDir("graft_tier_min") + "/r"
     val base = 1704067200000000000L
     val rows = for {
       tag <- Seq("a", "b"); h <- 0 until 30; i <- 0 until 4
@@ -198,8 +198,8 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("freshness horizon: appends past the rollup horizon stay visible (raw-tail union)") {
-    val rawPath = Files.createTempDirectory("graft_rawf").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_rollf").toString + "/r"
+    val rawPath = tempDir("graft_rawf") + "/t"
+    val rollupPath = tempDir("graft_rollf") + "/r"
     val base = 1704067200000000000L
     val horizon = base + 2 * TimeFns.NsPerHour
     // rolled-up era: hours 0-1
@@ -248,8 +248,8 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("durable metadata: save → clear (restart) → load restores routing AND horizon") {
-    val rawPath = Files.createTempDirectory("graft_rawd").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_rolld").toString + "/r"
+    val rawPath = tempDir("graft_rawd") + "/t"
+    val rollupPath = tempDir("graft_rolld") + "/r"
     val base = 1704067200000000000L
     val horizon = base + 2 * TimeFns.NsPerHour
     val rolled = for {
@@ -300,9 +300,9 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("same-period registration REPLACES: a query that registers its tier last owns the plan") {
-    val rawPath = Files.createTempDirectory("graft_raw_co").toString + "/t"
-    val fullPath = Files.createTempDirectory("graft_roll_co_full").toString + "/r"
-    val streamPath = Files.createTempDirectory("graft_roll_co_str").toString + "/r"
+    val rawPath = tempDir("graft_raw_co") + "/t"
+    val fullPath = tempDir("graft_roll_co_full") + "/r"
+    val streamPath = tempDir("graft_roll_co_str") + "/r"
     val base = 1704067200000000000L
     val rows = for {
       tag <- Seq("a", "b"); h <- 0 until 3; i <- 0 until 10
@@ -353,8 +353,8 @@ class RollupRoutingSpec extends SparkSpec {
   }
 
   test("non-divisible bucket periods are NOT rewritten") {
-    val rawPath = Files.createTempDirectory("graft_raw2").toString + "/t"
-    val rollupPath = Files.createTempDirectory("graft_roll2").toString + "/r"
+    val rawPath = tempDir("graft_raw2") + "/t"
+    val rollupPath = tempDir("graft_roll2") + "/r"
     Seq(("a", 1704067200000000000L, 1.0)).toDF("name", "time", "value")
       .write.parquet(rawPath)
     spark.read.parquet(rawPath).limit(0) // materialize schema

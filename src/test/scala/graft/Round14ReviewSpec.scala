@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 class Round14ReviewSpec extends SparkSpec {
 
   test("GET /web/api/files serves binary files byte-exact (review: UTF-8 round-trip corruption)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_files_bin")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_files_bin"))
     val prev = graft.tql.Compiler.templateRoot
     graft.tql.Compiler.templateRoot = tmp.toString
     try {
@@ -116,7 +116,7 @@ class Round14ReviewSpec extends SparkSpec {
   }
 
   test("POST /web/api/files writes binary uploads byte-exact (review 2: request-side UTF-8 round-trip)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_files_up")
+    val tmp = java.nio.file.Paths.get(tempDir("graft_files_up"))
     val prev = graft.tql.Compiler.templateRoot
     graft.tql.Compiler.templateRoot = tmp.toString
     try {

@@ -221,7 +221,7 @@ class RpcSpec extends SparkSpec {
 
   test("schedule.timer.add rides the timer validations") {
     graft.scheduler.Timers.resetForTest()
-    val root = java.nio.file.Files.createTempDirectory("rpc_timer_root")
+    val root = java.nio.file.Paths.get(tempDir("rpc_timer_root"))
     java.nio.file.Files.write(root.resolve("t.tql"),
       "FAKE(linspace(0,1,2))\nCSV()\n".getBytes("UTF-8"))
     val prevRoot = graft.tql.Compiler.templateRoot

@@ -50,7 +50,7 @@ class ServerFilesSpec extends SparkSpec {
   }
 
   test("files CRUD lifecycle over the route (TestHandleFiles)") {
-    val tmp = java.nio.file.Files.createTempDirectory("files_root")
+    val tmp = java.nio.file.Paths.get(tempDir("files_root"))
     val prev = graft.tql.Compiler.templateRoot
     graft.tql.Compiler.templateRoot = tmp.toString
     def route(m: String, p: String, body: String = "",

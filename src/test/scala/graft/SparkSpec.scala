@@ -22,23 +22,46 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally sc.setLogLevel("WARN")
   }
 
+  private val temps = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** A fresh `prefix` temp dir, deleted with everything under it when
+    * the suite closes. */
+  protected def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    temps.add(d)
+    d
+  }
+
+  /** A fresh temp file, deleted when the suite closes. */
+  protected def tempFile(prefix: String, suffix: String): java.nio.file.Path = {
+    val f = java.nio.file.Files.createTempFile(prefix, suffix)
+    temps.add(f.toString)
+    f
+  }
+
   /** Streams a suite leaves running would still be alive at JVM exit and
     * race the executor teardown (a spurious INTERNAL_ERROR one second
-    * before "Run completed"); stop them when the suite closes. Uses the
-    * default session so a suite that never touched `spark` doesn't build
-    * one here. */
+    * before "Run completed"); stop them when the suite closes, then
+    * delete its temp dirs and files (the streams may still write into
+    * them until they stop). Uses the default session so a suite that
+    * never touched `spark` doesn't build one here. */
   override protected def afterAll(): Unit = {
-    SparkSession.getDefaultSession.foreach { s =>
-      val active = s.streams.active
-      if (active.nonEmpty) {
-        s.sparkContext.setLogLevel("OFF")
-        try {
-          active.foreach(q => scala.util.Try(q.stop()))
-          Thread.sleep(200)
-        } finally s.sparkContext.setLogLevel("WARN")
+    try {
+      SparkSession.getDefaultSession.foreach { s =>
+        val active = s.streams.active
+        if (active.nonEmpty) {
+          s.sparkContext.setLogLevel("OFF")
+          try {
+            active.foreach(q => scala.util.Try(q.stop()))
+            Thread.sleep(200)
+          } finally s.sparkContext.setLogLevel("WARN")
+        }
       }
+    } finally {
+      temps.forEach(d => graft.core.TempDirs.rmTree(d))
+      temps.clear()
+      super.afterAll()
     }
-    super.afterAll()
   }
 
   /** Sink output with the encoder-Close blank line trimmed: the CSV and

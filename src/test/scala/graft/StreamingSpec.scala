@@ -27,9 +27,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watch tail streams newly appended rows (reference watch semantics)") {
-    val dir = Files.createTempDirectory("graft_watch").toString
-    val out = Files.createTempDirectory("graft_watch_out").toString
-    val ck = Files.createTempDirectory("graft_ck").toString
+    val dir = tempDir("graft_watch")
+    val out = tempDir("graft_watch_out")
+    val ck = tempDir("graft_ck")
     // initial file
     Seq(("t1", 1L, 1.0)).toDF("name", "time", "value")
       .write.mode("append").parquet(dir)
@@ -50,8 +50,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tailEvents yields appended batches through the SSE iterator") {
-    val dir = Files.createTempDirectory("graft_sse").toString
-    val ck = Files.createTempDirectory("graft_sse_ck").toString
+    val dir = tempDir("graft_sse")
+    val ck = tempDir("graft_sse_ck")
     Seq(("t1", 1L, 1.0)).toDF("name", "time", "value")
       .write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -69,9 +69,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupWithin drops re-sent (name, time) rows inside the window (TAG_DUPLICATE_CHECK_DURATION)") {
-    val dir = Files.createTempDirectory("graft_dup").toString
-    val out = Files.createTempDirectory("graft_dup_out").toString
-    val ck = Files.createTempDirectory("graft_dup_ck").toString
+    val dir = tempDir("graft_dup")
+    val out = tempDir("graft_dup_out")
+    val ck = tempDir("graft_dup_ck")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(s: Int) = new java.sql.Timestamp(base.getTime + s * 1000L)
     // duplicates within one batch AND across files
@@ -94,9 +94,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedupWithin re-admits a duplicate once the check DURATION has passed") {
-    val dir = Files.createTempDirectory("graft_dup2").toString
-    val out = Files.createTempDirectory("graft_dup2_out").toString
-    val ck = Files.createTempDirectory("graft_dup2_ck").toString
+    val dir = tempDir("graft_dup2")
+    val out = tempDir("graft_dup2_out")
+    val ck = tempDir("graft_dup2_ck")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(s: Int) = new java.sql.Timestamp(base.getTime + s * 1000L)
     def runAvailable(): Unit = {
@@ -133,9 +133,9 @@ class StreamingSpec extends SparkSpec {
 
   test("curated stream gates quality, dedups content, scrubs PII") {
     import graft.streaming.CuratedStream
-    val dir = Files.createTempDirectory("graft_cur").toString
-    val out = Files.createTempDirectory("graft_cur_out").toString
-    val ck = Files.createTempDirectory("graft_cur_ck").toString
+    val dir = tempDir("graft_cur")
+    val out = tempDir("graft_cur_out")
+    val ck = tempDir("graft_cur_ck")
     Seq(
       (1L, "a good document with enough distinct words to pass easily today"),
       (2L, "too short"),
@@ -279,7 +279,7 @@ class StreamingSpec extends SparkSpec {
     // a failure/restart. The batchId-keyed publish must be idempotent —
     // duplicate partial rows would double-count sum/sumsq/cnt in every
     // routed rollup query.
-    val dir = Files.createTempDirectory("graft_pub").toString
+    val dir = tempDir("graft_pub")
     val df = Seq(("a", 1L, 1.0), ("b", 2L, 2.0)).toDF("name", "time_ns", "value")
     Watch.publishBatch(df, dir, 0L)
     Watch.publishBatch(df, dir, 0L) // replayed batch → same files, no dupes
@@ -357,9 +357,9 @@ class StreamingSpec extends SparkSpec {
 
   test("maintainRollup advances the routing horizon; routed queries stay exact during lag") {
     import graft.time.TimeFns
-    val rawDir = Files.createTempDirectory("graft_mroll_raw").toString
-    val rollDir = Files.createTempDirectory("graft_mroll").toString + "/r"
-    val ck = Files.createTempDirectory("graft_mroll_ck").toString
+    val rawDir = tempDir("graft_mroll_raw")
+    val rollDir = tempDir("graft_mroll") + "/r"
+    val ck = tempDir("graft_mroll_ck")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(sec: Int) = new java.sql.Timestamp(base.getTime + sec * 1000L)
     // rolled era: one row at :30 of each of minutes 0-9; the last event
@@ -413,10 +413,10 @@ class StreamingSpec extends SparkSpec {
 
   test("maintainRollup cascades a coarse tier from the fine one (hierarchical ladder)") {
     import graft.time.TimeFns
-    val rawDir = Files.createTempDirectory("graft_tier_raw").toString
-    val minDir = Files.createTempDirectory("graft_tier_fine").toString + "/r"
-    val hourDir = Files.createTempDirectory("graft_tier_coarse").toString + "/r"
-    val ck = Files.createTempDirectory("graft_tier_ck").toString
+    val rawDir = tempDir("graft_tier_raw")
+    val minDir = tempDir("graft_tier_fine") + "/r"
+    val hourDir = tempDir("graft_tier_coarse") + "/r"
+    val ck = tempDir("graft_tier_ck")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(sec: Int) = new java.sql.Timestamp(base.getTime + sec * 1000L)
     // one row at :30 of each of minutes 0..130 — the stream closes fine
@@ -498,9 +498,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("zscoreStream state survives a restart: spike detected against pre-restart baseline") {
-    val raw = Files.createTempDirectory("graft_zs_raw").toString
-    val out = Files.createTempDirectory("graft_zs_out").toString + "/o"
-    val ck = Files.createTempDirectory("graft_zs_ck").toString
+    val raw = tempDir("graft_zs_raw")
+    val out = tempDir("graft_zs_out") + "/o"
+    val ck = tempDir("graft_zs_ck")
     def rows(r: Range) = r.map { i =>
       ("t", i.toLong * 1000000000L, if (i == 30) 500.0 else 10.0 + (i % 5) * 0.1)
     }.toDF("name", "time", "value") // epoch-ns LongType tag shape
@@ -532,9 +532,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("movavgStream with stateTtl: window buffer survives a checkpointed restart") {
-    val raw = Files.createTempDirectory("graft_ma_raw").toString
-    val out = Files.createTempDirectory("graft_ma_out").toString + "/o"
-    val ck = Files.createTempDirectory("graft_ma_ck").toString
+    val raw = tempDir("graft_ma_raw")
+    val out = tempDir("graft_ma_out") + "/o"
+    val ck = tempDir("graft_ma_ck")
     def rows(r: Range) = r.map(i => ("t", i.toLong * 1000000000L, (i + 1).toDouble))
       .toDF("name", "time", "value")
     rows(0 until 3).write.mode("append").parquet(raw)
@@ -562,9 +562,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("kalmanStream with stateTtl: (x,p) register survives a checkpointed restart") {
-    val raw = Files.createTempDirectory("graft_ka_raw").toString
-    val out = Files.createTempDirectory("graft_ka_out").toString + "/o"
-    val ck = Files.createTempDirectory("graft_ka_ck").toString
+    val raw = tempDir("graft_ka_raw")
+    val out = tempDir("graft_ka_out") + "/o"
+    val ck = tempDir("graft_ka_ck")
     def rows(r: Range) = r.map(i =>
         ("t", i.toLong * 1000000000L, 10.0 + (i % 7) * 1.5))
       .toDF("name", "time", "value")
@@ -596,9 +596,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("distanceStream: previous point + running total survive a checkpointed restart") {
-    val raw = Files.createTempDirectory("graft_di_raw").toString
-    val out = Files.createTempDirectory("graft_di_out").toString + "/o"
-    val ck = Files.createTempDirectory("graft_di_ck").toString
+    val raw = tempDir("graft_di_raw")
+    val out = tempDir("graft_di_out") + "/o"
+    val ck = tempDir("graft_di_ck")
     // eastward walk along the equator: 1° of longitude per step
     def rows(r: Range) = r.map(i =>
         ("t", i.toLong * 1000000000L, 0.0, i.toDouble))
@@ -630,9 +630,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("quotaAdmit: per-key admission counter crosses a checkpointed restart") {
-    val raw = Files.createTempDirectory("graft_qa_raw").toString
-    val out = Files.createTempDirectory("graft_qa_out").toString + "/o"
-    val ck = Files.createTempDirectory("graft_qa_ck").toString
+    val raw = tempDir("graft_qa_raw")
+    val out = tempDir("graft_qa_out") + "/o"
+    val ck = tempDir("graft_qa_ck")
     def rows(ids: Seq[Long], key: String) =
       ids.map(i => (key, i)).toDF("source", "doc_id")
     rows(0L until 6L, "a").write.mode("append").parquet(raw)
@@ -691,8 +691,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("rollupStream aggregates tumbling event-time windows") {
-    val dir = Files.createTempDirectory("graft_roll").toString
-    val ck = Files.createTempDirectory("graft_ck2").toString
+    val dir = tempDir("graft_roll")
+    val ck = tempDir("graft_ck2")
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def ts(sec: Int) = new java.sql.Timestamp(base.getTime + sec * 1000L)
     Seq(("a", ts(1), 1.0), ("a", ts(2), 3.0), ("a", ts(61), 5.0))

@@ -48,7 +48,7 @@ class SubscriberDispatchSpec extends SparkSpec {
   // ---- file-queue dispatch ------------------------------------------------
 
   private def tmpQueue(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("graft_subq")
+    java.nio.file.Paths.get(tempDir("graft_subq"))
 
   test("db/write destination ingests each message payload") {
     TagTables.resetDynamicForTest(spark)

@@ -12,7 +12,7 @@ class TagLayoutSpec extends SparkSpec {
   import spark.implicits._
 
   test("day+bucket layout prunes partitions for the canonical tag query") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/t"
+    val dir = tempDir("graft_layout") + "/t"
     val day0 = 1704067200000000000L // 2024-01-01 UTC, ns
     // 4 tags × 3 days × 24 points
     val rows = for {

@@ -31,7 +31,7 @@ class Tql3Spec extends SparkSpec {
   }
 
   test("CSV file source with typed pipeline end-to-end") {
-    val f = Files.createTempFile("graft_tql", ".csv")
+    val f = tempFile("graft_tql", ".csv")
     Files.writeString(f, "alpha,1,10.5\nbeta,2,20.25\ngamma,3,30.125\n")
     val out = runTrim(
       s"""CSV(file('${f.toString}'))
@@ -104,7 +104,7 @@ class Tql3Spec extends SparkSpec {
   }
 
   test("STRING source reads file() content") {
-    val f = java.nio.file.Files.createTempFile("graft_str", ".txt")
+    val f = tempFile("graft_str", ".txt")
     java.nio.file.Files.writeString(f, "l1\nl2\nl3")
     val out = runTrim(
       s"""STRING(file('$f'), separator('\\n'))

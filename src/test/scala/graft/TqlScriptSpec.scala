@@ -374,7 +374,7 @@ class TqlScriptSpec extends SparkSpec {
   test("CSV_file and CSV_file_gz: untyped file with DROP/TAKE (tql_test.go:1231-1258)") {
     val iris = "/root/reference/mods/tql/test/iris.data"
     // gzip a copy for the gz variant
-    val gz = java.nio.file.Files.createTempFile("iris", ".data.gz")
+    val gz = tempFile("iris", ".data.gz")
     val os = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
     os.write(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(iris)))
     os.close()

@@ -30,7 +30,7 @@ class UserFilesSpec extends SparkSpec {
     QueryDoor.execute(spark,
       """create tag table test_uf (NAME varchar(200) primary key, TIME datetime basetime,
         |VALUE double summarized, EXT_DATA json)""".stripMargin.replace("\n", " "))
-    val store = Files.createTempDirectory("graft_store").toString
+    val store = tempDir("graft_store")
     try {
       val img = Array.tabulate[Byte](12692)(i => (i % 251).toByte)
       val watcher = new PollWatch.Watcher(spark, "test_uf", Seq("test"))
@@ -100,7 +100,7 @@ class UserFilesSpec extends SparkSpec {
         """create tag table test_uf_fail (NAME varchar(200) primary key,
           |TIME datetime basetime, VALUE double summarized,
           |EXT_DATA integer)""".stripMargin.replace("\n", " "))
-      val failStore = Files.createTempDirectory("graft_store_fail")
+      val failStore = java.nio.file.Paths.get(tempDir("graft_store_fail"))
       try {
         intercept[Exception](
           UserFiles.writeMultipart(spark, "test_uf_fail",

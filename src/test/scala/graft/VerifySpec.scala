@@ -9,7 +9,7 @@ import java.nio.file.Files
 class VerifySpec extends SparkSpec {
 
   test("dump removes a failed builder's stale output and reports its name") {
-    val out = Files.createTempDirectory("verify_spec").toFile
+    val out = new java.io.File(tempDir("verify_spec"))
     try {
       val stale = new java.io.File(out, "q_bad")
       stale.mkdirs()

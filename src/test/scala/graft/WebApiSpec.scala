@@ -174,7 +174,7 @@ class WebApiSpec extends SparkSpec {
   }
 
   test("/web/api/timers REST lifecycle envelopes (http_facility_test.go TestTimer)") {
-    val root = java.nio.file.Files.createTempDirectory("timer_rest_root")
+    val root = java.nio.file.Paths.get(tempDir("timer_rest_root"))
     java.nio.file.Files.write(root.resolve("csv_map.tql"),
       "FAKE(linspace(0,1,2))\nCSV()\n".getBytes("UTF-8"))
     val prevRoot = graft.tql.Compiler.templateRoot

@@ -29,8 +29,8 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered layout prunes row groups on BOTH dimensions") {
-    val dirZ = Files.createTempDirectory("graft_z").toString
-    val dirShred = Files.createTempDirectory("graft_shred").toString
+    val dirZ = tempDir("graft_z")
+    val dirShred = tempDir("graft_shred")
     // 200k points on a 1024×1024 grid, deterministic pseudo-random spread
     val pts = spark.range(200000).select(
       pmod(col("id") * 2654435761L, lit(1024L)).as("x"),
