@@ -64,6 +64,11 @@ object Bench {
   private[graft] def tablesJson(c: graft.core.Tables.Counts): String =
     s"""{"resolved":${c.resolved},"reused":${c.reused}}"""
 
+  /** The record's `"codegen"` object: the classes the query sweep
+    * compiled and their compile time (full record only). */
+  private[graft] def codegenJson(c: graft.core.Codegen.Counts): String =
+    s"""{"compiles":${c.compiles},"ms":${BigDecimal(c.ms).setScale(1, BigDecimal.RoundingMode.HALF_UP)}}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local()
@@ -168,6 +173,7 @@ object Bench {
     val plans = scala.collection.mutable.LinkedHashMap[String, graft.core.PlanShape]()
     // a query that throws goes here, never into a total
     val failed = scala.collection.mutable.ArrayBuffer[String]()
+    val codegen0 = graft.core.Codegen.counts
     val results = SparkEntry.queries.flatMap { case (name, fn) =>
       var lastDf: DataFrame = null
       val runs = (1 to 2).map { _ =>
@@ -194,6 +200,7 @@ object Bench {
       cohorts += s"""{"upto":$sweepIdx,"gc_ms":${ms - cohortGcMs},""" +
         s""""gc_n":${n - cohortGcN},"heap_mb":${heapMb()}}"""
     }
+    val codegen = graft.core.Codegen.counts - codegen0
     val audit = plans.values.foldLeft(graft.core.PlanShape.zero)(_ + _)
     // single-partition windows are the 100-TB anti-pattern: MUST stay 0
     if (audit.globalWindows > 0)
@@ -326,7 +333,7 @@ object Bench {
       .map { case (k, (f, kn)) =>
         s"\"" + k + s"\":{\"fixed\":${d3(f)},\"kernel\":${d3(kn)}}"
       }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"tables":${tablesJson(graft.core.Tables.counts)},"failed":$failedJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"tables":${tablesJson(graft.core.Tables.counts)},"codegen":${codegenJson(codegen)},"failed":$failedJson,"sf":"$sfDir"}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) =>

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.ListenerBus
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import scala.jdk.CollectionConverters._
-import graft.core.PlanShape
+import graft.core.{Codegen, PlanShape}
 import graft.queries.StreamRun
 
 /** Dev profiler: times named gate queries best-of-`runs` at `sfDir`,
@@ -19,7 +19,9 @@ import graft.queries.StreamRun
   *    driver jobs) against execution time, the job, stage and task
   *    counts, and every stage whose tasks ran over 20 ms in total;
   *  - for streaming gates: StreamRun's fixed-vs-kernel split and each
-  *    micro-batch's `durationMs` buckets.
+  *    micro-batch's `durationMs` buckets;
+  *  - per run, `codegen compiles=N ms=M`: the classes the build and
+  *    execution compiled. A repeat run should compile none.
   * Writes nothing, so it never disturbs Bench's records.
   *
   * Usage: `sbt "runMain graft.Profile <sfDir> <runs> q_a [q_b …]"`,
@@ -36,7 +38,8 @@ object Profile {
   private final case class Run(sec: Double, buildSec: Double, jobs: Int,
                                stages: Seq[StageInfo],
                                splits: Map[String, (Double, Double)],
-                               batches: Seq[StreamingQueryProgress])
+                               batches: Seq[StreamingQueryProgress],
+                               codegen: Codegen.Counts)
 
   /** Profile `names` at `dir`, `runs` runs each, writing lines to `out`.
     * Every name is checked before anything runs. */
@@ -67,6 +70,7 @@ object Profile {
       var df: DataFrame = null
       val rs = (1 to runs).map { _ =>
         jobs.set(0); stages.clear(); batches.clear(); StreamRun.lastSplit.clear()
+        val c0 = Codegen.counts
         val t0 = System.nanoTime()
         df = fn(spark, dir)
         val t1 = System.nanoTime()
@@ -74,11 +78,14 @@ object Profile {
         val t2 = System.nanoTime()
         ListenerBus.drain(sc)
         Run((t2 - t0) / 1e9, (t1 - t0) / 1e9, jobs.get, stages.asScala.toSeq,
-          StreamRun.lastSplit.toMap, batches.asScala.toSeq)
+          StreamRun.lastSplit.toMap, batches.asScala.toSeq, Codegen.counts - c0)
       }
       val best = rs.minBy(_.sec)
       out(f"$name%-22s best=${best.sec}%.3f  runs=${rs.map(r => f"${r.sec}%.2f").mkString(",")}")
       out(s"  shape ${PlanShape.of(df).json}")
+      rs.zipWithIndex.foreach { case (r, i) =>
+        out(f"  codegen compiles=${r.codegen.compiles} ms=${r.codegen.ms}%.1f (run ${i + 1})")
+      }
       out(f"  build=${best.buildSec}%.3f exec=${best.sec - best.buildSec}%.3f")
       out(s"  jobs=${best.jobs} stages=${best.stages.size} tasks=${best.stages.map(_.numTasks).sum}")
       best.stages.sortBy(_.stageId).foreach { si =>

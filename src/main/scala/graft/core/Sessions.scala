@@ -11,9 +11,31 @@ import org.apache.spark.sql.SparkSession
   *    representation is epoch nanoseconds, like the reference's `datetime`
   *    (reference: machbase/neo-server `mods/server/http_write.go:56`,
   *    default `timeformat=ns`),
-  *  - AQE on (runtime shuffle coalescing + skew-join handling at scale).
+  *  - AQE on (runtime shuffle coalescing + skew-join handling at scale),
+  *  - each generated class compiled once per JVM. Spark caches the
+  *    classes Janino compiles, keyed on the thread's class loader and
+  *    the source text, in an LRU of `spark.sql.codegen.cache.maxEntries`
+  *    entries (default 100). A cyclic workload whose pass needs more
+  *    classes than that (an analytics sweep pass needs ~160) evicts
+  *    every entry before its reuse and recompiles them all on each
+  *    pass, so the bound is raised to [[CodegenCacheEntries]].
+  *    Artifact isolation gives every cloned session (each stream runs
+  *    in one) a class loader of its own, so a stream's byte-identical
+  *    classes missed the cache on every run; graft adds no session
+  *    artifacts (no `addArtifact`, `newSession` or `cloneSession` of its
+  *    own), so isolation is off and every session shares the JVM's
+  *    loader. Literal values stay inlined into the source, so a query
+  *    that differs only in a literal is a new class; the bound holds the
+  *    serving mix's small literal sets after warm-up.
   */
 object Sessions {
+  /** Codegen cache bound: above the distinct classes of one sf0.01
+    * Verify of every gate query (~2100), so the ~160 of an analytics pass
+    * or the ~70 of the serving mix never evict each other; a compiled
+    * class costs a few to tens of KB. Read once per JVM, when Spark's
+    * code generator first loads. */
+  val CodegenCacheEntries = 4096
+
   /** Apply graft defaults to a builder; caller picks master/parallelism. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
@@ -36,6 +58,8 @@ object Sessions {
     // reference's charset() option)
     .config("spark.sql.legacy.javaCharsets", "true")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** Install graft's optimizer rules on an existing session. Safe by
     * default: rollup routing is a no-op until a rollup is registered. */

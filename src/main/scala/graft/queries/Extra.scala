@@ -13,16 +13,12 @@ import Q._
 object Extra {
   private val DayFromUs = 1704412800L * 1000000L
   private val DayUntilUs = DayFromUs + 86400L * 1000000L
-  private val rollupCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val logCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val rollupCache = new graft.core.Once[String]
+  private val logCache = new graft.core.Once[String]
   /** deterministic ingest lag used by q_log_tail's arrival stamps. */
   private val ArrivalSkewNs = 5000000000L
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.similarity.Ivf.Index]
-  private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.similarity.Pq.Index]
+  private val ivfCache = new graft.core.Once[graft.similarity.Ivf.Index]
+  private val pqCache = new graft.core.Once[graft.similarity.Pq.Index]
 
   /** The batch-built rollup `tier` of the raw events at `rawPath`, built
     * once per (JVM, source, `name`) under a `name`-prefixed temp dir:
@@ -32,14 +28,14 @@ object Extra {
   private def rollupTier(s: SparkSession, rawPath: String,
                          name: String, tier: String,
                          beforeNs: Option[Long] = None): String =
-    rollupCache.getOrElseUpdate(s"$rawPath#$name", {
+    rollupCache(s"$rawPath#$name") {
       val raw = graft.core.Tables.read(s, rawPath)
       val d = graft.core.TempDirs.forJvm(name) + "/r"
       graft.operators.Lake.rollup(beforeNs.fold(raw)(h => raw.filter(tsNs(raw) < h)),
           col("user_id"), tsNs(raw), col("value"), tier)
         .write.mode("overwrite").parquet(d)
       d
-    })
+    }
 
   /** Per-(user, `widthNs` bucket) min/max/sum/count of `raw`'s values —
     * the aggregate shape the rollup routing rule answers from a tier;
@@ -219,7 +215,7 @@ object Extra {
     // from the streamed rollup, the final open hour from the raw tail.
     "q_rollup_stream" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
-      val rollDir = rollupCache.getOrElseUpdate(rawPath + "#stream", {
+      val rollDir = rollupCache(rawPath + "#stream") {
         val d = graft.core.TempDirs.forJvm("graft_rstream") + "/r"
         val schema = graft.core.Tables.read(s, rawPath).schema
         StreamRun.run("q_rollup_stream")(ck =>
@@ -227,7 +223,7 @@ object Extra {
             "user_id", "ts", "value", "1 hour", "0 seconds",
             graft.time.TimeFns.NsPerHour, d, ck))
         d
-      })
+      }
       graft.plans.RollupRouting.load(s, rollDir) // registration from the artifact
       bucketStats(graft.core.Tables.read(s, rawPath), graft.time.TimeFns.NsPerDay, "day")
         .orderBy("user_id", "day_us")
@@ -241,7 +237,7 @@ object Extra {
     // skipping — which is what a 100 TB log tail actually exercises.
     "q_log_tail" -> ((s, dir) => {
       val rawPath = s"$dir/events.parquet"
-      val logDir = logCache.getOrElseUpdate(rawPath, {
+      val logDir = logCache(rawPath) {
         val raw = t(s, dir, "events")
         val d = graft.core.TempDirs.forJvm("graft_log") + "/l"
         // stamp from the µs-truncated ts: DuckDB reads parquet ns
@@ -251,7 +247,7 @@ object Extra {
           raw.withColumn("_arrival_time",
             graft.time.TimeFns.nsToUs(tsNs(raw)) * 1000L + lit(ArrivalSkewNs)), d)
         d
-      })
+      }
       val fromNs = DayFromUs * 1000L
       val untilNs = fromNs + 3L * 86400L * 1000000000L
       graft.sinks.TableSinks.scanLogTable(s, logDir, fromNs, untilNs)
@@ -289,7 +285,7 @@ object Extra {
       // an IVF index is built once offline and probed by every query —
       // cache the trained coarse quantizer per (JVM, corpus) like the
       // rollup build; the measured path is the nprobe search
-      val index = ivfCache.getOrElseUpdate(s"$dir/embeddings.parquet",
+      val index = ivfCache(s"$dir/embeddings.parquet")(
         graft.similarity.Ivf.train(emb, k = 8, iters = 3))
       val q = emb.filter(col("vec_id") < 5)
       graft.similarity.Ann.recallAtK(
@@ -303,7 +299,7 @@ object Extra {
     // hash-matched oracle while the approximate mode stays recall-spec'd
     "q_ann_ivf_full" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val index = ivfCache.getOrElseUpdate(s"$dir/embeddings.parquet",
+      val index = ivfCache(s"$dir/embeddings.parquet")(
         graft.similarity.Ivf.train(emb, k = 8, iters = 3))
       graft.similarity.Ivf.topK(emb.filter(col("vec_id") < 5), emb, index,
           k = 10, nprobe = index.k)
@@ -319,7 +315,7 @@ object Extra {
     // factor=4; bound 0.3 leaves one-hit margin)
     "q_ann_pq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val index = pqCache.getOrElseUpdate(s"$dir/embeddings.parquet",
+      val index = pqCache(s"$dir/embeddings.parquet")(
         graft.similarity.Pq.train(emb, m = 16, ksub = 16, iters = 3))
       val codes = graft.similarity.Pq.encode(emb, index)
       val q = emb.filter(col("vec_id") < 5)
@@ -335,7 +331,7 @@ object Extra {
     // the approximate mode stays recall-spec'd (mirrors q_ann_ivf_full)
     "q_ann_pq_full" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val index = pqCache.getOrElseUpdate(s"$dir/embeddings.parquet",
+      val index = pqCache(s"$dir/embeddings.parquet")(
         graft.similarity.Pq.train(emb, m = 16, ksub = 16, iters = 3))
       val codes = graft.similarity.Pq.encode(emb, index)
       graft.similarity.Pq.topKRerank(emb.filter(col("vec_id") < 5), codes, emb,

@@ -9,6 +9,14 @@ import Q._
   * step 10; reference mods/tql).
   */
 object TqlQueries {
+  /** Where the file-source gates write their fixtures: one dir per JVM,
+    * deleted at exit (the returned frames read the files lazily). */
+  private[graft] lazy val fixtureDir: java.nio.file.Path =
+    java.nio.file.Paths.get(graft.core.TempDirs.forJvm("graft_tql_fixtures"))
+  /** Each fixture file, written once per (JVM, source dir, gate): its
+    * content depends only on the source dir's tables. */
+  private val fixtures = new graft.core.Once[java.nio.file.Path]
+
   val defs: Map[String, QueryFn] = Map(
     // SQL source → GROUP → (CSV sink shape); compiled, not interpreted
     "q_tql_group" -> ((s, dir) => {
@@ -109,15 +117,17 @@ object TqlQueries {
     // collect here is FIXTURE construction bounded to 1% of users —
     // the measured operator is the CSV read, not this writer.
     "q_tql_csvfile" -> ((s, dir) => {
-      val e0 = t(s, dir, "events")
-      val rows = e0.filter(col("user_id") < 10)
-        .select(col("event_id"), col("event_type"), col("value"))
-        .orderBy("event_id")
-        .collect()
-      val tmp = java.nio.file.Files.createTempFile("graft_gate_csv", ".csv")
-      val body = rows.map(r =>
-        s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}").mkString("\n")
-      java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
+      val tmp = fixtures(s"$dir#csv") {
+        val rows = t(s, dir, "events").filter(col("user_id") < 10)
+          .select(col("event_id"), col("event_type"), col("value"))
+          .orderBy("event_id")
+          .collect()
+        val body = rows.map(r =>
+          s"${r.getLong(0)},${r.getString(1)},${r.getDouble(2)}").mkString("\n")
+        java.nio.file.Files.write(
+          java.nio.file.Files.createTempFile(fixtureDir, "graft_gate_csv", ".csv"),
+          body.getBytes("UTF-8"))
+      }
       Tql.compile(s,
         s"""CSV(file('$tmp'), field(0, doubleType(), 'event_id'), field(1, stringType(), 'event_type'), field(2, doubleType(), 'value'))
            |FILTER(value(2) > 100)
@@ -132,11 +142,14 @@ object TqlQueries {
     // aggregated downstream (also oracles the count-all semantics).
     // The collect is fixture construction bounded to 1% of users.
     "q_tql_string_src" -> ((s, dir) => {
-      val e0 = t(s, dir, "events")
-      val lines = e0.filter(col("user_id") < 10).orderBy("event_id")
-        .select(col("event_type")).collect().map(_.getString(0))
-      val tmp = java.nio.file.Files.createTempFile("graft_gate_str", ".txt")
-      java.nio.file.Files.write(tmp, lines.mkString("\n").getBytes("UTF-8"))
+      val tmp = fixtures(s"$dir#str") {
+        val e0 = t(s, dir, "events")
+        val lines = e0.filter(col("user_id") < 10).orderBy("event_id")
+          .select(col("event_type")).collect().map(_.getString(0))
+        java.nio.file.Files.write(
+          java.nio.file.Files.createTempFile(fixtureDir, "graft_gate_str", ".txt"),
+          lines.mkString("\n").getBytes("UTF-8"))
+      }
       Tql.compile(s,
         s"""STRING(file('$tmp'), separator('\\n'))
            |GROUP(by(value(0), 'etype'), count(value(0), 'cnt'))

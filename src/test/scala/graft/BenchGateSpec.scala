@@ -48,4 +48,10 @@ class BenchGateSpec extends AnyFunSuite {
     val j = Bench.tablesJson(graft.core.Tables.Counts(resolved = 10, reused = 2070))
     assert(j == """{"resolved":10,"reused":2070}""")
   }
+
+  test("the full record carries the sweep's codegen compile count and time") {
+    val j = Bench.codegenJson(graft.core.Codegen.Counts(compiles = 126, nanos = 661250000L))
+    assert(j == """{"compiles":126,"ms":661.3}""")
+    assert(Bench.codegenJson(graft.core.Codegen.Counts(0, 0)) == """{"compiles":0,"ms":0.0}""")
+  }
 }
