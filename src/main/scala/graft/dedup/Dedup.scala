@@ -241,21 +241,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Deterministic MinHash signature: k universal-hash permutations over
-    * xxhash64 of each shingle — h_j(S) = min_{s∈S} (a_j·x(s)+b_j mod p).
-    * The base hash is computed once per shingle; each permutation is a
-    * cheap affine transform of it. Pure expression tree; codegen'd. */
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    val p = 2147483647L // 2^31-1, Mersenne prime
-    val base = transform(shingles, s => pmod(xxhash64(s), lit(p)))
-    val cols = (0 until numHashes).map { j =>
-      val a = 1103515245L * (j + 1) % p
-      val b = 12345L + 7919L * j
-      array_min(transform(base, x => pmod(x * a + b, lit(p))))
-    }
-    array(cols: _*)
-  }
-
   /** The (id, band, bucket) LSH keying of already-signed docs: band b's
     * bucket is xxhash64(comma-joined signature slice, seed b). Shared by
     * [[minhashLshPairs]] and the bucket-stats audit — identical keying
@@ -398,7 +383,4 @@ object Dedup {
     docs.withColumn("simhash",
       org.apache.spark.sql.functions.call_function("simhash_md5", text))
   }
-
-  /** Hamming distance between two simhash values (near-dup test). */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

@@ -26,10 +26,6 @@ object ScalarFns {
     "element" -> "element_at", "list" -> "array", "dict" -> "map",
     "nullValue" -> "coalesce", "random" -> "rand")
 
-  /** exp2 / pow10 (reference fx_definitions.go:90,97). */
-  def exp2(x: Column): Column = pow(lit(2d), x)
-  def pow10(x: Column): Column = pow(lit(10d), x)
-
   /** Go-style glob match (reference `glob(pattern, text)`,
     * fm_monad.go:2144-2169): `*` and `?` wildcards → anchored regex. */
   def globToRegex(pattern: String): String =

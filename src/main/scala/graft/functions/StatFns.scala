@@ -12,14 +12,8 @@ import org.apache.spark.sql.functions._
   * aggregate.
   */
 object StatFns {
-  /** √(Σx²) (reference fm_monad.go:1425-1449). */
-  def rss(x: Column): Column = sqrt(sum(x * x))
-
   /** √(Σx²/n). */
   def rms(x: Column): Column = sqrt(avg(x * x))
-
-  /** Standard error of the mean: σ/√n (reference fm_monad.go:1351-1356). */
-  def stderrAgg(x: Column): Column = stddev_samp(x) / sqrt(count(x))
 
   /** Shannon-style entropy over raw values, gonum stat.Entropy semantics:
     * -Σ v·ln v with v==0 contributing 0 (reference fm_monad.go:1357-1361). */
@@ -73,10 +67,6 @@ object StatFns {
 
   /** Exact interpolated quantile (gonum LinInterp ≈ SQL percentile). */
   def quantileInterpolated(x: Column, p: Double): Column = percentile(x, lit(p))
-
-  /** Approximate quantile — the 100 TB path (t-digest style sketch). */
-  def quantileApprox(x: Column, p: Double): Column =
-    percentile_approx(x, lit(p), lit(10000))
 
   def median(x: Column): Column = percentile(x, lit(0.5))
 }

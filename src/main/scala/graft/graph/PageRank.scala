@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
+import graft.functions.Rounding.fround
 
 /** Distributed PageRank over an edge relation — the centrality pass of a
   * document-similarity graph (e.g. near-dup edges from
@@ -34,11 +35,6 @@ object PageRank {
     * the eager materialization, shallow enough that the optimizer never
     * sees more than ~5 iterations of plan. */
   private val CheckpointEvery = 5
-
-  private def fr(c: Column, scale: Int): Column = {
-    val p = math.pow(10d, scale.toDouble)
-    floor(c * p + 0.5d) / p
-  }
 
   /** @param nodes single-column vertex relation (column `v`)
     * @param edges directed edge relation (columns `src`, `dst`);
@@ -74,12 +70,12 @@ object PageRank {
         val contrib = adj
           .join(ranks.withColumnRenamed("v", "src"), "src")
           .select(explode(col("dsts")).as("v"),
-            fr(col("r") / size(col("dsts")), 12).cast("decimal(38,12)").as("c"))
+            fround(col("r") / size(col("dsts")), 12).cast("decimal(38,12)").as("c"))
           .groupBy(col("v"))
           .agg(sum(col("c")).cast("double").as("s"))
         ranks = nodes.join(contrib, Seq("v"), "left")
           .select(col("v"),
-            fr(lit(reset) + lit(d) * coalesce(col("s"), lit(0d)), 9).as("r"))
+            fround(lit(reset) + lit(d) * coalesce(col("s"), lit(0d)), 9).as("r"))
         it += 1
         // lineage truncation: without it each iteration's plan embeds the
         // whole previous plan and DRIVER planning time grows superlinearly

@@ -24,17 +24,6 @@ object Multimodal {
     StructField("height", IntegerType),
     StructField("n_bytes", LongType)))
 
-  /** Wrap a binary column with extracted metadata (header sniffing is a
-    * cheap codegen-friendly expression — no decode needed). */
-  def withMeta(df: DataFrame, bin: String): DataFrame = df.withColumn("meta", struct(
-    when(substring(col(bin), 1, 3) === lit(Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte)), "image/jpeg")
-      .when(substring(col(bin), 1, 4) === lit("PNG".getBytes("ISO-8859-1")), "image/png")
-      .when(substring(col(bin), 1, 4) === lit("RIFF".getBytes("ISO-8859-1")), "audio/wav")
-      .otherwise("application/octet-stream").as("media_type"),
-    lit(null).cast(IntegerType).as("width"),   // filled by decode
-    lit(null).cast(IntegerType).as("height"),
-    octet_length(col(bin)).cast(LongType).as("n_bytes")))
-
   /** Feature-extraction output schema: id + fixed-size float vector. */
   def featureSchema(idField: StructField, dim: Int): StructType =
     StructType(Seq(idField, StructField("feature", ArrayType(FloatType, containsNull = false))))
@@ -567,9 +556,6 @@ object Multimodal {
     }
     bits
   }
-
-  /** Hamming distance between two aHash values (near-dup radius). */
-  def hammingDist64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 
   /** Per-payload perceptual hash over a binary media column: decode via
     * the real codecs, aHash the raster. Same batched mapPartitions shape

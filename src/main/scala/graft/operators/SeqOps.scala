@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
+import graft.functions.Rounding.fround
 
 /** Order-dependent sequential transforms (reference: mods/tql/fm_monad.go
   * MAP_DIFF family 1806-1906, MAP_AVG 1993-2021, MAP_MOVAVG 2023-2073,
@@ -231,14 +232,6 @@ object SeqOps {
     }
   }
 
-  /** THROTTLE(tps): pacing only matters on the streaming path — batch
-    * execution is a no-op, mirroring the reference's semantics of merely
-    * delaying record delivery (fm_monad.go:240-271). The streaming
-    * per-record pacing kernel is `graft.streaming.Subscribers.paced`
-    * (wrap a micro-batch partition iterator); coarse control is trigger
-    * intervals / maxFilesPerTrigger (see graft.streaming.Watch). */
-  def throttle(df: DataFrame, tps: Double): DataFrame = df
-
   /** Rolling z-score anomaly detection: each point scores against the
     * EXACT mean/std of its series' previous `window` points (the point
     * itself excluded — a contaminated baseline masks the very spike it
@@ -276,6 +269,6 @@ object SeqOps {
     withStats
       .filter(col("__n") === window && col("__v") > 0 && abs(z) > threshold)
       .select(col(nameCol), col(tsCol), col(valueCol),
-        (floor(z * 1e6 + 0.5d) / 1e6).as("zscore"))
+        fround(z, 6).as("zscore"))
   }
 }

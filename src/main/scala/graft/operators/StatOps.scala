@@ -112,37 +112,9 @@ object StatOps {
 
   // ---- full BOXPLOT statement kernel (fm_stat.go:294-533) --------------
 
-  /** gonum stat.Quantile over a SORTED array: Empirical = smallest v_i
-    * with (i+1)/n >= p; LinInterp = piecewise-linear CDF(v_i)=(i+1)/n. */
-  def quantileSorted(sorted: Array[Double], p: Double, linInterp: Boolean): Double =
-    if (!linInterp) sorted(math.max(math.ceil(p * sorted.length), 1).toInt - 1)
-    else {
-      val pos = math.max(p * sorted.length - 1.0, 0.0)
-      val k = pos.toInt
-      val f = pos - k
-      val lo = sorted(k)
-      val hi = sorted(math.min(k + 1, sorted.length - 1))
-      lo + (hi - lo) * f
-    }
-
   final case class BoxStats(min: Double, lower: Double, q1: Double, q2: Double,
                             q3: Double, upper: Double, max: Double, iqr: Double,
                             outliers: Seq[Double])
-
-  /** One category's box: quartiles with per-quartile interpolation flags
-    * (boxplotInterp), 1.5·IQR whiskers, outliers outside the bounds. */
-  def boxStats(values: Array[Double], interpQ1: Boolean, interpQ2: Boolean,
-               interpQ3: Boolean): BoxStats = {
-    val sorted = values.sorted
-    val q1 = quantileSorted(sorted, 0.25, interpQ1)
-    val q2 = quantileSorted(sorted, 0.5, interpQ2)
-    val q3 = quantileSorted(sorted, 0.75, interpQ3)
-    val iqr = q3 - q1
-    val lower = q1 - 1.5 * iqr
-    val upper = q3 + 1.5 * iqr
-    BoxStats(sorted.head, lower, q1, q2, q3, upper, sorted.last, iqr,
-      sorted.filter(v => v < lower || v > upper).toSeq)
-  }
 
   /** Category display order: explicit `order()` names first (in that
     * order), the rest ascending (fm_stat.go sortCategoryNames). */

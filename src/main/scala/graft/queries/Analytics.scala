@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.CorpusStats
 import Q._
+import graft.functions.Rounding.fround
 
 /** Corpus-statistics and event-analytics battery: per-doc entropy, PMI
   * collocations, per-source KL drift, source overlap matrix, asymmetric
@@ -39,7 +40,7 @@ object Analytics {
     "q_dsir_sample" -> ((s, dir) => {
       val scored = graft.text.Dsir.weightedScores(t(s, dir, "documents"),
           "doc_id", "text", col("source") === "src1")
-        .withColumn("w", floor(exp(col("dsir_score")) * 1e9 + 0.5) / 1e9)
+        .withColumn("w", fround(exp(col("dsir_score")), 9))
       graft.text.Curation.weightedSample(scored, "doc_id", "w", k = 50)
     }),
 
@@ -64,7 +65,7 @@ object Analytics {
       val scored = graft.text.QualityClassifier
         .trainAndScore(t(s, dir, "documents"), "doc_id", "text",
           col("lang") === "en")
-        .withColumn("w", floor(exp(col("score")) * 1e9 + 0.5) / 1e9)
+        .withColumn("w", fround(exp(col("score")), 9))
       graft.text.Curation.weightedSample(scored, "doc_id", "w", k = 50)
     }),
 
@@ -230,7 +231,7 @@ object Analytics {
           val wav = Multimodal.synthWav(codes, 16000, 64 + (id % 32).toInt)
           val w = Multimodal.decodeWav(wav).get
           Row(id, w.nSamples.toLong, w.peak.toLong,
-            math.floor(w.flips.toDouble / (w.nSamples - 1) * 1e6 + 0.5) / 1e6)
+            fround(w.flips.toDouble / (w.nSamples - 1), 6))
         }
       }(Encoders.row(featSchema)).orderBy("doc_id")
     }),

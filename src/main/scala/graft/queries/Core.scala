@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{MomentAgg, StatFns}
 import graft.operators.{RowOps, StatOps}
 import Q._
+import graft.functions.Rounding.fround
 
 /** Core relational + GROUP-aggregator query battery (SURVEY §2.2/§2.4/§2.5).
   * Each entry has a DuckDB oracle in [[Core.oracles]].

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{GapFill, SeqOps, StatOps}
 import graft.text.TextOps
 import Q._
+import graft.functions.Rounding.fround
 
 /** Second-wave battery: retain semantics, categorical histogram, classic
   * TPC-H shapes, spline fills and winnowing fingerprints.

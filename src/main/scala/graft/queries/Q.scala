@@ -26,16 +26,6 @@ object Q {
   def r4(c: Column): Column = round(c, 4)
   def r6(c: Column): Column = round(c, 6)
 
-  /** Float-deterministic rounding: floor(x·10^s + 0.5)/10^s executed in
-    * plain double ops. Unlike `round`, the identical instruction sequence
-    * runs on both engines, so values that land *exactly* on a rounding
-    * boundary (common for interpolated midpoints of already-rounded
-    * numbers) cannot diverge. Use for derived/interpolated outputs. */
-  def fround(c: Column, scale: Int): Column = {
-    val p = math.pow(10d, scale.toDouble)
-    floor(c * p + 0.5d) / p
-  }
-
   /** events.ts as epoch-ns long, regardless of reader config. The
     * driver's parquet has carried ns-int64 (→ LongType via nanosAsLong),
     * µs-adjusted (→ TimestampType) and µs-naive (→ TimestampNTZType)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.FftOp
 import graft.sources.Fake
 import Q._
+import graft.functions.Rounding.fround
 
 /** FAKE() generator + FFT battery (SURVEY §2.1 FAKE, §2.4 FFT).
   * Generators take no table input — the oracle recomputes the same math

@@ -6,6 +6,7 @@ import graft.text.TextOps
 import graft.dedup.Dedup
 import graft.similarity.Ann
 import Q._
+import graft.functions.Rounding.fround
 
 /** LLM-training-data pipeline battery: dedup, similarity search, text
   * analysis, multimodal plumbing — over `documents` / `embeddings`.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{GapFill, Lake, SeqOps}
 import graft.time.TimeFns
 import Q._
+import graft.functions.Rounding.fround
 
 /** Time-series query battery over the `events` table (SURVEY §2.1/§2.3/
   * §2.4 timewindow/§3.3 lake).
@@ -500,7 +501,9 @@ object TimeSeries {
         .groupBy("event_type")
         .agg((sum(when(col("value") <= col("approx_p50"), 1L).otherwise(0L))
           .cast("double") / count(lit(1))).as("below_frac"))
-      sk.join(frac, "event_type")
+      // both sides are a few rows: without the hint AQE builds whichever
+      // stage finishes first, and the plan differs from run to run
+      broadcast(sk).join(frac, "event_type")
         .select(col("event_type"), col("exact_users"),
           (abs(col("approx_users") - col("exact_users")) <=
             greatest(col("exact_users") * 0.16, lit(1.0))).as("distinct_ok"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import Q._
+import graft.functions.Rounding.fround
 
 /** Wave-16 battery: similarity-graph triangles, CCNet-style perplexity
   * bucketing, per-source caps, suffix boilerplate mining, vocabulary

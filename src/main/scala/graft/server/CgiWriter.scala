@@ -231,16 +231,6 @@ object CgiWriter {
       statusCode: Int, hasStatus: Boolean, contentType: String,
       location: String, headers: Vector[(String, String)])
 
-  /** First of `\r\n\r\n` / `\n\n` by position → (index, separator len). */
-  private[server] def findHeaderEnd(p: Array[Byte]): (Int, Int) = {
-    val s = new String(p, "ISO-8859-1")
-    val crlf = s.indexOf("\r\n\r\n")
-    val lf = s.indexOf("\n\n")
-    if (crlf >= 0 && (lf < 0 || crlf < lf)) (crlf, 4)
-    else if (lf >= 0) (lf, 2)
-    else (-1, 0)
-  }
-
   private def parseStatusLine(line: String): Option[Int] = {
     val fields = line.split("\\s+").filter(_.nonEmpty)
     if (fields.length < 2 || !fields(0).startsWith("HTTP")) None

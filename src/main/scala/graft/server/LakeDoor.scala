@@ -85,12 +85,6 @@ object LakeDoor {
     } else ""
   }
 
-  /** http_lake.go:1917-1926 */
-  def makeBetweenCondition(column: String, v1: String, v2: String, flag: Boolean): String = {
-    val r = s"$column BETWEEN $v1 AND $v2"
-    if (flag) " AND " + r else r
-  }
-
   /** http_lake.go:1928-1952 */
   def makeInCondition(column: String, values: Seq[String], flag: Boolean,
                       stringFlag: Boolean): String = {
@@ -148,27 +142,6 @@ object LakeDoor {
     val it = if (intervalType != "SEC" && intervalType != "MIN") "HOUR" else intervalType
     s"$timeColumn ROLLUP 1 $it $timeColumn, $calcType($valueColumn) $valueColumn"
   }
-
-  /** http_lake.go:1707-1716 */
-  def makeDateTrunc(intervalType: String, timeColumn: String, intervalValue: String): String =
-    intervalType match {
-      case "SEC" | "MIN" | "HOUR" => s"DATE_TRUNC('$intervalType', $timeColumn, $intervalValue)"
-      case "DAY" => s"$timeColumn / ($intervalValue*86400*1000000000) * ($intervalValue*86400*1000000000)"
-      case _ => ""
-    }
-
-  /** http_lake.go:1654-1676 — 0→ASC, 1→DESC. */
-  def makeOrderBy(columns: Seq[String], sortList: Seq[String]): String = {
-    val sorts = sortList.map { case "0" => "ASC"; case "1" => "DESC"; case s => s }
-    "ORDER BY " + columns.zip(sorts).map { case (c, s) => s"$c $s" }.mkString(", ")
-  }
-
-  /** http_lake.go:1678-1690 */
-  def makeGroupBy(columns: Seq[String]): String = "GROUP BY " + columns.mkString(", ")
-
-  /** http_lake.go:1650-1652 */
-  def makePivotCondition(column: String, inCondition: String): String =
-    s"PIVOT ($column FOR $inCondition)"
 
   /** http_lake.go:1857-1879 — pad a unix stamp out to 19 digits. */
   def makeNanoTimeStamp(time: String): String = {

@@ -383,9 +383,6 @@ object TagTables {
   private val dynamicMetaDescs = TrieMap.empty[String, Seq[ColDesc]]
   private val metaRows = TrieMap.empty[String, ArrayBuffer[Row]]
 
-  def metaDescriptorFor(table: String): Option[Seq[ColDesc]] =
-    dynamicMetaDescs.get(table.toLowerCase)
-
   private def metaViewName(t: String): String = s"_${t.toUpperCase}_META"
 
   private def metaSchema(t: String): StructType = {

@@ -41,9 +41,8 @@ object Ann {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Native-expression cosine (tight loop; bit-identical to `cosine`). */
+  /** Native-expression cosine (tight loop; bit-identical to
+    * `dot(a, b) / (norm(a) * norm(b))`). */
   private def fastCosine(df: DataFrame, a: Column, b: Column): Column =
     graft.functions.ArrayExprs.cosineSim(df.sparkSession, a, b)
 

@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.fround
 
 /** k-center greedy (farthest-point) selection — Gonzalez 1985's
   * 2-approximation for the k-center objective, the standard
@@ -49,7 +50,7 @@ object KCenter {
       selected :+= ((next.getLong(0), next.getSeq[Double](2), next.getDouble(1)))
     }
     selected.zipWithIndex.map { case ((id, _, d), i) =>
-      (i + 1L, id, math.floor(d * 1e6 + 0.5d) / 1e6)
+      (i + 1L, id, fround(d, 6))
     }.toDF("sel_order", idCol, "sel_dist")
   }
 }

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.Using
+import graft.functions.Rounding.fround
 
 /** Embedding-corpus statistics: oracle-deterministic Lloyd k-means and
   * robust (median/MAD) centroid-distance outlier detection — the
@@ -22,9 +23,6 @@ import scala.util.Using
   */
 object Kmeans {
   private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
-
-  private def round6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def round6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 
   /** Squared L2 distance to a centroid literal (the shared fold). */
   private def distSq(vec: Column, c: Array[Double]): Column =
@@ -83,7 +81,7 @@ object Kmeans {
       val norms = fin.map { c =>
         var s = 0d; var i = 0
         while (i < c.length) { s += c(i) * c(i); i += 1 }
-        round6(math.sqrt(s))
+        fround(math.sqrt(s), 6)
       }
       val nn = nearestStruct(col("v"), fin)
       // materialize the <=k-row result so the Lloyd relation's blocks
@@ -92,7 +90,7 @@ object Kmeans {
           nn.getField("d").as("dist"))
         .groupBy("cluster")
         .agg(count(lit(1)).as("n"), min("id").as("min_vec"),
-          sum(round6(col("dist")).cast("decimal(38,6)")).cast("double").as("inertia"))
+          sum(fround(col("dist"), 6).cast("decimal(38,6)")).cast("double").as("inertia"))
         .withColumn("c_norm",
           element_at(array(norms.map(lit): _*), (col("cluster") + 1).cast("int")))
         .select("cluster", "n", "min_vec", "c_norm", "inertia")
@@ -134,8 +132,8 @@ object Kmeans {
       // when the handle closes
       withDist.filter(abs(col("__dist") - med) > nMads * mad)
         .select((col(idCol) +: keepCols.map(col)) :+
-          round6(col("__dist")).as("dist") :+
-          round6(abs(col("__dist") - med)).as("dev"): _*)
+          fround(col("__dist"), 6).as("dist") :+
+          fround(abs(col("__dist") - med), 6).as("dev"): _*)
         .orderBy(idCol)
         .localCheckpoint(eager = true)
     }

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import graft.functions.Rounding.fround
 
 /** Embedding decomposition: distributed covariance accumulation, PCA by
   * driver-side power iteration over the d×d matrix, and a deterministic
@@ -20,10 +21,6 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructT
   * no RNG seed to disagree on.
   */
 object Pca {
-  private def fr(c: Column, scale: Int): Column = {
-    val p = math.pow(10d, scale.toDouble)
-    floor(c * p + 0.5d) / p
-  }
   private def toDouble(a: Column): Column = transform(a, x => x.cast("double"))
 
   /** Per-dimension decimal-exact means and the row count. */
@@ -48,7 +45,7 @@ object Pca {
     require(n >= 2, s"Pca.covariance: need >=2 rows, got $n")
     val pairs = for { i <- 0 until dims; j <- i until dims } yield (i, j)
     val aggs = pairs.map { case (i, j) =>
-      sum(fr((element_at(col("__v"), i + 1) - mu(i)) *
+      sum(fround((element_at(col("__v"), i + 1) - mu(i)) *
              (element_at(col("__v"), j + 1) - mu(j)), 9)
         .cast("decimal(38,9)")).as(s"c${i}_$j")
     }
@@ -120,9 +117,7 @@ object Pca {
     }
     val rows = comps.result().zipWithIndex.flatMap { case ((v, lambda), ci) =>
       v.zipWithIndex.map { case (w, pos) =>
-        Row(ci, pos, math.floor(w * 1e6 + 0.5) / 1e6,
-          math.floor(lambda * 1e6 + 0.5) / 1e6,
-          math.floor(lambda / total * 1e6 + 0.5) / 1e6)
+        Row(ci, pos, fround(w, 6), fround(lambda, 6), fround(lambda / total, 6))
       }
     }
     spark.createDataFrame(
@@ -162,6 +157,6 @@ object Pca {
     }
     emb.select(col(idCol), toDouble(col(vecCol)).as("__v"))
       .select(col(idCol), posexplode(array(projs: _*)).as(Seq("k", "__p")))
-      .select(col(idCol), col("k").cast("long").as("k"), fr(col("__p"), 6).as("proj"))
+      .select(col(idCol), col("k").cast("long").as("k"), fround(col("__p"), 6).as("proj"))
   }
 }

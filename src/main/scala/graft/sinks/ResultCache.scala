@@ -46,6 +46,5 @@ final class ResultCache(clock: () => Long = () => System.nanoTime()) {
     }
   }
 
-  def invalidate(key: String): Unit = entries.remove(key)
   def size: Int = entries.size()
 }

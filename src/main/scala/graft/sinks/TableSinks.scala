@@ -46,44 +46,6 @@ object TableSinks {
       .parquet(tablePath)
   }
 
-  /** Read a tag table laid out by [[appendTagTable]] with the pruning
-    * predicates applied — partition filters on `__day`/`__name_bucket`
-    * reach the file listing, so only matching directories are read. */
-  def scanTagTable(spark: org.apache.spark.sql.SparkSession, tablePath: String,
-                   name: String, fromNs: Long, untilNs: Long,
-                   nameCol: String = "name", timeCol: String = "time",
-                   buckets: Int = 64): DataFrame = {
-    val fromDay = java.time.LocalDate.ofInstant(
-      java.time.Instant.ofEpochMilli(fromNs / 1000000L), java.time.ZoneOffset.UTC)
-    val untilDay = java.time.LocalDate.ofInstant(
-      java.time.Instant.ofEpochMilli(untilNs / 1000000L), java.time.ZoneOffset.UTC)
-    spark.read.parquet(tablePath)
-      .filter(col("__name_bucket") ===
-        pmod(xxhash64(lit(name)), lit(buckets)))
-      .filter(col("__day").between(
-        java.sql.Date.valueOf(fromDay), java.sql.Date.valueOf(untilDay)))
-      .filter(col(nameCol) === name &&
-        col(timeCol) >= fromNs && col(timeCol) < untilNs)
-  }
-
-  /** Catalog-bucketed layout for repeated equi-joins: persist a table
-    * hash-bucketed (and sorted) on its join key so every later
-    * bucket-to-bucket equi-join against a table with the same bucket
-    * spec plans with ZERO shuffle exchanges — the decisive layout win
-    * for fact-to-fact joins too big to broadcast (an as-of or revenue
-    * join re-run daily pays the co-location write once, not a 100 TB
-    * shuffle per query). Uses the session catalog (`saveAsTable`):
-    * bucket metadata must live in the catalog for the optimizer to
-    * trust it. */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String,
-                    buckets: Int, sortCols: Seq[String] = Nil): Unit = {
-    val sorts = if (sortCols.nonEmpty) sortCols else Seq(keyCol)
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, keyCol)
-      .sortBy(sorts.head, sorts.tail: _*)
-      .saveAsTable(table)
-  }
-
   /** APPEND with log-table layout (reference log tables: append-only,
     * hidden `_ARRIVAL_TIME` ingest stamp — spi/testsuite/logtable.go).
     * Partitioned by UTC day of ARRIVAL: log queries are arrival-window

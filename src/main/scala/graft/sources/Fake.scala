@@ -96,12 +96,4 @@ object Fake {
       (sin(col("theta")) * sin(col("phi"))).as("y"),
       cos(col("theta")).as("z"))
   }
-
-  /** json/csv literal payloads (reference fm_fake.go:175-264). */
-  def fromCsvLiteral(spark: SparkSession, payload: String,
-                     header: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val ds = spark.createDataset(payload.split("\n").toIndexedSeq.filter(_.nonEmpty))
-    spark.read.option("header", header.toString).csv(ds)
-  }
 }

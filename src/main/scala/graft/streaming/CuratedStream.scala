@@ -93,12 +93,4 @@ object CuratedStream {
       }
       .toDF(keyCol, idCol)
   }
-
-  /** Curate + scrub: the full intake shape (gates → dedup → PII
-    * redaction of the surviving texts). */
-  def curateAndScrub(stream: DataFrame, textCol: String,
-                     minTokens: Int, maxTokens: Int,
-                     maxDupWordFrac: Double, dedupWindow: String): DataFrame =
-    curate(stream, textCol, minTokens, maxTokens, maxDupWordFrac, dedupWindow)
-      .withColumn(textCol, Curation.scrubPii(col(textCol)))
 }

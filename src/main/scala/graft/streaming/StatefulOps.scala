@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
+import graft.functions.Rounding.fround
 
 /** Streaming forms of the stateful sequential operators (§2.3) — the
   * reference's pipeline IS a stream, so FILTER_CHANGED / MAP_LOWPASS
@@ -353,8 +354,7 @@ object StatefulOps {
               if (v > 0) {
                 val z = (r.value - m) / math.sqrt(v)
                 if (math.abs(z) > threshold)
-                  out += TagRowZ(r.name, r.ts, r.value,
-                    math.floor(z * 1e6 + 0.5) / 1e6)
+                  out += TagRowZ(r.name, r.ts, r.value, fround(z, 6))
               }
             }
             val x6 = math.floor(r.value * 1e6 + 0.5).toLong

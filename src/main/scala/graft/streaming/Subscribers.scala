@@ -179,8 +179,8 @@ object Subscribers {
 
   /** Streaming THROTTLE(tps): per-record pacing over an iterator with an
     * injectable clock/sleeper (reference fm_monad.go:240-271 — delay
-    * each record so at most `tps` pass per second). Batch TQL keeps the
-    * no-op (`SeqOps.throttle`); a streaming micro-batch wraps its
+    * each record so at most `tps` pass per second). Batch TQL compiles
+    * THROTTLE to a no-op; a streaming micro-batch wraps its
     * per-partition iterator with this. */
   def paced[T](it: Iterator[T], tps: Double,
                nowNs: () => Long = () => System.nanoTime(),

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.Using
+import graft.functions.Rounding.fround
 
 /** Per-domain Platt scaling (Platt 1999, "Probabilistic Outputs for
   * Support Vector Machines..." — public method, no reference analogue):
@@ -30,12 +31,8 @@ import scala.util.Using
   * Nothing corpus-quadratic, no windows, no per-row driver work.
   */
 object Calibration {
-  private def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
-  private def fr6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def round9(x: Double): Double = math.floor(x * 1e9 + 0.5d) / 1e9
-
   private def sigmoid9(z: Column): Column =
-    r9(lit(1.0d) / (lit(1.0d) + exp(-r9(z))))
+    fround(lit(1.0d) / (lit(1.0d) + exp(-fround(z, 9))), 9)
 
   /** Fit per-domain (A, B) and return the calibrated frame:
     * (idCol, domainCol, score, cal_score, label).
@@ -63,8 +60,8 @@ object Calibration {
       val bM = domainMap(fit.map { case (d, (_, b)) => d -> b })
       base
         .select(col(idCol), col(domainCol), col("__s").as("score"),
-          fr6(sigmoid9(element_at(aM, col(domainCol)) * col("__s") +
-            element_at(bM, col(domainCol)))).as("cal_score"),
+          fround(sigmoid9(element_at(aM, col(domainCol)) * col("__s") +
+            element_at(bM, col(domainCol))), 6).as("cal_score"),
           col("__y").cast("long").as("label"))
         .localCheckpoint(eager = true)
     }
@@ -119,7 +116,7 @@ object Calibration {
           col("__s"))
         .groupBy(col(domainCol))
         .agg(count(lit(1)).as("n"),
-          sum(r9(col("__e") * col("__s")).cast("decimal(38,9)")).as("__ga"),
+          sum(fround(col("__e") * col("__s"), 9).cast("decimal(38,9)")).as("__ga"),
           sum(col("__e").cast("decimal(38,9)")).as("__gb"))
         .collect()
       if (it == 1) {
@@ -130,9 +127,9 @@ object Calibration {
         val d = r.getString(0)
         val n = nByDomain(d)
         val (a, b) = params(d)
-        val ga = round9(r.getDecimal(2).doubleValue() / n)
-        val gb = round9(r.getDecimal(3).doubleValue() / n)
-        d -> (round9(a - lr * ga), round9(b - lr * gb))
+        val ga = fround(r.getDecimal(2).doubleValue() / n, 9)
+        val gb = fround(r.getDecimal(3).doubleValue() / n, 9)
+        d -> (fround(a - lr * ga, 9), fround(b - lr * gb, 9))
       }.toMap
     }
     params
@@ -208,7 +205,7 @@ object Calibration {
         .toDF(domainCol, "score", "__iso")
       base.join(broadcast(fit), Seq(domainCol, "score"))
         .select(col(idCol), col(domainCol), col("score"),
-          fr6(col("__iso")).as("iso_score"),
+          fround(col("__iso"), 6).as("iso_score"),
           col("__y").cast("long").as("label"))
         .localCheckpoint(eager = true)
     }
@@ -242,11 +239,11 @@ object Calibration {
     // broadcast, never a shuffle pair (r18)
     byBin.join(broadcast(totals), domainCol)
       .select(col(domainCol), col("n_docs"),
-        r9((col("n_b").cast("double") / col("n_docs")) *
-          abs(r9(col("s_b").cast("double") / col("n_b")) -
-            r9(col("p_b").cast("double") / col("n_b")))).as("__t"))
+        fround((col("n_b").cast("double") / col("n_docs")) *
+          abs(fround(col("s_b").cast("double") / col("n_b"), 9) -
+            fround(col("p_b").cast("double") / col("n_b"), 9)), 9).as("__t"))
       .groupBy(col(domainCol))
       .agg(max("n_docs").as("n_docs"),
-        fr6(sum(col("__t").cast("decimal(38,9)")).cast("double")).as("ece"))
+        fround(sum(col("__t").cast("decimal(38,9)")).cast("double"), 6).as("ece"))
   }
 }

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.fround
 
 /** Corpus-level statistical analysis for training-data pipelines:
   * per-document unigram entropy (a quality signal), PMI collocation
@@ -27,11 +28,6 @@ import org.apache.spark.sql.functions._
   *     and the intersection runs on sorted distinct gram arrays.
   */
 object CorpusStats {
-  private def fr(c: Column, scale: Int): Column = {
-    val p = math.pow(10d, scale.toDouble)
-    floor(c * p + 0.5d) / p
-  }
-
   /** Per-document unigram Shannon entropy (bits), word and distinct-word
     * counts. entropy = log2(n) − Σ c·log2(c) / n over the document's
     * word histogram; the term sum goes through 9-dp decimal so the
@@ -45,9 +41,9 @@ object CorpusStats {
       .agg(
         sum("__c").as("n_words"),
         count(lit(1)).as("n_distinct"),
-        sum(fr(col("__c") * log2(col("__c")), 9).cast("decimal(38,9)")).as("__s"))
+        sum(fround(col("__c") * log2(col("__c")), 9).cast("decimal(38,9)")).as("__s"))
       .select(col(idCol), col("n_words"), col("n_distinct"),
-        fr(log2(col("n_words")) -
+        fround(log2(col("n_words")) -
           col("__s").cast("double") / col("n_words"), 6).as("entropy"))
   }
 
@@ -76,7 +72,7 @@ object CorpusStats {
       .join(uni.select(col("w").as("w2"), col("cw").as("c2")), "w2")
       .crossJoin(broadcast(tot)).crossJoin(broadcast(btot))
       .select(col("pair"), col("n_pair"),
-        fr(log(col("n_pair")) + lit(2d) * log(col("n_tot")) -
+        fround(log(col("n_pair")) + lit(2d) * log(col("n_tot")) -
           log(col("b_tot")) - log(col("c1")) - log(col("c2")), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("pair").asc)
       .limit(k)
@@ -95,7 +91,7 @@ object CorpusStats {
     val corpus = wc.groupBy("w").agg(sum("c").as("cw"))
     val totals = wc.groupBy("src").agg(sum("c").as("ts"))
     val n = totals.agg(sum("ts").as("n"))
-    val term = fr((col("c") / col("ts")) *
+    val term = fround((col("c") / col("ts")) *
       (log(col("c")) - log(col("ts")) - log(col("cw")) + log(col("n"))), 12)
     wc.join(corpus, "w")
       .join(broadcast(totals), "src")
@@ -104,7 +100,7 @@ object CorpusStats {
       .agg(sum(col("c")).as("n_tokens"),
         sum(term.cast("decimal(38,12)")).as("__kl"))
       .select(col(srcCol), col("n_tokens"),
-        fr(col("__kl").cast("double"), 6).as("kl"))
+        fround(col("__kl").cast("double"), 6).as("kl"))
   }
 
   /** Pairwise source overlap matrix: for every source pair (a < b), the
@@ -135,7 +131,7 @@ object CorpusStats {
       .join(broadcast(totals.select(col("src").as("src_a"), col("n").as("na"))), "src_a")
       .join(broadcast(totals.select(col("src").as("src_b"), col("n").as("nb"))), "src_b")
       .select(col("src_a"), col("src_b"), col("n_shared"),
-        fr(col("n_shared") / (col("na") + col("nb") - col("n_shared")), 6)
+        fround(col("n_shared") / (col("na") + col("nb") - col("n_shared")), 6)
           .as("jaccard"))
   }
 
@@ -157,7 +153,7 @@ object CorpusStats {
       .groupBy(col("w"), col("c"))
       .agg((count(col("w2")) + 1L).as("rank"))
     def dsum(c: Column): Column =
-      sum(fr(c, 12).cast("decimal(38,12)")).cast("double")
+      sum(fround(c, 12).cast("decimal(38,12)")).cast("double")
     val s = ranked.agg(
       count(lit(1)).as("n"),
       dsum(log(col("rank"))).as("sx"),
@@ -167,8 +163,8 @@ object CorpusStats {
     val slope0 = (col("n") * col("sxy") - col("sx") * col("sy")) /
       (col("n") * col("sxx") - col("sx") * col("sx"))
     s.select(col("n").as("n_words"),
-      fr(slope0, 6).as("slope"),
-      fr((col("sy") - slope0 * col("sx")) / col("n"), 6).as("intercept"))
+      fround(slope0, 6).as("slope"),
+      fround((col("sy") - slope0 * col("sx")) / col("n"), 6).as("intercept"))
   }
 
   /** One-row information-theoretic corpus profile: unigram and bigram
@@ -180,7 +176,7 @@ object CorpusStats {
     val ws = docs.select(Curation.words(col(textCol)).as("__ws"))
     def ent(counts: DataFrame): DataFrame = counts.agg(
       sum("c").as("n"),
-      sum(fr(col("c") * log2(col("c")), 9).cast("decimal(38,9)")).as("s"))
+      sum(fround(col("c") * log2(col("c")), 9).cast("decimal(38,9)")).as("s"))
       .select(col("n"),
         (log2(col("n")) - col("s").cast("double") / col("n")).as("h"))
     val hu = ent(ws.select(explode(col("__ws")).as("t"))
@@ -190,9 +186,9 @@ object CorpusStats {
     hu.select(col("n").as("n_tokens"), col("h").as("__hu"))
       .crossJoin(hb.select(col("n").as("n_bigrams"), col("h").as("__hb")))
       .select(col("n_tokens"), col("n_bigrams"),
-        fr(col("__hu"), 6).as("h_unigram"),
-        fr(col("__hb"), 6).as("h_bigram"),
-        fr(col("__hb") - col("__hu"), 6).as("h_cond"))
+        fround(col("__hu"), 6).as("h_unigram"),
+        fround(col("__hb"), 6).as("h_bigram"),
+        fround(col("__hb") - col("__hu"), 6).as("h_cond"))
   }
 
   /** Fuzzy vocabulary pairs: distinct corpus words within `maxDist`
@@ -272,10 +268,10 @@ object CorpusStats {
     counts.orderBy(col("cnt").desc, col("key")).limit(k)
       .crossJoin(broadcast(tot))
       .select(col("key"), col("cnt"),
-        fr(col("cnt") / col("n_rows"), 6).as("frac"),
+        fround(col("cnt") / col("n_rows"), 6).as("frac"),
         // double-first: cnt*n_keys in integer space can overflow 2^63 at
         // real key cardinalities; (cnt/n_rows)*n_keys cannot
-        fr(col("cnt") / col("n_rows") * col("n_keys"), 4).as("skew"))
+        fround(col("cnt") / col("n_rows") * col("n_keys"), 4).as("skew"))
   }
 
   /** md5-derived Count-Min bucket: the first 4 hex digits of
@@ -315,15 +311,6 @@ object CorpusStats {
       .groupBy("w").agg(count(lit(1)).as("c"))
     cmHashRows(wc, rows, width).groupBy("i", "b").agg(sum("c").as("v"))
   }
-
-  /** Point estimates from a counter relation: min over hash rows of the
-    * probed cells, for each word in `words` (single column `w`). */
-  def cmEstimate(counters: DataFrame, words: DataFrame, rows: Int,
-                 width: Int): DataFrame =
-    cmHashRows(words.select(col("w"), lit(0L).as("c")), rows, width)
-      .join(broadcast(counters), Seq("i", "b"))
-      .groupBy(col("w").as("word"))
-      .agg(min("v").as("estimate"))
 
   def countMin(docs: DataFrame, textCol: String, rows: Int, width: Int,
                k: Int): DataFrame = {
@@ -375,6 +362,6 @@ object CorpusStats {
       .withColumn("__c",
         graft.functions.ArrayExprs.containmentSortedMin(spark, col("ga"), col("gb"), threshold))
       .filter(col("__c") >= threshold)
-      .select(col("doc_a"), col("doc_b"), fr(col("__c"), 6).as("containment"))
+      .select(col("doc_a"), col("doc_b"), fround(col("__c"), 6).as("containment"))
   }
 }

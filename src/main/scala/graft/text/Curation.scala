@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.fround
 
 /** Corpus-curation operators for training-data pipelines: eval-set
   * decontamination, deterministic hash sampling, stratified per-group
@@ -38,19 +39,16 @@ object Curation {
     lit(1.0) - size(array_distinct(ws)).cast("double") / size(ws)
   }
 
-  /** All word n-grams of `text` joined with single spaces. Spark's
-    * sequence() DESCENDS when stop < start, so short/null texts must
-    * short-circuit to an empty array instead.
+  /** All word n-grams of a word-array column, each joined with single
+    * spaces. Spark's sequence() DESCENDS when stop < start, so short/null
+    * word arrays must short-circuit to an empty array instead.
     *
     * PERFORMANCE: higher-order-function lambdas are interpreted and
     * defeat common-subexpression elimination, so passing a raw
     * `words(text)` tree here re-runs lower+regex+split once PER GRAM
     * POSITION (O(positions × |text|) — 20× on real corpora). Operators
-    * must materialize the word array in a projection first and call
-    * [[wordNgramsOf]] on the attribute (see [[explodedGrams]]). */
-  def wordNgrams(text: Column, n: Int): Column = wordNgramsOf(words(text), n)
-
-  /** N-grams over an already-materialized word-array column. */
+    * must materialize the word array in a projection first and pass the
+    * attribute (see [[explodedGrams]]). */
   def wordNgramsOf(ws: Column, n: Int): Column =
     when(size(ws) >= n,
       transform(sequence(lit(0), size(ws) - n),
@@ -114,10 +112,8 @@ object Curation {
       .select(graft.functions.BloomFns.bloomAgg(spark,
         xxhash64(col("gram")), expectedEvalGrams, numBits).as("bf"))
       .head.getAs[Array[Byte]](0)
-    val par = spark.sparkContext.defaultParallelism
-    val balanced =
-      if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
-    val corpusGrams = explodedGrams(balanced, idCol, textCol, n, distinctPerDoc = true)
+    val corpusGrams = explodedGrams(graft.core.Par.expand(corpus), idCol, textCol, n,
+      distinctPerDoc = true)
     corpusGrams
       .filter(graft.functions.BloomFns.mightContain(spark,
         xxhash64(col("gram")), lit(bloom)))
@@ -135,10 +131,8 @@ object Curation {
                           textCol: String, n: Int): DataFrame = {
     val evalGrams = explodedGrams(eval_, idCol, textCol, n, distinctPerDoc = false)
       .select("gram").distinct()
-    val par = corpus.sparkSession.sparkContext.defaultParallelism
-    val balanced =
-      if (corpus.rdd.getNumPartitions < par) corpus.repartition(par) else corpus
-    val corpusGrams = explodedGrams(balanced, idCol, textCol, n, distinctPerDoc = true)
+    val corpusGrams = explodedGrams(graft.core.Par.expand(corpus), idCol, textCol, n,
+      distinctPerDoc = true)
     // ONE pass over the corpus grams: the broadcast LEFT join marks the
     // leaked ones, a single aggregation counts both totals — no second
     // explode/scan like a totals⋈leaked two-query plan would cost
@@ -292,17 +286,16 @@ object Curation {
     * weights, so the output is partitioning-independent. */
   def temperatureMix(df: DataFrame, groupCol: String, sizeCol: String,
                      alpha: Double): DataFrame = {
-    def r6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
     val g = df.groupBy(groupCol)
       .agg(count(lit(1)).as("n_docs"), sum(sizeCol).as("n_size"))
-      .withColumn("__w", r6(pow(col("n_size").cast("double"), lit(alpha))))
+      .withColumn("__w", fround(pow(col("n_size").cast("double"), lit(alpha)), 6))
     val tot = g.agg(
       sum(col("__w").cast("decimal(38,6)")).cast("double").as("__tw"),
       sum("n_docs").as("__td"))
     g.crossJoin(broadcast(tot))
       .select(col(groupCol), col("n_docs"), col("n_size"),
-        r6(col("__w") / col("__tw")).as("prob"),
-        r6(col("__w") / col("__tw") * col("__td") / col("n_docs")).as("epochs"))
+        fround(col("__w") / col("__tw"), 6).as("prob"),
+        fround(col("__w") / col("__tw") * col("__td") / col("n_docs"), 6).as("epochs"))
   }
 
   /** Deterministic weighted sampling without replacement (Efraimidis–
@@ -315,10 +308,9 @@ object Curation {
     * TakeOrdered merge — no global sort, no shuffle of the corpus. */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
                      k: Int): DataFrame = {
-    def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
     val u = (conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
       .cast("double") + 1d) / lit(4294967296d)
-    df.withColumn("skey", r9(pow(u, lit(1d) / col(weightCol).cast("double"))))
+    df.withColumn("skey", fround(pow(u, lit(1d) / col(weightCol).cast("double")), 9))
       .orderBy(col("skey").desc, col(idCol))
       .limit(k)
       .select(col(idCol), col(weightCol), col("skey"))
@@ -526,34 +518,6 @@ object Curation {
         (col("n_words") - col("dup_words")).cast("double") / col("n_words"))
   }
 
-  /** The rewrite step of exact-substring dedup: drop every word covered
-    * by a cross-document duplicated span ([[duplicateSpans]]) and emit
-    * the surviving text as `clean_text` (normalized word stream,
-    * single-space joined). Documents without duplicated spans pass
-    * through with their normalized text intact.
-    *
-    * Spans arrive as a small per-doc array (collect_list after the span
-    * aggregation — spans per doc are few by construction since they are
-    * maximal and non-overlapping), so the word-versus-span containment
-    * test is in-row column math; no extra shuffle beyond
-    * [[duplicateSpans]] itself plus the one spans→docs join. */
-  def stripDuplicateSpans(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int, minDocs: Int = 2): DataFrame = {
-    val spans = duplicateSpans(docs, idCol, textCol, n, minDocs)
-      .groupBy(idCol)
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
-    val covered: (Column, Column) => Column = (w, i) =>
-      exists(col("__spans"), sp =>
-        i.cast("long").between(sp("span_start"), sp("span_end")))
-    docs.join(spans, Seq(idCol), "left")
-      .withColumn("__ws", words(col(textCol)))
-      .withColumn("clean_text",
-        when(col("__spans").isNull, array_join(col("__ws"), " "))
-          .otherwise(array_join(
-            filter(col("__ws"), (w, i) => !covered(w, i)), " ")))
-      .drop("__ws", "__spans")
-  }
-
   /** Per-group percentile gate: keep rows whose score clears their
     * group's exact `pct`-quantile (e.g. "drop the bottom half of each
     * language by quality score"). The per-group thresholds reduce to
@@ -594,27 +558,6 @@ object Curation {
       org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
     }
     spark.createDataFrame(indexed, schema).drop("__h")
-  }
-
-  /** Training-shard export: write the corpus as `part=<k>` parquet
-    * shards of ~`rowsPerShard` rows in deterministic [[globalShuffle]]
-    * order. Shard membership is `shuffle_pos / rowsPerShard`, so every
-    * engine that re-derives the permutation finds the same row in the
-    * same shard — resumable training loaders address shards by number.
-    *
-    * Scale shape: the shuffle's range partitioning already clusters
-    * consecutive positions, so the `partitionBy` write sees few distinct
-    * shards per task — no extra exchange, no small-file explosion
-    * (maxRecordsPerFile bounds any straggler shard). */
-  def exportShards(df: DataFrame, idCol: String, seed: String,
-                   rowsPerShard: Long, outPath: String): Unit = {
-    require(rowsPerShard > 0, s"rowsPerShard must be positive, got $rowsPerShard")
-    globalShuffle(df, idCol, seed)
-      .withColumn("shard", floor(col("shuffle_pos") / rowsPerShard))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", rowsPerShard)
-      .partitionBy("shard")
-      .parquet(outPath)
   }
 
   /** Sequence packing: concatenate consecutive documents (id order

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.fround
 
 /** DoReMi-style domain reweighting (Xie et al. 2023, "DoReMi:
   * Optimizing Data Mixtures Speeds Up Language Model Pretraining",
@@ -35,9 +36,6 @@ import org.apache.spark.sql.functions._
   * Nothing corpus-quadratic, no windows, no per-row driver work.
   */
 object Doremi {
-  private def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
-  private def round9(x: Double): Double = math.floor(x * 1e9 + 0.5d) / 1e9
-  private def fr6(x: Double): Double = math.floor(x * 1e6 + 0.5d) / 1e6
   /** exact integer numerator of a 9-dp-pinned positive double. */
   private def l9(x: Double): Long = math.floor(x * 1e9 + 0.5d).toLong
 
@@ -52,13 +50,13 @@ object Doremi {
     cal.select(col(domainCol), col(labelCol).cast("double").as("__y"),
         pc.as("__pc"))
       .select(col(domainCol),
-        r9(-(col("__y") * log(col("__pc")) +
-          (lit(1.0) - col("__y")) * log(lit(1.0) - col("__pc")))).as("__l"))
+        fround(-(col("__y") * log(col("__pc")) +
+          (lit(1.0) - col("__y")) * log(lit(1.0) - col("__pc"))), 9).as("__l"))
       .groupBy(col(domainCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("__l").cast("decimal(38,9)")).as("__sl"))
       .select(col(domainCol), col("n_docs"),
-        r9(col("__sl").cast("double") / col("n_docs")).as("loss9"))
+        fround(col("__sl").cast("double") / col("n_docs"), 9).as("loss9"))
   }
 
   /** Fit the domain weights: (domainCol, n_docs, loss, weight) with
@@ -77,22 +75,22 @@ object Doremi {
     val domains = rows.map(_._1)
     val loss = rows.map(r => r._1 -> r._3).toMap
     val k = domains.length.toDouble
-    var alpha: Map[String, Double] = domains.map(_ -> round9(1.0 / k)).toMap
+    var alpha: Map[String, Double] = domains.map(_ -> fround(1.0 / k, 9)).toMap
     for (_ <- 1 to steps) {
       // weighted mean loss under the current α — exact scaled-long sum
       val lbar = domains.map(d => l9(alpha(d) * loss(d))).sum.toDouble / 1e9
       val u = domains.map { d =>
-        val e = math.max(round9(loss(d) - lbar), 0.0)
-        val g = round9(math.exp(round9(eta * e)))
-        d -> round9(alpha(d) * g)
+        val e = math.max(fround(loss(d) - lbar, 9), 0.0)
+        val g = fround(math.exp(fround(eta * e, 9)), 9)
+        d -> fround(alpha(d) * g, 9)
       }.toMap
       val z = domains.map(d => l9(u(d))).sum.toDouble / 1e9
       alpha = domains.map { d =>
-        val a1 = round9(u(d) / z)
-        d -> round9(round9((1.0 - smooth) * a1) + smooth / k)
+        val a1 = fround(u(d) / z, 9)
+        d -> fround(fround((1.0 - smooth) * a1, 9) + smooth / k, 9)
       }.toMap
     }
-    rows.toSeq.map { case (d, n, l) => (d, n, fr6(l), fr6(alpha(d))) }
+    rows.toSeq.map { case (d, n, l) => (d, n, fround(l, 6), fround(alpha(d), 6)) }
       .toDF(domainCol, "n_docs", "loss", "weight")
   }
 

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.Using
+import graft.functions.Rounding.fround
 
 /** DSIR-style hashed n-gram importance weighting (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling",
@@ -25,11 +26,6 @@ import scala.util.Using
   * wordEntropy discipline — double sums are partition-order-dependent).
   */
 object Dsir {
-  private def fr(c: Column, scale: Int): Column = {
-    val p = math.pow(10d, scale.toDouble)
-    floor(c * p + 0.5d) / p
-  }
-
   /** the countmin md5 trick: 4 hex digits mod width. */
   private[text] def bucket(g: Column, width: Int): Column =
     conv(substring(md5(g), 1, 4), 16, 10).cast("long") % width
@@ -38,54 +34,23 @@ object Dsir {
   private[text] def gramsOf(ws: Column): Column =
     concat(ws, Curation.wordNgramsOf(ws, 2))
 
-  /** (doc_id, bucket) gram stream — the one tokenize pass everything
-    * else aggregates from. */
-  private def docBuckets(docs: DataFrame, idCol: String, textCol: String,
-                         width: Int): DataFrame =
-    graft.core.Par.expand(docs)
-      .select(col(idCol), Curation.words(col(textCol)).as("__ws"))
-      .select(col(idCol), explode(gramsOf(col("__ws"))).as("__g"))
-      .select(col(idCol), bucket(col("__g"), width).as("b"))
-
-  /** The B-row importance table (b, wgt) for `targetPred` against the
-    * whole corpus. Both totals and both count tables come from the same
-    * gram stream; absent buckets smooth through add-one. */
-  def importanceTable(docs: DataFrame, idCol: String, textCol: String,
-                      targetPred: Column, width: Int = 1024): DataFrame = {
-    val spark = docs.sparkSession
-    // the target flag is a doc-column predicate — evaluate it before the
-    // explode so it rides the gram stream. ONE corpus pass: a single
-    // groupBy produces raw and target counts together (conditional sum);
-    // the ≤width-row result collects to the driver (the kmeans k×d-sums
-    // license — bounded by construction) where totals and the smoothed
-    // log-ratios compute locally, then ship back as a literal relation
-    val g2 = graft.core.Par.expand(docs)
-      .select(col(idCol), targetPred.as("__t"),
-        Curation.words(col(textCol)).as("__ws"))
-      .select(col("__t"), explode(gramsOf(col("__ws"))).as("__g"))
-      .select(col("__t"), bucket(col("__g"), width).as("b"))
-    val counts = g2.groupBy("b").agg(
-        count(lit(1)).as("rcnt"),
-        sum(when(col("__t"), 1L).otherwise(0L)).as("tcnt"))
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val rtot = counts.valuesIterator.map(_._1).sum
-    val ttot = counts.valuesIterator.map(_._2).sum
-    def round9(x: Double): Double = math.floor(x * 1e9 + 0.5d) / 1e9
-    val rows = (0 until width).map { b =>
-      val (rcnt, tcnt) = counts.getOrElse(b.toLong, (0L, 0L))
-      (b.toLong, round9(
-        math.log((tcnt + 1d) / (ttot + width.toDouble)) -
-        math.log((rcnt + 1d) / (rtot + width.toDouble))))
-    }
-    import spark.implicits._
-    rows.toDF("b", "wgt")
+  /** The one tokenize→explode→bucket chain of the text family: DSIR's
+    * weights and scores, the classifier's feature builder and its
+    * streaming scorers all ride it — change it in one place only, or
+    * the batch and stream oracles desynchronize. Emits (idCol, carry…,
+    * b), one row per gram. */
+  private[text] def gramBuckets(docs: DataFrame, idCol: String, textCol: String,
+                                width: Int, carry: Seq[String] = Nil,
+                                by: Seq[Column] = Nil): DataFrame = {
+    val keep = (idCol +: carry).map(col)
+    // full-width tokenize+hash regardless of source splits (guide §2.5);
+    // also parallelizes the STREAMING scorers, whose one-file micro-
+    // batches otherwise expand single-threaded
+    graft.core.Par.expand(docs, by: _*)
+      .select(keep :+ Curation.words(col(textCol)).as("__ws"): _*)
+      .select(keep :+ explode(gramsOf(col("__ws"))).as("__g"): _*)
+      .select(keep :+ bucket(col("__g"), width).as("b"): _*)
   }
-
-  /** Per-document DSIR score: (idCol, n_grams, dsir_score). */
-  def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
-                weights: DataFrame, width: Int = 1024): DataFrame =
-    scoreBuckets(docBuckets(docs, idCol, textCol, width), idCol, weights)
 
   private def scoreBuckets(buckets: DataFrame, idCol: String,
                            weights: DataFrame): DataFrame =
@@ -95,24 +60,20 @@ object Dsir {
       .agg(count(lit(1)).as("n_grams"),
         sum(col("wgt").cast("decimal(38,9)")).as("__s"))
       .select(col(idCol), col("n_grams"),
-        fr(col("__s").cast("double") / col("n_grams"), 6).as("dsir_score"))
+        fround(col("__s").cast("double") / col("n_grams"), 6).as("dsir_score"))
 
   /** Weights + scores in ONE corpus tokenize: the (id, target, bucket)
     * gram stream persists across the two consumers — the B-bucket count
-    * aggregation that builds the importance table, and the doc-keyed
-    * scoring aggregation. Identical math to importanceTable∘scoreDocs
-    * (same bounded collect, same broadcast join); this fusion exists
-    * because tokenize+explode dominates the single-query cost and the
-    * two passes read the same stream. */
+    * aggregation that builds the importance table (a bounded ≤width-row
+    * collect), and the doc-keyed scoring aggregation (a broadcast join
+    * of that table). Tokenize+explode dominates the single-query cost,
+    * so both read the same materialized stream. */
   def weightedScores(docs: DataFrame, idCol: String, textCol: String,
                      targetPred: Column, width: Int = 1024): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val stream0 = graft.core.Par.expand(docs)
-      .select(col(idCol), targetPred.as("__t"),
-        Curation.words(col(textCol)).as("__ws"))
-      .select(col(idCol), col("__t"), explode(gramsOf(col("__ws"))).as("__g"))
-      .select(col(idCol), col("__t"), bucket(col("__g"), width).as("b"))
+    val stream0 = gramBuckets(docs.withColumn("__t", targetPred), idCol,
+      textCol, width, carry = Seq("__t"))
     // cut the lineage up front (the classifier-trainer pattern) so the
     // two consumers plan over a bare RDD scan
     Using.resource(graft.core.Par.materialize(stream0)) { cp =>
@@ -124,12 +85,11 @@ object Dsir {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       val rtot = counts.valuesIterator.map(_._1).sum
       val ttot = counts.valuesIterator.map(_._2).sum
-      def round9(x: Double): Double = math.floor(x * 1e9 + 0.5d) / 1e9
       val weights = (0 until width).map { b =>
         val (rcnt, tcnt) = counts.getOrElse(b.toLong, (0L, 0L))
-        (b.toLong, round9(
+        (b.toLong, fround(
           math.log((tcnt + 1d) / (ttot + width.toDouble)) -
-          math.log((rcnt + 1d) / (rtot + width.toDouble))))
+          math.log((rcnt + 1d) / (rtot + width.toDouble)), 9))
       }.toDF("b", "wgt")
       // materialize the (one row per doc) scored relation so the caller
       // never re-runs the tokenize when it finally consumes the result

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import scala.util.Using
+import graft.functions.Rounding.fround
 
 /** fastText-style quality/language classifier over hashed n-gram
   * features (Joulin et al. 2016, "Bag of Tricks for Efficient Text
@@ -31,30 +32,10 @@ import scala.util.Using
   * loop; scoring is a pure projection.
   */
 object QualityClassifier {
-  private def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
-  private def fr6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
-  private def round9(x: Double): Double = math.floor(x * 1e9 + 0.5d) / 1e9
-
-  /** the one tokenize→explode→bucket chain both the feature builder and
-    * the streaming scorer ride — change it in one place only, or the
-    * batch and stream oracles desynchronize. */
-  private def gramBuckets(docs: DataFrame, idCol: String, textCol: String,
-                          width: Int, carry: Seq[String] = Nil,
-                          by: Seq[Column] = Nil): DataFrame = {
-    val keep = (idCol +: carry).map(col)
-    // full-width tokenize+hash regardless of source splits (guide §2.5);
-    // also parallelizes the STREAMING scorers, whose one-file micro-
-    // batches otherwise expand single-threaded
-    graft.core.Par.expand(docs, by: _*)
-      .select(keep :+ Curation.words(col(textCol)).as("__ws"): _*)
-      .select(keep :+ explode(Dsir.gramsOf(col("__ws"))).as("__g"): _*)
-      .select(keep :+ Dsir.bucket(col("__g"), width).as("b"): _*)
-  }
-
   /** ONE row per document: (idCol, __y, __bc, __n, __fs) where __bc is
     * the b-sorted (b, c) bucket-count array, __n the total gram count,
     * and __fs the normalized feature array with the bias entry
-    * (-1, 1.0) prepended — x = r9(c/n), exactly the values of the old
+    * (-1, 1.0) prepended — x = fround(c/n, 9), exactly the values of the old
     * (doc, b, x) row relation. Its (doc, b) count and doc-keyed
     * collect_list plan no exchange when the pre-expansion rebalance ran
     * (it hashes raw rows by doc id), and at most one each otherwise;
@@ -80,7 +61,7 @@ object QualityClassifier {
     // exchange: the relation keeps the cluster's width instead of being
     // coalesced by AQE to a partition or two, which would serialize every
     // GD pass over it (measured slower across the classifier family).
-    gramBuckets(docs.withColumn("__y", y), idCol, textCol, width,
+    Dsir.gramBuckets(docs.withColumn("__y", y), idCol, textCol, width,
         carry = "__y" +: carry, by = Seq(col(idCol)))
       .groupBy(col(idCol) +: col("__y") +: carry.map(col) :+ col("b"): _*)
       .agg(count(lit(1)).as("c"))
@@ -91,7 +72,7 @@ object QualityClassifier {
       .withColumn("__fs", concat(
         array(struct(lit(-1L).as("b"), lit(1.0d).as("x"))),
         transform(col("__bc"), f => struct(f.getField("b").as("b"),
-          r9(f.getField("c").cast("double") / col("__n")).as("x")))))
+          fround(f.getField("c").cast("double") / col("__n"), 9).as("x")))))
   }
 
   /** coefficient lookup: the ≤width+1 weights inline as an array
@@ -106,7 +87,7 @@ object QualityClassifier {
     element_at(warr, (b + lit(2L)).cast("int"))
 
   /** per-doc probability under `warr` as pure column math over __fs:
-    * z = Σ_b round9(w_b·x_b) in an order-free DECIMAL(38,9) fold (the
+    * z = Σ_b fround(w_b·x_b, 9) in an order-free DECIMAL(38,9) fold (the
     * same per-term double→decimal cast as the old cross-row sum, so
     * the value is bit-identical), p = r9 sigmoid of the 9-dp z. */
   private def pCol(warr: Column): Column = {
@@ -117,9 +98,9 @@ object QualityClassifier {
     // 10^21. Values identical to the old (38,9) cross-row sum.
     val zdec = aggregate(col("__fs"), lit(0).cast("decimal(30,9)"),
       (acc, f) => (acc +
-        r9(wAt(warr, f.getField("b")) * f.getField("x")).cast("decimal(20,9)"))
+        fround(wAt(warr, f.getField("b")) * f.getField("x"), 9).cast("decimal(20,9)"))
         .cast("decimal(30,9)"))
-    r9(lit(1.0d) / (lit(1.0d) + exp(-r9(zdec.cast("double")))))
+    fround(lit(1.0d) / (lit(1.0d) + exp(-fround(zdec.cast("double"), 9))), 9)
   }
 
   /** GD loop over the (persisted) per-doc feature relation; ≤33-value
@@ -137,14 +118,14 @@ object QualityClassifier {
       ((-1L) +: (0L until width.toLong)).map(_ -> 0.0d).toMap
     for (it <- 1 to iters) {
       val warr = wArray(w, width)
-      // gradient g_b = Σ_docs round9(err·x_b) / N, 9-dp pinned, exact
+      // gradient g_b = Σ_docs fround(err·x_b, 9) / N, 9-dp pinned, exact
       // DECIMAL accumulation — identical values to the old join form
       val rows = df
         .select((pCol(warr) - col("__y")).as("__e"), col("__fs"))
         .select(col("__e"), explode(col("__fs")).as("f"))
         .groupBy(col("f.b").as("b"))
         .agg(count(lit(1)).as("n"),
-          sum(r9(col("__e") * col("f.x")).cast("decimal(38,9)")).as("__g"))
+          sum(fround(col("__e") * col("f.x"), 9).cast("decimal(38,9)")).as("__g"))
         .collect()
       if (it == 1) {
         // the bias entry b = -1 appears once per doc; its absence means
@@ -156,9 +137,9 @@ object QualityClassifier {
         nDocs = bias.get.getLong(1).toDouble
       }
       val grad = rows.map(r => r.getLong(0) ->
-        round9(r.getDecimal(2).doubleValue() / nDocs)).toMap
+        fround(r.getDecimal(2).doubleValue() / nDocs, 9)).toMap
       w = w.map { case (b, wb) =>
-        b -> round9(wb - lr * grad.getOrElse(b, 0.0d))
+        b -> fround(wb - lr * grad.getOrElse(b, 0.0d), 9)
       }
     }
     w
@@ -216,7 +197,7 @@ object QualityClassifier {
       labelAs.map(n => col("__y").cast("long").as(n)).toSeq
     val tailNames = (carry ++ labelAs.toSeq).map(col)
     df.select(col(idCol) +: pCol(wArray(w, width)).as("__p") +: mkTail: _*)
-      .select(col(idCol) +: fr6(col("__p")).as("score") +:
+      .select(col(idCol) +: fround(col("__p"), 6).as("score") +:
         when(col("__p") >= 0.5d, 1L).otherwise(0L).as("pred") +: tailNames: _*)
   }
 
@@ -231,7 +212,7 @@ object QualityClassifier {
       idCol, w, width)
   }
 
-  /** Streaming-safe gram-level scoring: z = r9(bias + Σ_g w[b(g)] / n)
+  /** Streaming-safe gram-level scoring: z = fround(bias + Σ_g w[b(g)] / n, 9)
     * — fastText's actual architecture (the MEAN of token weights,
     * arXiv:1607.01759 §2) rather than the bucket-count dot product.
     * One streaming aggregation per doc (sum + count after a broadcast
@@ -246,16 +227,16 @@ object QualityClassifier {
     // to a literal so no join follows the streaming aggregation
     // (stream plans disallow joins after aggregations)
     val bias = lit(weights.filter(col("b") === -1L).head().getDouble(1))
-    gramBuckets(docs, idCol, textCol, width)
+    Dsir.gramBuckets(docs, idCol, textCol, width)
       .join(broadcast(weights.filter(col("b") >= 0L)), "b")
       .groupBy(col(idCol))
       .agg(sum(col("w").cast("decimal(38,9)")).as("__s"),
         count(lit(1)).as("n_grams"))
       .select(col(idCol), col("n_grams"),
-        r9(lit(1.0d) / (lit(1.0d) +
-          exp(-r9(bias + col("__s").cast("double") / col("n_grams")))))
+        fround(lit(1.0d) / (lit(1.0d) +
+          exp(-fround(bias + col("__s").cast("double") / col("n_grams"), 9))), 9)
           .as("__p"))
-      .select(col(idCol), col("n_grams"), fr6(col("__p")).as("score"),
+      .select(col(idCol), col("n_grams"), fround(col("__p"), 6).as("score"),
         when(col("__p") >= 0.5d, 1L).otherwise(0L).as("pred"))
   }
 
@@ -282,10 +263,10 @@ object QualityClassifier {
       labelAs.map(n => col("__y").cast("long").as(n)).toSeq
     val tailNames = (carry ++ labelAs.toSeq).map(col)
     df.select(col(idCol) +: col("__n").as("n_grams") +:
-        r9(lit(1.0d) / (lit(1.0d) +
-          exp(-r9(bias + sdec.cast("double") / col("__n"))))).as("__p") +:
+        fround(lit(1.0d) / (lit(1.0d) +
+          exp(-fround(bias + sdec.cast("double") / col("__n"), 9))), 9).as("__p") +:
         mkTail: _*)
-      .select(col(idCol) +: col("n_grams") +: fr6(col("__p")).as("score") +:
+      .select(col(idCol) +: col("n_grams") +: fround(col("__p"), 6).as("score") +:
         when(col("__p") >= 0.5d, 1L).otherwise(0L).as("pred") +: tailNames: _*)
   }
 
@@ -335,19 +316,19 @@ object QualityClassifier {
                             weights: DataFrame, fit: DataFrame,
                             width: Int = 32): DataFrame = {
     val bias = lit(weights.filter(col("b") === -1L).head().getDouble(1))
-    val p9 = r9(lit(1.0d) / (lit(1.0d) +
-      exp(-r9(bias + col("__s").cast("double") / col("n_grams")))))
-    val score6 = fr6(p9)
-    val cal9 = r9(lit(1.0d) / (lit(1.0d) +
-      exp(-r9(col("cal_a") * score6 + col("cal_b")))))
-    gramBuckets(docs, idCol, textCol, width, carry = Seq(domainCol))
+    val p9 = fround(lit(1.0d) / (lit(1.0d) +
+      exp(-fround(bias + col("__s").cast("double") / col("n_grams"), 9))), 9)
+    val score6 = fround(p9, 6)
+    val cal9 = fround(lit(1.0d) / (lit(1.0d) +
+      exp(-fround(col("cal_a") * score6 + col("cal_b"), 9))), 9)
+    Dsir.gramBuckets(docs, idCol, textCol, width, carry = Seq(domainCol))
       .join(broadcast(weights.filter(col("b") >= 0L)), "b")
       .join(broadcast(fit), domainCol)
       .groupBy(col(idCol), col(domainCol), col("cal_a"), col("cal_b"))
       .agg(sum(col("w").cast("decimal(38,9)")).as("__s"),
         count(lit(1)).as("n_grams"))
       .select(col(idCol), col(domainCol), col("n_grams"),
-        score6.as("score"), fr6(cal9).as("cal_score"),
+        score6.as("score"), fround(cal9, 6).as("cal_score"),
         when(cal9 >= 0.5d, 1L).otherwise(0L).as("pred"))
   }
 }

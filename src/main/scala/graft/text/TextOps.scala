@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.fround
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language-ID heuristics, document
@@ -33,15 +34,6 @@ object TextOps {
   def alphaRatio(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]"), lit(0))).cast("double") / octet_length(text)
 
-  /** Composite quality score in [0,1] — long-enough, wordy, not
-    * punctuation-soup. Weights are heuristic (documented, deterministic). */
-  def qualityScore(text: Column): Column = {
-    val lengthOk = least(octet_length(text).cast("double") / 200d, lit(1d))
-    val alpha = alphaRatio(text)
-    val stop = least(stopwordRatio(text) * 5d, lit(1d))
-    (lengthOk + alpha + stop) / 3d
-  }
-
   /** Flesch–Kincaid readability (Kincaid et al. 1975 — the standard
     * readability quality-filter feature): reading ease
     * 206.835 − 1.015·(words/sentences) − 84.6·(syllables/word) and the
@@ -51,8 +43,6 @@ object TextOps {
     * SQL oracle computes the identical integers; both ratios pin to
     * 9 dp before the formula and the outputs to 6 dp. */
   def readability(text: Column): Seq[Column] = {
-    def r9(c: Column): Column = floor(c * 1e9 + 0.5) / 1e9
-    def fr6(c: Column): Column = floor(c * 1e6 + 0.5) / 1e6
     val ws = filter(
       transform(split(lower(text), "\\s+"),
         w => regexp_replace(w, "[^a-z]", "")),
@@ -67,14 +57,14 @@ object TextOps {
     val nW = greatest(lit(1L), size(ws).cast("long"))
     val nS = greatest(lit(1L),
       size(regexp_extract_all(lower(text), lit("[.!?]+"), lit(0))).cast("long"))
-    val r1 = r9(nW.cast("double") / nS)
-    val r2 = r9(syl.cast("double") / nW)
+    val r1 = fround(nW.cast("double") / nS, 9)
+    val r2 = fround(syl.cast("double") / nW, 9)
     Seq(
       size(ws).cast("long").as("n_words"),
       nS.as("n_sentences"),
       syl.as("n_syllables"),
-      fr6(lit(206.835d) - lit(1.015d) * r1 - lit(84.6d) * r2).as("fk_ease"),
-      fr6(lit(0.39d) * r1 + lit(11.8d) * r2 - lit(15.59d)).as("fk_grade"))
+      fround(lit(206.835d) - lit(1.015d) * r1 - lit(84.6d) * r2, 6).as("fk_ease"),
+      fround(lit(0.39d) * r1 + lit(11.8d) * r2 - lit(15.59d), 6).as("fk_grade"))
   }
 
   private val markers: Seq[(String, Seq[String])] = Seq(
@@ -218,9 +208,6 @@ object TextOps {
         (col("hapax").cast("double") / col("vocab")).as("hapax_frac"),
         col("avg_doc_tokens"), col("max_doc_tokens"))
   }
-
-  /** Content fingerprint: md5 prefix (exact-duplicate detection). */
-  def contentFingerprint(text: Column): Column = substring(md5(text), 1, 16)
 
   /** Winnowing-style rolling fingerprint: min hash over word k-shingles
     * — robust to small edits, used for near-dup bucketing. The hash is

@@ -169,9 +169,6 @@ object TimeFns {
   /** epoch-ns → TimestampType (µs truncation at the presentation edge). */
   def nsToTimestamp(tsNs: Column): Column = timestamp_micros((tsNs / 1000L).cast("long"))
 
-  /** TimestampType → epoch-ns (lossless from µs). */
-  def timestampToNs(ts: Column): Column = unix_micros(ts) * 1000L
-
   /** epoch-ns → epoch-µs, exact integer floor division. Goes through
     * decimal because a 2024-era epoch-ns (≈1.7e18) exceeds 2^53: any
     * double-division path silently corrupts the last microsecond digit. */

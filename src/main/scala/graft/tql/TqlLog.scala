@@ -41,10 +41,10 @@ object TqlLog {
 /** Bounded (partition, seq)-tagged line sample for distributed WHEN side
   * effects: executor tasks `add`, the driver re-emits `value` in stream
   * order ((partition, seq) sort after an orderBy(key) upstream). The cap
-  * bounds driver traffic no matter how broad the WHEN predicate —
-  * `totalCount` still counts every match so the driver can log how many
-  * lines the cap suppressed. Past the cap the sample keeps the smallest
-  * (partition, seq) tags — the stream HEAD — regardless of task
+  * bounds driver traffic no matter how broad the WHEN predicate — the
+  * accumulator still counts every match, so `suppressed` tells the
+  * driver how many lines the cap dropped. Past the cap the sample keeps
+  * the smallest (partition, seq) tags — the stream HEAD — regardless of task
   * completion order: each task buffers at most `cap` of its own rows
   * (adds arrive in ascending seq), and every merge re-truncates the
   * sorted union, so the emitted sample is deterministic. */
@@ -53,7 +53,6 @@ class WhenLogAcc(cap: Int)
   private val buf = ArrayBuffer.empty[(Int, Long, String)]
   private var total = 0L
 
-  def totalCount: Long = synchronized(total)
   def suppressed: Long = synchronized(math.max(0L, total - buf.length))
 
   override def isZero: Boolean = synchronized(buf.isEmpty && total == 0L)

@@ -153,10 +153,6 @@ class CorpusStatsSpec extends SparkSpec {
     val direct = CorpusStats.cmCounters(spark.read.parquet(rawDir), "text", 3, 64)
     assert(merged.orderBy("i", "b").collect().toSeq ==
       direct.orderBy("i", "b").collect().toSeq)
-    // probing the merged sketch never undercounts the true "common" count
-    val est = CorpusStats.cmEstimate(merged, Seq("common").toDF("w"), 3, 64)
-      .head().getLong(1)
-    assert(est >= 40L, est)
     // replaying a batch's publish (same batchId, same partials — the
     // at-least-once scenario) is idempotent: files replaced, totals flat
     val before = merged.agg(sum("v")).head().getLong(0)

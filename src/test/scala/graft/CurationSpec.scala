@@ -77,7 +77,7 @@ class CurationSpec extends SparkSpec {
   test("wordNgrams: short and null texts produce empty arrays, not descending sequences") {
     val df = Seq((1L, "one two"), (2L, null.asInstanceOf[String]), (3L, "a b c"))
       .toDF("id", "text")
-      .select(col("id"), Curation.wordNgrams(col("text"), 3).as("g"))
+      .select(col("id"), Curation.wordNgramsOf(split(col("text"), " "), 3).as("g"))
     val got = df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(got(1L).isEmpty && got(2L).isEmpty)
     assert(got(3L) == Seq("a b c"))
@@ -191,26 +191,6 @@ class CurationSpec extends SparkSpec {
     assert(got(1L) == ((8L, 4L, 1L)), got(1L)) // span [1,4] → 4 words
     assert(got(2L) == ((8L, 4L, 1L)), got(2L))
     assert(got(3L) == ((8L, 0L, 0L)), got(3L))
-  }
-
-  test("stripDuplicateSpans: covered words are cut, clean docs pass through") {
-    val df = Seq(
-      (1L, "x alpha beta gamma delta y z q"),
-      (2L, "alpha beta gamma delta k l m n"),
-      (3L, "totally unrelated words sit here quietly today ok")).toDF("doc_id", "text")
-    val got = Curation.stripDuplicateSpans(df, "doc_id", "text", n = 3)
-      .select("doc_id", "clean_text").as[(Long, String)].collect().toMap
-    assert(got(1L) == "x y z q", got(1L)) // span [1,4] cut
-    assert(got(2L) == "k l m n", got(2L)) // span [0,3] cut
-    assert(got(3L) == "totally unrelated words sit here quietly today ok")
-    // consistency with the accounting: surviving words == n_words - dup_words
-    val stats = Curation.substringDedupStats(df, "doc_id", "text", n = 3)
-      .select("doc_id", "n_words", "dup_words").as[(Long, Long, Long)]
-      .collect().map(r => r._1 -> (r._2 - r._3)).toMap
-    got.foreach { case (id, txt) =>
-      val kept = if (txt.isEmpty) 0 else txt.split(" ").length
-      assert(kept.toLong == stats(id), s"doc $id: $kept vs ${stats(id)}")
-    }
   }
 
   test("percentileFilter: per-group median gate, threshold side broadcasts") {
@@ -357,26 +337,5 @@ class CurationSpec extends SparkSpec {
       .queryExecution.executedPlan.toString()
     assert(plan.contains("Generate"), plan)
     assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
-  }
-
-  test("exportShards: deterministic shard layout, readable back, stable membership") {
-    val df = (1L to 500L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
-    val dir = tempDir("shards")
-    Curation.exportShards(df, "doc_id", seed = "r10", rowsPerShard = 100L, s"$dir/out")
-    val back = spark.read.parquet(s"$dir/out")
-    assert(back.count() == 500L)
-    // 5 shards of exactly 100 rows
-    val sizes = back.groupBy("shard").count()
-      .collect().map(r => r.getAs[Any](0).toString.toLong -> r.getLong(1)).toMap
-    assert(sizes == Map(0L -> 100L, 1L -> 100L, 2L -> 100L, 3L -> 100L, 4L -> 100L), sizes)
-    // membership = md5-permutation position / 100, re-derivable
-    val expected = df.select(col("doc_id"),
-        md5(concat_ws(":", lit("r10"), col("doc_id").cast("string"))).as("h"))
-      .orderBy("h", "doc_id")
-      .collect().map(_.getLong(0)).zipWithIndex
-      .map { case (id, pos) => id -> pos / 100 }.toMap
-    val got = back.select(col("doc_id"), col("shard").cast("int"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(got == expected)
   }
 }

@@ -223,6 +223,34 @@ class PlanAuditSpec extends SparkSpec {
     assert(shapes.distinct.size == 1, shapes.map(_.json))
   }
 
+  test("sketch bounds builds its final join from sk on every run: a stable shape") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    def joins(p: SparkPlan): Seq[BroadcastHashJoinExec] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case o => o.children
+      }
+      (p match { case j: BroadcastHashJoinExec => Seq(j); case _ => Nil }) ++
+        kids.flatMap(joins)
+    }
+    val shapes = (1 to 2).map { _ =>
+      val df = SparkEntry.queries("q_sketch_bounds")(spark, sf)
+      df.queryExecution.toRdd.count()
+      val plan = df.queryExecution.executedPlan
+      // the sk ⋈ frac join is the one whose probe side carries below_frac
+      val last = joins(plan).filter(_.right.output.exists(_.name == "below_frac"))
+      assert(last.size == 1, plan.toString.take(4000))
+      assert(last.head.buildSide == BuildLeft &&
+        last.head.left.output.exists(_.name == "exact_users"), plan.toString.take(4000))
+      PlanShape.of(df)
+    }
+    assert(shapes.distinct.size == 1, shapes.map(_.json))
+  }
+
   test("stratified sampling plans a WindowGroupLimit (rank pushdown)") {
     val plan = executedPlan("q_stratified_sample")
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))

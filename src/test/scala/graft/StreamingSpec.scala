@@ -144,9 +144,10 @@ class StreamingSpec extends SparkSpec {
       .toDF("doc_id", "text").write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
     def runOnce(): Unit = {
-      val cur = CuratedStream.curateAndScrub(
+      val cur = CuratedStream.curate(
         Watch.tail(spark, dir, schema), "text",
         minTokens = 5, maxTokens = 100, maxDupWordFrac = 0.5, dedupWindow = "10 minutes")
+        .withColumn("text", graft.text.Curation.scrubPii(col("text")))
       val q = Watch.appendWriter(cur, out, ck, 1000L)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(60000)
