@@ -24,19 +24,30 @@ import scala.util.control.NonFatal
   */
 object Bench {
   /** The canonical-record acceptance rule (BenchGateSpec pins it):
-    * quiet sentinel AND same sf AND total no slower than the existing
-    * canonical's beyond 2% — the canonical is the fastest clean record,
-    * not the latest — AND no failed query: a failure is left out of the
-    * total, so a record with one would look faster than it is. A
-    * missing/other-sf canonical gates on pristineness alone. */
+    * quiet sentinel AND same sf AND same core count AND total no slower
+    * than the existing canonical's beyond 2% — the canonical is the
+    * fastest clean record, not the latest — AND no failed query: a
+    * failure is left out of the total, so a record with one would look
+    * faster than it is. With no canonical yet, pristineness alone gates. */
   private[graft] def canonAccept(drift: Double, sfMatches: Boolean,
+                                 cpusMatch: Boolean,
                                  prevTotal: Option[Double],
                                  total: Double,
                                  failed: Seq[String] = Nil): Boolean = {
     val pristine = drift <= 1.05 && drift >= 1 / 1.05
-    val fasterOrClose = !sfMatches || prevTotal.forall(p => total <= p * 1.02)
-    pristine && sfMatches && fasterOrClose && failed.isEmpty
+    val fasterOrClose = prevTotal.forall(p => total <= p * 1.02)
+    pristine && sfMatches && cpusMatch && fasterOrClose && failed.isEmpty
   }
+
+  /** The core count a record was measured on, from its `"cpus"` field. */
+  private[graft] def recordCpus(record: String): Option[Int] =
+    "\"cpus\":(\\d+)".r.findFirstMatchIn(record).map(_.group(1).toInt)
+
+  /** Whether a record was measured at this (sf, cpus). A record without
+    * a `"cpus"` field matches no run: it is never a mover baseline and
+    * never replaced without GRAFT_BENCH_FORCE. */
+  private[graft] def sameShape(record: String, sfDir: String, cpus: Int): Boolean =
+    record.contains(s""""sf":"$sfDir"""") && recordCpus(record).contains(cpus)
 
   /** The compact line's `queries` object, most expensive first, sized to
     * `budget` chars: 3-decimal seconds, else 2-decimal, else the cheapest
@@ -72,6 +83,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local()
+    val cpus = spark.sparkContext.defaultParallelism
     graft.queries.StreamRun.retainProgress(spark)
     // JVM/session warm-up so the first measured query isn't charged for
     // codegen compiler + executor spin-up.
@@ -220,21 +232,16 @@ object Bench {
     // five phantom regressions by hand).
     val retried = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     try {
-      // mover baseline: prefer the protected canonical record (same sf)
-      // over the bench_full.json scratch — the driver's contended record
-      // runs and dev smokes overwrite the scratch (recurring r15/r16
-      // nuisance), so movers are judged against the pristine record
-      val canonBase = java.nio.file.Paths.get("BENCH_CANONICAL.json")
-      val prevPath =
-        if (Files.exists(canonBase) &&
-            Files.readString(canonBase).contains(s""""sf":"$sfDir""""))
-          canonBase
-        else java.nio.file.Paths.get("bench_full.json")
-      // only comparable at the same scale factor — a dev-run record at
-      // another sf would flag everything and trigger 90+ useless retries
-      if (Files.exists(prevPath) &&
-          Files.readString(prevPath).contains(s""""sf":"$sfDir"""")) {
-        val prev = Files.readString(prevPath)
+      // mover baseline: prefer the protected canonical record over the
+      // bench_full.json scratch — the driver's contended record runs and
+      // dev smokes overwrite the scratch (recurring r15/r16 nuisance), so
+      // movers are judged against the pristine record. Only a record of
+      // the same (sf, cpus) is comparable: one at another scale or core
+      // count would flag everything and trigger 90+ useless retries
+      val baseline = Seq("BENCH_CANONICAL.json", "bench_full.json")
+        .map(java.nio.file.Paths.get(_)).filter(Files.exists(_))
+        .map(Files.readString(_)).find(sameShape(_, sfDir, cpus))
+      baseline.foreach { prev =>
         val pair = "\"(q_\\w+)\":(-?\\d+(?:\\.\\d+)?(?:E-?\\d+)?)".r
         val prevQ = pair.findAllMatchIn(prev)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
@@ -316,7 +323,7 @@ object Bench {
     // r8/r9) overflowed once the retries map appeared and cut the line's
     // head off mid-key → "parsed": null in two straight round records.
     val fixedFrame =
-      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"qdrop":${byCost.length},"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
+      s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":,"qdrop":${byCost.length},"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName","cpus":$cpus}"""
     // 60-char slack only: showSuccess=false + raw forked output mean
     // nothing follows this line in stdout anymore (was 140 for sbt's
     // trailing "[success] Total time …" line)
@@ -333,7 +340,7 @@ object Bench {
       .map { case (k, (f, kn)) =>
         s"\"" + k + s"\":{\"fixed\":${d3(f)},\"kernel\":${d3(kn)}}"
       }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"tables":${tablesJson(graft.core.Tables.counts)},"codegen":${codegenJson(codegen)},"failed":$failedJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"ingest":$ingest,"planAudit":${audit.json},"plans":$plansJson,"retries":${retriesJson(stripPrefix = false)},"sentinel":$sentinel,"jvm":$jvmCohorts,"streamSplit":$streamSplit,"tables":${tablesJson(graft.core.Tables.counts)},"codegen":${codegenJson(codegen)},"failed":$failedJson,"sf":"$sfDir","cpus":$cpus}"""
     try Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case NonFatal(e) =>
@@ -342,30 +349,29 @@ object Bench {
     // every run (driver record runs, dev smokes) overwrites; the quiet
     // pristine record lives under BENCH_CANONICAL.json, which only a
     // quiet-window run may replace — sentinel drift within 5%, the
-    // same sf as the existing canonical (so an sf0.01 dev smoke can't
-    // clobber the sf0.1 record), AND no slower than the existing
-    // canonical's total beyond 2% (r17 verdict: a pristine-but-slower
-    // run replaced the faster record through this door; the canonical
-    // is the fastest clean record, not the latest). GRAFT_BENCH_FORCE=1
-    // overrides all three.
+    // same sf and core count as the existing canonical (so an sf0.01
+    // dev smoke can't clobber the sf0.1 record, nor a 4-core run the
+    // 32-core one), AND no slower than the existing canonical's total
+    // beyond 2% (r17 verdict: a pristine-but-slower run replaced the
+    // faster record through this door; the canonical is the fastest
+    // clean record, not the latest). GRAFT_BENCH_FORCE=1 overrides all.
     try {
       val canonPath = java.nio.file.Paths.get("BENCH_CANONICAL.json")
-      val prevTotal: Option[Double] =
-        if (!Files.exists(canonPath)) None
-        else "\"value\":(\\d+(?:\\.\\d+)?)".r
-          .findFirstMatchIn(Files.readString(canonPath)).map(_.group(1).toDouble)
+      val canon = Some(canonPath).filter(Files.exists(_)).map(Files.readString(_))
+      val prevTotal: Option[Double] = canon.flatMap(
+        "\"value\":(\\d+(?:\\.\\d+)?)".r.findFirstMatchIn(_).map(_.group(1).toDouble))
       // a canonical that exists but yields no total would silently weaken
       // the ≤1.02× gate back to pristine-only — make that visible (ADVICE)
-      if (Files.exists(canonPath) && prevTotal.isEmpty)
+      if (canon.nonEmpty && prevTotal.isEmpty)
         System.err.println("[bench] WARNING: BENCH_CANONICAL.json exists but its total could not be parsed — slower-run gate degraded to pristine-only")
-      val sfMatches = !Files.exists(canonPath) ||
-        Files.readString(canonPath).contains(s""""sf":"$sfDir"""")
-      if (canonAccept(drift, sfMatches, prevTotal, total, failed.toSeq) ||
+      val sfMatches = canon.forall(_.contains(s""""sf":"$sfDir""""))
+      val cpusMatch = canon.forall(recordCpus(_).contains(cpus))
+      if (canonAccept(drift, sfMatches, cpusMatch, prevTotal, total, failed.toSeq) ||
           sys.env.get("GRAFT_BENCH_FORCE").contains("1")) {
         Files.write(canonPath, (fullLine + "\n").getBytes("UTF-8"))
         System.err.println("[bench] BENCH_CANONICAL.json updated (pristine window)")
       } else
-        System.err.println(f"[bench] BENCH_CANONICAL.json left untouched (drift $drift%.3f, sfMatch=$sfMatches, total ${d3(total)} vs canonical ${prevTotal.fold("-")(d3)}; GRAFT_BENCH_FORCE=1 to override)")
+        System.err.println(f"[bench] BENCH_CANONICAL.json left untouched (drift $drift%.3f, sfMatch=$sfMatches, cpusMatch=$cpusMatch, total ${d3(total)} vs canonical ${prevTotal.fold("-")(d3)}; GRAFT_BENCH_FORCE=1 to override)")
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not update BENCH_CANONICAL.json: $e") }
     // NOT printing fullLine to stdout: a partial copy of it surviving in
@@ -375,11 +381,8 @@ object Bench {
     // after it in a merged stdout+stderr capture (r19: every BENCH_rNN
     // record through r18 has "parsed": null; with run/fork raw output and
     // showSuccess=false this line now ends the process output).
-    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"qdrop":$qdrop,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName"}"""
-    try {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(scratch)).deleteRecursively()
-    } catch { case NonFatal(_) => }
+    val compactLine = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"qdrop":$qdrop,"ingest":$ingest,"sentinel":$sentinel,"retries":$retriesC,"failed":$failedJson,"sf":"$sfName","cpus":$cpus}"""
+    graft.core.TempDirs.rmTree(scratch)
     // a failing stop must not cost the run its one parseable line
     try spark.stop()
     catch { case NonFatal(e) => System.err.println(s"[bench] spark.stop failed: $e") }

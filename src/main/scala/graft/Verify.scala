@@ -44,7 +44,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     builders.toSeq.flatMap { case (name, fn) =>
       val out = s"$outDir/$name"
-      new scala.reflect.io.Directory(new java.io.File(out)).deleteRecursively()
+      graft.core.TempDirs.rmTree(out)
       try {
         fn(spark, sfDir).coalesce(1).write.parquet(out)
         None

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.Par
-import scala.util.Using
-import scala.util.control.NonFatal
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -45,15 +43,11 @@ object Dedup {
     // DIRECTED list's lineage first — the symmetrizing union would
     // otherwise run the producer (a pair-similarity join, typically the
     // dominant cost) twice, and every propagation round reads `sym`
-    // twice more. A checkpoint (not persist) so the rounds also plan
-    // over a bare RDD scan instead of re-analyzing the producer lineage.
-    val symCp = Using.resource(Par.materialize(
-        edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))) { d =>
-      Par.materialize(d.df
-        .union(d.df.select(col("dst").as("src"), col("src").as("dst"))))
-    }
-    Using.resource(symCp) { cp =>
-      val sym = cp.df
+    // twice more. Two rolling rounds: the symmetric list frees the
+    // directed one, and is freed on return (no returned frame reads it).
+    Par.rolling { rounds =>
+      val d = rounds.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
+      val sym = rounds.cut(d.union(d.select(col("dst").as("src"), col("src").as("dst"))))
       // Similarity graphs shrink drastically after thresholding: when the
       // edge set fits on the driver, path-compressed union-find beats any
       // number of distributed rounds (each round costs 2 joins + an agg of
@@ -94,12 +88,11 @@ object Dedup {
   }
 
   /** Distributed min-label propagation rounds over `sym`. Each round is
-    * materialized — each round's plan embeds two copies of the previous
-    * round's, so without lineage truncation the logical plan grows
-    * 2^rounds and the DRIVER dies in the optimizer long before any data
-    * pressure. One round is live at a time: round i−1 closes once round
-    * i is materialized. The last round backs the returned frame, so the
-    * caller owns it; a failure closes it. */
+    * a rolling round ([[Par.rolling]]) — each round's plan embeds two
+    * copies of the previous round's, so without lineage truncation the
+    * logical plan grows 2^rounds and the DRIVER dies in the optimizer
+    * long before any data pressure. The last round backs the returned
+    * frame, so the caller owns it. */
   private def labelRounds(sym: DataFrame, maxIter: Int): DataFrame = {
     def propagate(l: DataFrame): DataFrame = {
       val nbrMin = sym
@@ -117,28 +110,26 @@ object Dedup {
       l.select(col("v"), col("label").as("mid"))
         .join(l.select(col("v").as("mid"), col("label")), Seq("mid"))
         .select("v", "label")
-    var live = Par.materialize(sym.select(col("src").as("v")).distinct()
-      .select(col("v"), col("v").as("label")))
-    try {
+    Par.rolling { rounds =>
+      var live = rounds.cut(sym.select(col("src").as("v")).distinct()
+        .select(col("v"), col("v").as("label")))
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
-        // propagate twice then jump, one materialization per round; the
-        // round carries the previous label as `old` and counts changed
-        // labels while it materializes, so convergence costs no job
-        val labels = live.df.select("v", "label")
+        // propagate twice then jump, one checkpoint per round; the round
+        // carries the previous label as `old` and counts changed labels
+        // while it is checkpointed, so convergence costs no job
+        val labels = live.select("v", "label")
         val stepped = jump(propagate(propagate(labels)))
         val changed = Observation()
-        val next = Par.materialize(
+        live = rounds.cut(
           labels.select(col("v"), col("label").as("old")).join(stepped, Seq("v"))
             .observe(changed, count(when(col("label") =!= col("old"), 1)).as("n")))
-        live.close()
-        live = next
         converged = changed.get("n") == 0L
         i += 1
       }
-    } catch { case NonFatal(e) => live.close(); throw e }
-    live.df.select(col("v"), col("label").as("cluster"))
+      live.select(col("v"), col("label").as("cluster"))
+    }
   }
 
   /** SemDeDup-style embedding near-dup (Abbas et al. 2023 shape):
@@ -166,8 +157,7 @@ object Dedup {
         transform(col(vecCol), x => x.cast("double")).as("v"))
       .withColumn("cell",
         graft.similarity.Ivf.cellOf(col("v"), index).cast("long"))
-    Using.resource(Par.materialize(assigned)) { cp =>
-      val e = cp.df
+    Par.through(assigned) { e =>
       val a = e.select(col("cell"), col("id").as("id_a"), col("v").as("va"))
       val b = e.select(col("cell"), col("id").as("id_b"), col("v").as("vb"))
       val edges = a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
@@ -181,7 +171,6 @@ object Dedup {
         .select(col("id"), col("cell"),
           coalesce(col("cluster"), col("id")).as("cluster"))
         .withColumn("keep", col("id") === col("cluster"))
-        .localCheckpoint(eager = true)
     }
   }
 
@@ -336,10 +325,11 @@ object Dedup {
       b => xxhash64(concat_ws(",",
         slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))), b)))
     // a streaming delta re-reads the corpus index EVERY micro-batch —
-    // pin the static side in memory exactly as a production intake would
-    // pin its signature index (batch callers keep the one-pass plan)
-    val corpSigs0 = sigs(graft.core.Par.expand(corpus))
-    val corpSigs = if (incoming.isStreaming) corpSigs0.persist() else corpSigs0
+    // checkpoint the static side exactly as a production intake would
+    // pin its signature index (batch callers keep the one-pass plan).
+    // The returned stream owns it: nothing enters the session's cache.
+    val corpSigs0 = sigs(Par.expand(corpus))
+    val corpSigs = if (incoming.isStreaming) Par.keep(corpSigs0) else corpSigs0
     val corpBanded = corpSigs.select(col(idCol).as("corpus_id"), bandBuckets)
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
     val inBanded = sigs(incoming)

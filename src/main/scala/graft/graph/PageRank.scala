@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.control.NonFatal
 import graft.functions.Rounding.fround
 
 /** Distributed PageRank over an edge relation — the centrality pass of a
@@ -59,10 +58,9 @@ object PageRank {
     // iterations — a separate degree aggregate would be a second,
     // differently-shaped reader of the edges and re-derive them
     val adj = edges.groupBy(col("src")).agg(collect_list(col("dst")).as("dsts"))
-    var ranks = nodes.select(col("v"), lit(1d / nD).as("r"))
-    // the checkpoint behind `ranks`, once one is taken; one live at a time
-    var live: Option[graft.core.Par.Checkpoint] = None
-    try {
+    // each truncation is a rolling round; the result reads the last one
+    graft.core.Par.rolling { rounds =>
+      var ranks = nodes.select(col("v"), lit(1d / nD).as("r"))
       var it = 0
       var converged = false
       while (it < iters && !converged) {
@@ -82,25 +80,20 @@ object PageRank {
         // with iters — same cure as Dedup.connectedComponents. Values are
         // 9-dp-pinned per iteration, so checkpointing never changes them.
         if (it % CheckpointEvery == 0 && it < iters) {
-          val next = graft.core.Par.materialize(ranks)
-          ranks = next.df
-          tol.foreach { eps =>
-            // compare THIS iteration against the one before it — a
-            // consecutive-step delta, so eps=0 certifies a true fixpoint
-            // (the update is deterministic: unchanged input ⇒ unchanged
-            // output), not a longer-period cycle
-            val delta = ranks
-              .join(prev.withColumnRenamed("r", "rp"), "v")
-              .agg(max(abs(col("r") - col("rp")))).head().getDouble(0)
-            if (delta <= eps) converged = true
-          }
-          // `prev` was the last reader of the older checkpoint
-          live.foreach(_.close())
-          live = Some(next)
+          // compare THIS iteration against the one before it — a
+          // consecutive-step delta, so eps=0 certifies a true fixpoint
+          // (the update is deterministic: unchanged input ⇒ unchanged
+          // output), not a longer-period cycle. `prev` reads the older
+          // round, which the cut frees once the check has run.
+          val (cut, done) = rounds.cut(ranks, r => tol.exists { eps =>
+            r.join(prev.withColumnRenamed("r", "rp"), "v")
+              .agg(max(abs(col("r") - col("rp")))).head().getDouble(0) <= eps
+          })
+          ranks = cut
+          converged = done
         }
       }
-    } catch { case NonFatal(e) => live.foreach(_.close()); throw e }
-    // the result reads the last checkpoint, so the caller owns it
-    ranks.select(col("v"), col("r").as("rank"))
+      ranks.select(col("v"), col("r").as("rank"))
+    }
   }
 }

@@ -493,17 +493,20 @@ object TimeSeries {
       // quadratically more HLL registers (rsd 0.01 made this the most
       // expensive query in the suite), and the ±5% bound sat at 1σ of
       // the default sketch — genuinely missed at sf0.1
+      // the exact count is a set size, not countDistinct: a distinct
+      // aggregate beside approx_percentile expands every row and gives
+      // each (event_type, user_id) group its own percentile buffer
       val sk = e.groupBy("event_type")
-        .agg(countDistinct("user_id").as("exact_users"),
+        .agg(size(collect_set("user_id")).cast("long").as("exact_users"),
           approx_count_distinct("user_id").as("approx_users"),
           expr("approx_percentile(value, 0.5, 10000)").as("approx_p50"))
-      val frac = e.join(broadcast(sk), "event_type")
-        .groupBy("event_type")
+      // both user counts are constant per event_type, so grouping by
+      // them keeps the rows and carries them past the rank count: `sk`
+      // is aggregated once, with no join back to it
+      e.join(broadcast(sk), "event_type")
+        .groupBy("event_type", "exact_users", "approx_users")
         .agg((sum(when(col("value") <= col("approx_p50"), 1L).otherwise(0L))
           .cast("double") / count(lit(1))).as("below_frac"))
-      // both sides are a few rows: without the hint AQE builds whichever
-      // stage finishes first, and the plan differs from run to run
-      broadcast(sk).join(frac, "event_type")
         .select(col("event_type"), col("exact_users"),
           (abs(col("approx_users") - col("exact_users")) <=
             greatest(col("exact_users") * 0.16, lit(1.0))).as("distinct_ok"),

@@ -5,6 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.core.TempDirs
 
 /** In-session machbase-style tag tables for the SQL surface tests
   * (reference fixture tables `tag_data` / `tag_simple`, schema
@@ -136,7 +137,7 @@ object TagTables {
     * surfaces like rowCount don't need a Spark action) */
   private val baseRows = TrieMap.empty[String, Long]
   private val segCounter = new java.util.concurrent.atomic.AtomicLong()
-  private lazy val segRoot: String = graft.core.TempDirs.forJvm("graft_tag_segs")
+  private lazy val segRoot: String = TempDirs.forJvm("graft_tag_segs")
   /** user-created tag tables (`create tag table …` DDL) */
   private val dynamicSchemas = TrieMap.empty[String, StructType]
   private val dynamicDescs = TrieMap.empty[String, Seq[ColDesc]]
@@ -724,18 +725,6 @@ object TagTables {
     }
   }
 
-  /** Best-effort recursive delete of a retired segment directory —
-    * rewriteBase/dropBase retire whole directories; leaving them on disk
-    * would leak a full copy of the base per DELETE. */
-  private def deleteDir(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rec))
-      f.delete(); ()
-    }
-    scala.util.Try(rec(new java.io.File(path)))
-    ()
-  }
-
   /** Rewrite a table's base segments keeping only `keep(base)`'s rows
     * (copy-on-write DELETE over the distributed base — filter + parquet
     * write, nothing on the driver). Runs BEFORE any buffer mutation in
@@ -753,21 +742,21 @@ object TagTables {
         val old = baseSegs.getOrElse(t, Vector.empty)
         val dest = s"$segRoot/$t/seg-${segCounter.incrementAndGet()}"
         try keep(base).write.parquet(dest)
-        catch { case e: Throwable => deleteDir(dest); throw e }
+        catch { case e: Throwable => TempDirs.rmTree(dest); throw e }
         // explicit schema: a DELETE that empties the base writes a
         // part-less directory, which schema inference cannot read
         val after = spark.read.schema(storageSchemaFor(t)).parquet(dest).count()
         if (after == 0L) { baseSegs.remove(t); baseRows.remove(t) }
         else { baseSegs.put(t, Vector(dest)); baseRows.put(t, after) }
         refresh(spark, t)
-        old.foreach(deleteDir)
-        if (after == 0L) deleteDir(dest)
+        old.foreach(TempDirs.rmTree)
+        if (after == 0L) TempDirs.rmTree(dest)
         before - after
     }
   }
 
   private def dropBase(t: String): Long = {
-    baseSegs.remove(t).foreach(_.foreach(deleteDir))
+    baseSegs.remove(t).foreach(_.foreach(TempDirs.rmTree))
     baseRows.remove(t).getOrElse(0L)
   }
 
@@ -804,7 +793,7 @@ object TagTables {
         val (n, dirs) = retireBase(t)
         data.clear()
         refresh(spark, t) // re-register the emptied view BEFORE deleting
-        dirs.foreach(deleteDir)
+        dirs.foreach(TempDirs.rmTree)
         n
     }
     (before - data.size).toLong + baseRemoved
@@ -945,12 +934,12 @@ object TagTables {
     ensure(spark, t)
     val dest = s"$segRoot/$t/seg-${segCounter.incrementAndGet()}"
     try alignToStorage(t, df).write.parquet(dest)
-    catch { case e: Throwable => deleteDir(dest); throw e }
+    catch { case e: Throwable => TempDirs.rmTree(dest); throw e }
     // explicit schema: an empty frame writes a part-less directory that
     // schema inference cannot read back (manifest rows can overshoot the
     // filtered data) — count it readably and drop the no-op segment
     val n = spark.read.schema(storageSchemaFor(t)).parquet(dest).count()
-    if (n == 0L) { deleteDir(dest); return 0L }
+    if (n == 0L) { TempDirs.rmTree(dest); return 0L }
     baseSegs.updateWith(t)(prev => Some(prev.getOrElse(Vector.empty) :+ dest))
     baseRows.put(t, baseRows.getOrElse(t, 0L) + n)
     refresh(spark, t)

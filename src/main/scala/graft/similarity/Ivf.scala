@@ -3,7 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.util.Using
 
 /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
   * corpus into cells; a query scans only its `nprobe` nearest cells.
@@ -48,14 +47,10 @@ object Ivf {
     // hash-based sample: deterministic, one pass, no count() pre-job;
     // falls back to the full corpus when the sample has fewer than k rows
     val sampled = all.filter(pmod(hash(col("id")), lit(sampleInv)) === 0)
-    // lineage-cut materialization: each Lloyd step plans over a bare
-    // RDD scan instead of re-analyzing the scan+decode lineage
     // NO Par.expand here: the Lloyd sums are plain doubles (recall-gated
     // quantizer), so repartitioning would reorder the fold and drift the
     // centroids; the lineage cut alone preserves partition contents.
-    val trained = Using.resource(graft.core.Par.materialize(
-        if (sampleInv <= 1) all else sampled)) { cp =>
-      val e = cp.df
+    val trained = graft.core.Par.within(if (sampleInv <= 1) all else sampled) { e =>
       val head = e.orderBy("id").limit(k).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
       // sample too small for k seeds: None retrains on everything below

@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.Using
 import graft.functions.Rounding.fround
 
 /** Embedding-corpus statistics: oracle-deterministic Lloyd k-means and
@@ -56,14 +55,11 @@ object Kmeans {
     * exact decimal accumulator so it cannot drift with partitioning. */
   def fitStats(emb: DataFrame, idCol: String, vecCol: String,
                k: Int, iters: Int): DataFrame = {
-    // lineage-cut materialization (the classifier-trainer pattern):
-    // every Lloyd step plans over a bare RDD scan instead of
-    // re-analyzing the embedding-scan lineage. No Par.expand: at bench
+    // every Lloyd step reads the checkpoint. No Par.expand: at bench
     // shapes the per-task fixed cost of widening exceeded the compute
     // it spread (measured r18).
-    Using.resource(graft.core.Par.materialize(emb.select(
-        col(idCol).cast("long").as("id"), toDouble(col(vecCol)).as("v")))) { cp =>
-      val e = cp.df
+    graft.core.Par.through(emb.select(
+        col(idCol).cast("long").as("id"), toDouble(col(vecCol)).as("v"))) { e =>
       var cents = e.orderBy("id").limit(k).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
       require(cents.length == k, s"Kmeans.fitStats: corpus smaller than k=$k")
@@ -84,8 +80,8 @@ object Kmeans {
         fround(math.sqrt(s), 6)
       }
       val nn = nearestStruct(col("v"), fin)
-      // materialize the <=k-row result so the Lloyd relation's blocks
-      // free when the handle closes; the caller's action then scans k rows
+      // the <=k-row result is checkpointed, so the caller's action scans
+      // k rows after the Lloyd relation's blocks are freed
       e.select(col("id"), nn.getField("i").cast("long").as("cluster"),
           nn.getField("d").as("dist"))
         .groupBy("cluster")
@@ -95,7 +91,6 @@ object Kmeans {
           element_at(array(norms.map(lit): _*), (col("cluster") + 1).cast("int")))
         .select("cluster", "n", "min_vec", "c_norm", "inertia")
         .orderBy("cluster")
-        .localCheckpoint(eager = true)
     }
   }
 
@@ -112,9 +107,8 @@ object Kmeans {
     // probe, centroid agg, median, MAD) — each otherwise re-ran the
     // scan + array-decode; no widening (per-task overhead exceeded the
     // spread compute at bench shape, measured r18)
-    Using.resource(graft.core.Par.materialize(emb.select(
-        (col(idCol) +: keepCols.map(col)) :+ toDouble(col(vecCol)).as("__v"): _*))) { cp =>
-      val base = cp.df
+    graft.core.Par.through(emb.select(
+        (col(idCol) +: keepCols.map(col)) :+ toDouble(col(vecCol)).as("__v"): _*)) { base =>
       val dims = base.select(size(col("__v"))).head.getInt(0)
       val crow = base.groupBy().agg(
         count(lit(1)).as("n"),
@@ -128,14 +122,11 @@ object Kmeans {
       val med = withDist.agg(percentile(col("__dist"), lit(0.5))).head.getDouble(0)
       val mad = withDist
         .agg(percentile(abs(col("__dist") - med), lit(0.5))).head.getDouble(0)
-      // materialize the (small) outlier set so the base's blocks free
-      // when the handle closes
       withDist.filter(abs(col("__dist") - med) > nMads * mad)
         .select((col(idCol) +: keepCols.map(col)) :+
           fround(col("__dist"), 6).as("dist") :+
           fround(abs(col("__dist") - med), 6).as("dev"): _*)
         .orderBy(idCol)
-        .localCheckpoint(eager = true)
     }
   }
 }

@@ -3,7 +3,6 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.util.Using
 
 /** Product quantization (IVF-PQ's storage half): the vector splits into
   * `m` subspaces, each quantized against its own `ksub`-entry codebook,
@@ -38,11 +37,8 @@ object Pq {
             sampleInv: Int = 4): Index = {
     val all = corpus.select(col(idCol).as("id"), toDoubleArr(col(vecCol)).as("v"))
     val sampled = all.filter(pmod(hash(col("id")), lit(sampleInv)) === 0)
-    // lineage-cut materialization — see Ivf.train
     // NO Par.expand: plain-double partial sums — see Ivf.train
-    val trained = Using.resource(graft.core.Par.materialize(
-        if (sampleInv <= 1) all else sampled)) { cp =>
-      val e = cp.df
+    val trained = graft.core.Par.within(if (sampleInv <= 1) all else sampled) { e =>
       val head = e.orderBy("id").limit(ksub).select("v")
         .collect().map(_.getSeq[Double](0).toArray)
       // sample too small for ksub seeds: None retrains on everything below

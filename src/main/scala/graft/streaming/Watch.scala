@@ -186,12 +186,11 @@ object Watch {
             unix_micros(col("time").cast("timestamp"))
           case _ => unix_micros(col("time"))
         }
-        val out = batch.select(col("name"),
+        // read by the publish, the horizon and the coarser tiers
+        graft.core.Par.within(batch.select(col("name"),
           (tUs * 1000L).as("time_ns"),
           col("min_value"), col("max_value"), col("sum_value"),
-          col("sumsq_value"), col("cnt"))
-        out.persist()
-        try {
+          col("sumsq_value"), col("cnt"))) { out =>
           publishBatch(out, rollupDir, batchId)
           val maxStart = out.agg(max("time_ns")).head()
           if (!maxStart.isNullAt(0)) {
@@ -207,7 +206,7 @@ object Watch {
                 dir, coarseNs, nameCol, tsCol, valueCol))
             }
           }
-        } finally out.unpersist()
+        }
       }
       .start()
   }

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.Using
 import graft.functions.Rounding.fround
 
 /** Per-domain Platt scaling (Platt 1999, "Probabilistic Outputs for
@@ -47,11 +46,7 @@ object Calibration {
     val base0 = scored.select(col(idCol), col(domainCol),
       col(scoreCol).cast("double").as("__s"),
       col(labelCol).cast("double").as("__y"))
-    // lineage-cut materialization (the classifier-trainer pattern):
-    // each fit iteration then plans over a bare RDD scan instead of
-    // re-analyzing the full upstream lineage
-    Using.resource(graft.core.Par.materialize(base0)) { cp =>
-      val base = cp.df
+    graft.core.Par.through(base0) { base =>
       val fit = fitParams(base, domainCol, iters, lr)
       // (A_d, B_d) inline as |domains|-entry map literals (domains are a
       // bounded label set) — the calibration pass is a pure projection,
@@ -63,7 +58,6 @@ object Calibration {
           fround(sigmoid9(element_at(aM, col(domainCol)) * col("__s") +
             element_at(bM, col(domainCol))), 6).as("cal_score"),
           col("__y").cast("long").as("label"))
-        .localCheckpoint(eager = true)
     }
   }
 
@@ -82,11 +76,10 @@ object Calibration {
   def plattFit(scored: DataFrame, domainCol: String, scoreCol: String,
                labelCol: String, iters: Int = 3,
                lr: Double = 2.0): DataFrame = {
-    // the fit is driver data, so the handle closes here
-    Using.resource(graft.core.Par.materialize(scored.select(col(domainCol),
+    graft.core.Par.within(scored.select(col(domainCol),
         col(scoreCol).cast("double").as("__s"),
-        col(labelCol).cast("double").as("__y")))) { cp =>
-      fitOn(cp.df, domainCol, iters, lr)
+        col(labelCol).cast("double").as("__y"))) { base =>
+      fitOn(base, domainCol, iters, lr)
     }
   }
 
@@ -171,11 +164,9 @@ object Calibration {
                         scoreCol: String, labelCol: String): DataFrame = {
     val spark = scored.sparkSession
     import spark.implicits._
-    // lineage cut — see plattCalibrate
-    Using.resource(graft.core.Par.materialize(scored.select(col(idCol),
+    graft.core.Par.through(scored.select(col(idCol),
         col(domainCol), col(scoreCol).cast("double").as("score"),
-        col(labelCol).cast("double").as("__y")))) { cp =>
-      val base = cp.df
+        col(labelCol).cast("double").as("__y"))) { base =>
       val bins = base.groupBy(col(domainCol), col("score"))
         .agg(count(lit(1)).as("n"), sum(col("__y").cast("long")).as("sy"))
         .select(col(domainCol).as("__d"), col("score"), col("n"), col("sy"))
@@ -207,7 +198,6 @@ object Calibration {
         .select(col(idCol), col(domainCol), col("score"),
           fround(col("__iso"), 6).as("iso_score"),
           col("__y").cast("long").as("label"))
-        .localCheckpoint(eager = true)
     }
   }
 

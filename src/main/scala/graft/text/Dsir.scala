@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.Using
 import graft.functions.Rounding.fround
 
 /** DSIR-style hashed n-gram importance weighting (Xie et al. 2023,
@@ -74,10 +73,8 @@ object Dsir {
     import spark.implicits._
     val stream0 = gramBuckets(docs.withColumn("__t", targetPred), idCol,
       textCol, width, carry = Seq("__t"))
-    // cut the lineage up front (the classifier-trainer pattern) so the
-    // two consumers plan over a bare RDD scan
-    Using.resource(graft.core.Par.materialize(stream0)) { cp =>
-      val stream = cp.df
+    // both consumers read one checkpointed gram stream
+    graft.core.Par.through(stream0) { stream =>
       val counts = stream.groupBy("b").agg(
           count(lit(1)).as("rcnt"),
           sum(when(col("__t"), 1L).otherwise(0L)).as("tcnt"))
@@ -91,10 +88,7 @@ object Dsir {
           math.log((tcnt + 1d) / (ttot + width.toDouble)) -
           math.log((rcnt + 1d) / (rtot + width.toDouble)), 9))
       }.toDF("b", "wgt")
-      // materialize the (one row per doc) scored relation so the caller
-      // never re-runs the tokenize when it finally consumes the result
       scoreBuckets(stream.select(col(idCol), col("b")), idCol, weights)
-        .localCheckpoint(eager = true)
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import scala.util.Using
 import graft.functions.Rounding.fround
 
 /** fastText-style quality/language classifier over hashed n-gram
@@ -153,14 +152,10 @@ object QualityClassifier {
             lr: Double = 5.0): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // materialize instead of persist: the GD loop plans one job per
-    // iteration over this relation, and a persisted frame still carries
-    // the full tokenize lineage through analysis/optimization every
-    // time — the lineage cut makes each iteration plan a bare RDD scan.
-    // The weights are driver data, so the handle closes here.
-    val w = Using.resource(graft.core.Par.materialize(
-        docFeatures(docs, idCol, textCol, labelPred, width))) { cp =>
-      trainOnDocFeats(cp.df, width, iters, lr)
+    // the GD loop plans one job per iteration over the feature relation
+    val w = graft.core.Par.within(
+        docFeatures(docs, idCol, textCol, labelPred, width)) { feats =>
+      trainOnDocFeats(feats, width, iters, lr)
     }
     w.toSeq.sortBy(_._1).toDF("b", "w")
   }
@@ -176,11 +171,10 @@ object QualityClassifier {
                     labelAs: Option[String] = None): DataFrame =
     // the scoring projection is shuffle-free, so the final checkpoint is
     // one cheap map job
-    Using.resource(graft.core.Par.materialize(
-        docFeatures(docs, idCol, textCol, labelPred, width, carry))) { cp =>
-      val w = trainOnDocFeats(cp.df, width, iters, lr)
-      scoreDocFeats(cp.df, idCol, w, width, carry, labelAs)
-        .localCheckpoint(eager = true)
+    graft.core.Par.through(
+        docFeatures(docs, idCol, textCol, labelPred, width, carry)) { feats =>
+      val w = trainOnDocFeats(feats, width, iters, lr)
+      scoreDocFeats(feats, idCol, w, width, carry, labelAs)
     }
 
   /** shuffle-free scoring projection over the per-doc feature relation:
@@ -283,11 +277,11 @@ object QualityClassifier {
                           labelAs: Option[String] = None): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    Using.resource(graft.core.Par.materialize(
-        docFeatures(docs, idCol, textCol, labelPred, width, carry))) { cp =>
-      val w = trainOnDocFeats(cp.df, width, iters, lr)
-      val twin = twinFromDocFeats(cp.df, idCol, w, width, carry, labelAs)
-        .localCheckpoint(eager = true)
+    graft.core.Par.within(
+        docFeatures(docs, idCol, textCol, labelPred, width, carry)) { feats =>
+      val w = trainOnDocFeats(feats, width, iters, lr)
+      val twin = graft.core.Par.keep(
+        twinFromDocFeats(feats, idCol, w, width, carry, labelAs))
       (w.toSeq.sortBy(_._1).toDF("b", "w"), twin)
     }
   }

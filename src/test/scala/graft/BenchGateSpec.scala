@@ -7,31 +7,44 @@ import org.scalatest.funsuite.AnyFunSuite
   * record; r18 adds the total gate). Pure-function spec — no Spark. */
 class BenchGateSpec extends AnyFunSuite {
   test("accepts a pristine faster record") {
-    assert(Bench.canonAccept(drift = 1.00, sfMatches = true,
+    assert(Bench.canonAccept(drift = 1.00, sfMatches = true, cpusMatch = true,
       prevTotal = Some(150.0), total = 120.0))
   }
   test("accepts within the 2% tolerance") {
-    assert(Bench.canonAccept(1.02, sfMatches = true, Some(100.0), 101.9))
+    assert(Bench.canonAccept(1.02, sfMatches = true, cpusMatch = true, Some(100.0), 101.9))
   }
   test("rejects a pristine but slower record (the r17 hole)") {
-    assert(!Bench.canonAccept(0.97, sfMatches = true, Some(149.67), 156.0))
+    assert(!Bench.canonAccept(0.97, sfMatches = true, cpusMatch = true, Some(149.67), 156.0))
   }
   test("rejects drifted runs regardless of speed") {
-    assert(!Bench.canonAccept(1.20, sfMatches = true, Some(150.0), 100.0))
-    assert(!Bench.canonAccept(0.80, sfMatches = true, Some(150.0), 100.0))
+    assert(!Bench.canonAccept(1.20, sfMatches = true, cpusMatch = true, Some(150.0), 100.0))
+    assert(!Bench.canonAccept(0.80, sfMatches = true, cpusMatch = true, Some(150.0), 100.0))
   }
   test("rejects an sf mismatch even when fast and quiet") {
-    assert(!Bench.canonAccept(1.00, sfMatches = false, Some(150.0), 10.0))
+    assert(!Bench.canonAccept(1.00, sfMatches = false, cpusMatch = true, Some(150.0), 10.0))
   }
   test("no existing canonical: pristineness alone gates") {
-    assert(Bench.canonAccept(1.00, sfMatches = true, None, 999.0))
-    assert(!Bench.canonAccept(1.30, sfMatches = true, None, 1.0))
+    assert(Bench.canonAccept(1.00, sfMatches = true, cpusMatch = true, None, 999.0))
+    assert(!Bench.canonAccept(1.30, sfMatches = true, cpusMatch = true, None, 1.0))
   }
   test("rejects a record with any failed query, however fast and quiet") {
-    assert(!Bench.canonAccept(1.00, sfMatches = true, Some(150.0), 100.0,
+    assert(!Bench.canonAccept(1.00, sfMatches = true, cpusMatch = true, Some(150.0), 100.0,
       failed = Seq("q_pagerank")))
-    assert(!Bench.canonAccept(1.00, sfMatches = true, None, 1.0,
+    assert(!Bench.canonAccept(1.00, sfMatches = true, cpusMatch = true, None, 1.0,
       failed = Seq("q_a", "q_b")))
+  }
+  test("a 4-core record cannot replace a 32-core canonical") {
+    val canon = """{"metric":"total","value":126.36,"failed":[],"sf":"/data/sf0.1","cpus":32}"""
+    assert(Bench.recordCpus(canon).contains(32))
+    assert(Bench.sameShape(canon, "/data/sf0.1", cpus = 32))
+    assert(!Bench.sameShape(canon, "/data/sf0.1", cpus = 4))
+    // quiet, same sf and 2.4x faster: refused on the core count alone
+    assert(!Bench.canonAccept(1.00, sfMatches = true,
+      cpusMatch = Bench.recordCpus(canon).contains(4), Some(126.36), 52.59))
+    // a canonical that names no core count is never replaced or compared
+    val bare = """{"metric":"total","value":126.36,"sf":"/data/sf0.1"}"""
+    assert(Bench.recordCpus(bare).isEmpty)
+    assert(!Bench.sameShape(bare, "/data/sf0.1", cpus = 32))
   }
   test("compact queries hold only queries; the drop count comes back on its own") {
     val byCost = (1 to 60).map(i => f"q_query_$i%02d" -> (100.0 / i + 0.0004))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the checkpoint lifetime rule (`Par.materialize`): kernels that
+/** Pins the checkpoint lifetime rule (`graft.core.Par`): kernels that
   * checkpoint an INTERMEDIATE relation free its storage blocks at kernel
   * exit — on normal return, early return and exception alike — instead
   * of leaving them to the ContextCleaner; a 208-query bench JVM
@@ -104,6 +104,79 @@ class CheckpointLifecycleSpec extends SparkSpec {
     eventuallyAtMost(1, base)
     // the rolling rounds reach the same labels as the driver union-find
     assert(cc.orderBy("v").collect().toSeq == driver)
+  }
+
+  test("a body that throws frees its input's blocks") {
+    val base = persistedIds()
+    val e = intercept[IllegalStateException] {
+      graft.core.Par.within(spark.range(100).toDF()) { d =>
+        assert(d.count() == 100)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    eventuallyAtMost(0, base)
+  }
+
+  test("a returned frame stays readable after its input is freed") {
+    val base = persistedIds()
+    val out = graft.core.Par.through(spark.range(100).toDF("v")) { d =>
+      d.filter(col("v") % 2 === 0)
+    }
+    eventuallyAtMost(1, base) // the input is gone, the result's checkpoint stays
+    assert(out.count() == 50)
+    // the driver-data form refuses to hand out a frame over its freed scan
+    val e = intercept[IllegalStateException] {
+      graft.core.Par.within(spark.range(10).toDF("v"))(d => d.filter(col("v") > 2))
+    }
+    assert(e.getMessage.contains("Par.through"), e.getMessage)
+    eventuallyAtMost(1, base)
+  }
+
+  test("rolling rounds leave only the last round alive") {
+    val base = persistedIds()
+    val out = graft.core.Par.rolling { rounds =>
+      var cur = rounds.cut(spark.range(10).toDF("v"))
+      (1 to 3).foreach { _ =>
+        cur = rounds.cut(cur.select((col("v") + 1).as("v")))
+        eventuallyAtMost(1, base) // one live round at a time
+      }
+      cur.select((col("v") * 2).as("v"))
+    }
+    eventuallyAtMost(1, base) // the last round backs the result
+    assert(out.agg(sum("v")).head.getLong(0) == 150) // 2 * (3 + … + 12)
+    // a result that does not read the last round frees it; so does a failure
+    val counted = graft.core.Par.rolling { rounds =>
+      val n = rounds.cut(spark.range(7).toDF("v")).count()
+      spark.range(n).toDF("v")
+    }
+    assert(counted.count() == 7)
+    intercept[ArithmeticException] {
+      graft.core.Par.rolling { rounds =>
+        rounds.cut(spark.range(5).toDF("v"))
+        throw new ArithmeticException("round failed")
+      }
+    }
+    eventuallyAtMost(1, base)
+  }
+
+  test("q_stream_neardup leaves nothing in the session's cache") {
+    spark.catalog.clearCache()
+    SparkEntry.queries("q_stream_neardup")(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("q_dedup_incremental planned after q_stream_neardup reads no cached relation") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.catalog.clearCache()
+    val expected = SparkEntry.queries("q_dedup_incremental")(spark, sf).collect().toSeq
+    SparkEntry.queries("q_stream_neardup")(spark, sf).collect()
+    val df = SparkEntry.queries("q_dedup_incremental")(spark, sf)
+    val cached = df.queryExecution.optimizedPlan.collectWithSubqueries {
+      case r: InMemoryRelation => r
+    }
+    assert(cached.isEmpty, df.queryExecution.optimizedPlan.toString.take(4000))
+    assert(df.collect().toSeq == expected)
   }
 
   test("close frees the checkpoint RDD without the lineage WARN") {

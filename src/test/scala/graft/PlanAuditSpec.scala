@@ -223,29 +223,35 @@ class PlanAuditSpec extends SparkSpec {
     assert(shapes.distinct.size == 1, shapes.map(_.json))
   }
 
-  test("sketch bounds builds its final join from sk on every run: a stable shape") {
-    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+  test("sketch bounds runs one approx_percentile chain: a stable shape") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{ApproximatePercentile, Final, HyperLogLogPlusPlus}
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    def joins(p: SparkPlan): Seq[BroadcastHashJoinExec] = {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // per final-mode aggregate node, the sketches it finishes: `sk` is
+    // one chain that finishes both, not one chain per use of `sk`
+    def sketchFinals(p: SparkPlan): Seq[Set[String]] = {
       val kids = p match {
         case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
         case q: QueryStageExec => Seq(q.plan)
         case o => o.children
       }
-      (p match { case j: BroadcastHashJoinExec => Seq(j); case _ => Nil }) ++
-        kids.flatMap(joins)
+      val here = p match {
+        case a: BaseAggregateExec => Seq(a.aggregateExpressions.filter(_.mode == Final)
+          .map(_.aggregateFunction).collect {
+            case _: ApproximatePercentile => "approx_percentile"
+            case _: HyperLogLogPlusPlus => "approx_count_distinct"
+          }.toSet).filter(_.nonEmpty)
+        case _ => Nil
+      }
+      here ++ kids.flatMap(sketchFinals)
     }
     val shapes = (1 to 2).map { _ =>
       val df = SparkEntry.queries("q_sketch_bounds")(spark, sf)
       df.queryExecution.toRdd.count()
       val plan = df.queryExecution.executedPlan
-      // the sk ⋈ frac join is the one whose probe side carries below_frac
-      val last = joins(plan).filter(_.right.output.exists(_.name == "below_frac"))
-      assert(last.size == 1, plan.toString.take(4000))
-      assert(last.head.buildSide == BuildLeft &&
-        last.head.left.output.exists(_.name == "exact_users"), plan.toString.take(4000))
+      assert(sketchFinals(plan) == Seq(Set("approx_percentile", "approx_count_distinct")),
+        plan.toString.take(4000))
       PlanShape.of(df)
     }
     assert(shapes.distinct.size == 1, shapes.map(_.json))
