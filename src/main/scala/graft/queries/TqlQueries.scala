@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.tql.Tql
+import graft.tql.Compiler
 import Q._
 
 /** TQL front-end battery: scripts compiled to DataFrame plans and
@@ -21,7 +21,7 @@ object TqlQueries {
     // SQL source → GROUP → (CSV sink shape); compiled, not interpreted
     "q_tql_group" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_type, value FROM tql_events')
           |GROUP(by(value(0), 'event_type'), count(value(1), 'cnt'),
           |      min(value(1), 'min_value'), max(value(1), 'max_value'))
@@ -34,7 +34,7 @@ object TqlQueries {
       val e0 = t(s, dir, "events")
       e0.select(graft.time.TimeFns.nsToUs(tsNs(e0)).as("t_us"), col("value"))
         .createOrReplaceTempView("tql_events_us")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT t_us, value FROM tql_events_us')
           |GROUP(timewindow(1704412800000000, 1704499200000000, 300000000),
           |      count(value(1), 'cnt'), min(value(1), 'min_value'),
@@ -50,7 +50,7 @@ object TqlQueries {
       val e0 = t(s, dir, "events")
       e0.select(col("value"), timestamp_micros(tsUs(e0)).as("ts"))
         .createOrReplaceTempView("tql_events_ts2")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT value, ts FROM tql_events_ts2')
           |GROUP(by(value(1), timewindow(1704412800000000000, 1704499200000000000, 60000000000), 'time'),
           |      count(value(0), 'cnt', nullValue(-1)),
@@ -67,7 +67,7 @@ object TqlQueries {
     // SCRIPT("js") map node: stateful filter/transform + deinit summary row
     "q_script_tql" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("script_events")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM script_events ORDER BY event_id')
           |SCRIPT("js", {
           |  count = 0;
@@ -86,7 +86,7 @@ object TqlQueries {
 
     "q_tql_pipeline" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events ORDER BY event_id')
           |FILTER(value(1) > 200)
           |MAPVALUE(2, value(1) * 2 > 500 ? 'very_high' : 'high', 'level')
@@ -103,7 +103,7 @@ object TqlQueries {
       // µs-truncate first so DuckDB sees identical instants
       e0.select((tsUs(e0) * 1000L).as("tns"), col("value"))
         .createOrReplaceTempView("tql_events_tws")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT tns, value FROM tql_events_tws')
           |TIMEWINDOW(time(1704412800000000000), time(1704499200000000000), period('10m'), 'time', 'max')
           |CSV()
@@ -128,7 +128,7 @@ object TqlQueries {
           java.nio.file.Files.createTempFile(fixtureDir, "graft_gate_csv", ".csv"),
           body.getBytes("UTF-8"))
       }
-      Tql.compile(s,
+      Compiler.compile(s,
         s"""CSV(file('$tmp'), field(0, doubleType(), 'event_id'), field(1, stringType(), 'event_type'), field(2, doubleType(), 'value'))
            |FILTER(value(2) > 100)
            |CSV()
@@ -150,7 +150,7 @@ object TqlQueries {
           java.nio.file.Files.createTempFile(fixtureDir, "graft_gate_str", ".txt"),
           lines.mkString("\n").getBytes("UTF-8"))
       }
-      Tql.compile(s,
+      Compiler.compile(s,
         s"""STRING(file('$tmp'), separator('\\n'))
            |GROUP(by(value(0), 'etype'), count(value(0), 'cnt'))
            |CSV()
@@ -161,11 +161,11 @@ object TqlQueries {
     // param() request binding threaded into FILTER
     "q_tql_param" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_pm")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events_pm ORDER BY event_id')
           |FILTER(value(1) > parseFloat(param('min')))
           |CSV()
-          |""".stripMargin, Map("min" -> "350")).output
+          |""".stripMargin, params = Map("min" -> Seq("350"))).output
         .orderBy("event_id")
     }),
 
@@ -173,7 +173,7 @@ object TqlQueries {
     // frame it must be the identity (fm_monad.go fmThrottle)
     "q_tql_throttle" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_th")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events_th ORDER BY event_id')
           |THROTTLE(500)
           |TAKE(100)
@@ -185,7 +185,7 @@ object TqlQueries {
     // (reference result-column naming; TestMath chains)
     "q_tql_pushkey" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_pk")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events_pk WHERE user_id < 20 ORDER BY event_id')
           |PUSHKEY(value(0) % 7)
           |CSV()
@@ -196,7 +196,7 @@ object TqlQueries {
     // SET variable threaded through FILTER and MAPVALUE
     "q_tql_set" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_set")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events_set ORDER BY event_id')
           |SET threshold = 300
           |FILTER(value(1) > $threshold)
@@ -209,7 +209,7 @@ object TqlQueries {
     // glob() and regexp() predicates over a string column
     "q_tql_glob" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_g")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, event_type FROM tql_events_g ORDER BY event_id')
           |FILTER(glob('*u*', value(1)))
           |MAPVALUE(2, regexp('^(view|click)$', value(1)), 'is_vc')
@@ -222,7 +222,7 @@ object TqlQueries {
     // nondeterministic in-list order for the hash compare
     "q_tql_flatten" -> ((s, dir) => {
       t(s, dir, "events").createOrReplaceTempView("tql_events_fl")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT user_id, value FROM tql_events_fl ORDER BY event_id')
           |GROUP(by(value(0), 'uid'), list(value(1), 'vals'))
           |FLATTEN()
@@ -237,7 +237,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 20)
         .select(col("event_id"), tsUs(e0).as("t_us"))
         .createOrReplaceTempView("tql_events_tf")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, t_us FROM tql_events_tf ORDER BY event_id')
           |MAPVALUE(1, strTime(parseTime(value(1), 'us', tz('UTC')), sqlTimeformat('YYYY-MM-DD HH24:MI:SS'), tz('UTC')), 'tstr')
           |CSV()
@@ -254,7 +254,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 20)
         .select(col("event_id"), tsUs(e0).as("t_us"))
         .createOrReplaceTempView("tql_events_stf")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, t_us FROM tql_events_stf ORDER BY event_id')
           |SET t = parseTime(value(1), 'us', tz('UTC'))
           |MAPVALUE(1, strTime($t, 'RFC1123', tz('UTC')), 'rfc1123')
@@ -274,7 +274,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 20)
         .select(col("event_id"), col("value"))
         .createOrReplaceTempView("tql_events_mf")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, value FROM tql_events_mf ORDER BY event_id')
           |PUSHVALUE(2, round(value(1)), 'rnd')
           |PUSHVALUE(3, mod(0.0 - value(1), 7.0), 'md')
@@ -294,7 +294,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 20)
         .select(col("event_id"), col("value").cast("string").as("sval"))
         .createOrReplaceTempView("tql_events_str")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id, sval FROM tql_events_str ORDER BY event_id')
           |MAP_ABSDIFF(1, value(1), 'absdiff')
           |CSV()
@@ -310,7 +310,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 20)
         .select(col("event_id"))
         .createOrReplaceTempView("tql_events_bw")
-      Tql.compile(s,
+      Compiler.compile(s,
         """SQL('SELECT event_id FROM tql_events_bw ORDER BY event_id')
           |PUSHVALUE(1, value(0) & 255, 'band')
           |PUSHVALUE(2, value(0) | 4096, 'bor')
@@ -333,7 +333,7 @@ object TqlQueries {
       e0.filter(col("user_id") < 5)
         .select(lit("t1").as("name"), (tsUs(e0) * 1000L).as("time"), col("value"))
         .createOrReplaceTempView("tql_tag_q")
-      Tql.compile(s,
+      Compiler.compile(s,
         """QUERY('MIN(value)', 'MAX(value)', 'COUNT(value)', from('tql_tag_q', 't1'), between(1704412800000000000, 1704499200000000000, '1h'))
           |CSV()
           |""".stripMargin).output

@@ -284,12 +284,8 @@ object Backup {
   }
 
   private def envelope(status: Int, success: Boolean, reason: String,
-                       t0: Long, data: Option[String] = None): HttpReply = {
-    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    val d = data.map(j => s""","data":$j""").getOrElse("")
-    HttpReply(status, "application/json",
-      s"""{"success":$success,"reason":${GoJs.quote(reason)}$d,"elapse":"$elapse"}""")
-  }
+                       t0: Long, data: Option[String] = None): HttpReply =
+    HttpReply(status, "application/json", WebApi.envelope(success, reason, t0, data))
 
   /** render the BackupArchive struct shape (backupd.go:106-120) */
   private def archiveJson(a: collection.Map[String, Any]): String = {

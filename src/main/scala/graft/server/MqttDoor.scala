@@ -41,12 +41,9 @@ object MqttDoor {
       def result(success: Boolean, reason: String): Unit = {
         if (!success)
           graft.tql.TqlLog.log("ERROR", s"mqtt write $topic: $reason")
-        if (replyTopic.nonEmpty) {
-          val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - tick)
+        if (replyTopic.nonEmpty)
           cli.publish(replyTopic,
-            (s"""{"success":$success,"reason":${graft.sinks.GoJs.quote(reason)},""" +
-              s""""elapse":"$elapse"}""").getBytes("UTF-8"))
-        }
+            WebApi.envelope(success, reason, tick).getBytes("UTF-8"))
       }
       try {
         val wp = graft.streaming.Subscribers.parseWritePath(topic.stripPrefix(prefix))
@@ -114,6 +111,7 @@ object MqttDoor {
     } catch { case _: Exception => None }
 
   private[server] def serve(spark: SparkSession, body: String): (String, Array[Byte]) = {
+    val t0 = System.nanoTime()
     var reply = "db/reply"
     try {
       val params = WebApi.decodeJsonBodyParams(body)
@@ -123,21 +121,16 @@ object MqttDoor {
       // compress=gzip gzips the reply payload (TestMqttQuery
       // query_simple_format=csv_compress pins the gzipped bytes)
       if (r.status == 200 &&
-        params.get("compress").exists(_.headOption.contains("gzip"))) {
-        val buf = new java.io.ByteArrayOutputStream()
-        val gz = new java.util.zip.GZIPOutputStream(buf)
-        gz.write(r.body.getBytes("UTF-8")); gz.close()
-        (reply, buf.toByteArray)
-      } else (reply, r.body.getBytes("UTF-8"))
+        params.get("compress").exists(_.headOption.contains("gzip")))
+        (reply, WebApi.gzip(r.wireBytes))
+      else (reply, r.wireBytes)
     } catch {
       case e: Exception =>
         // a malformed request body still answers on the default (or
         // parsed-so-far) reply topic with the decoder's message
         // (TestMqttQueryFailures query_invalid_json)
         val msg = Option(e.getMessage).getOrElse(e.toString)
-        (reply,
-          s"""{"success":false,"reason":${graft.sinks.GoJs.quote(msg)},"elapse":"0s"}"""
-            .getBytes("UTF-8"))
+        (reply, WebApi.envelope(success = false, msg, t0).getBytes("UTF-8"))
     }
   }
 }

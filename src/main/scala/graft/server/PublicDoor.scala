@@ -56,11 +56,9 @@ object PublicDoor {
              body: Array[Byte] = Array.emptyByteArray,
              redirectDepth: Int = 0): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse: String =
-      graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def err(status: Int, reason: String): HttpReply =
       HttpReply(status, "application/json; charset=utf-8",
-        s"""{"success":false,"reason":${graft.sinks.GoJs.quote(reason)},"elapse":"$elapse"}""")
+        WebApi.envelope(success = false, reason, t0))
 
     if (redirectDepth > MaxLocalRedirects) return err(500, "too many redirects")
     val trimmed = rawPath.stripPrefix("/")

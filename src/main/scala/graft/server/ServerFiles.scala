@@ -44,9 +44,10 @@ object ServerFiles {
 
   def isFsFile(path: String): Boolean = contentTypeOfFile(path).nonEmpty
 
-  /** `/db/public` door filesystem bindings ([[PublicDoor]]): resolve
-    * under the template root, refusing escapes (the door additionally
-    * rejects `..` with 400 before these are consulted). */
+  /** The server filesystem of the `/db/public` door ([[PublicDoor]]) and
+    * of `/db/tql/<path>` ([[WebApi.tqlFile]]): resolve under the template
+    * root, refusing escapes (the public door additionally rejects `..`
+    * with 400 before these are consulted). */
   def publicFile(p: String): Option[Array[Byte]] =
     try {
       val r = resolve(p)
@@ -108,12 +109,10 @@ object ServerFiles {
   def handle(method: String, path: String, query: Map[String, Seq[String]],
              body: String, bodyBytes: Array[Byte] = null): WebApi.HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def env(status: Int, success: Boolean, reason: String,
             data: Option[String] = None) =
       WebApi.HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${graft.sinks.GoJs.quote(reason)}${
-          data.fold("")(d => s""","data":$d""")},"elapse":"$elapse"}""")
+        WebApi.envelope(success, reason, t0, data))
     def one(k: String) = query.get(k).flatMap(_.headOption).getOrElse("")
     val recursive = one("recursive").equalsIgnoreCase("true")
     try {

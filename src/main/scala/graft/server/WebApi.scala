@@ -125,6 +125,27 @@ object WebApi {
     def wireBytes: Array[Byte] = bodyBytes.getOrElse(body.getBytes("UTF-8"))
   }
 
+  /** The `{"success":…,"reason":…,"elapse":…}` envelope of every reply
+    * that carries no rows (gin's `c.JSON` in the reference handlers),
+    * with an optional `data` object before `elapse`. The reason is quoted
+    * like Go's `json.Marshal`, so any reason text reads back as JSON;
+    * `elapse` is the Go duration since `t0`. Content types stay with the
+    * caller. */
+  def envelope(success: Boolean, reason: String, t0: Long,
+               data: Option[String] = None): String = {
+    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
+    val d = data.fold("")(j => s""","data":$j""")
+    s"""{"success":$success,"reason":${GoJs.jsonQuote(reason)}$d,"elapse":"$elapse"}"""
+  }
+
+  /** gzip `bytes` (the `compress=gzip` request option). */
+  private[server] def gzip(bytes: Array[Byte]): Array[Byte] = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(buf)
+    gz.write(bytes); gz.close()
+    buf.toByteArray
+  }
+
   /** Decode a JSON QueryRequest body into the `/db/query` param map —
     * shared by the HTTP POST path and the MQTT db/query door, which
     * carry the same request shape (svrmsg.go QueryRequest). The bind
@@ -166,11 +187,8 @@ object WebApi {
       params.get(k).flatMap(_.headOption).filter(_.nonEmpty)
     def bool(k: String, dflt: Boolean): Boolean =
       one(k).map(_.equalsIgnoreCase("true")).getOrElse(dflt)
-    def elapse: String =
-      graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def err(status: Int, reason: String): HttpReply =
-      HttpReply(status, "application/json; charset=utf-8",
-        s"""{"success":false,"reason":${graft.sinks.GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json; charset=utf-8", envelope(success = false, reason, t0))
 
     val sqlText0 = one("q").getOrElse("")
     if (sqlText0.trim.isEmpty) return err(400, "sql text is empty")
@@ -228,8 +246,7 @@ object WebApi {
       val isQuery = Set("select", "show", "desc", "explain", "with")(firstWord)
       if (!isQuery && result.columns.sameElements(Array("MESSAGE"))) {
         val msg = result.collect().headOption.map(_.getString(0)).getOrElse("executed.")
-        return HttpReply(200, "application/json",
-          s"""{"success":true,"reason":${graft.sinks.GoJs.quote(msg)},"elapse":"$elapse"}""")
+        return HttpReply(200, "application/json", envelope(success = true, msg, t0))
       }
       val (ct, fm) = format match {
         case "csv" => ("text/csv; charset=utf-8", "CSV")
@@ -262,21 +279,19 @@ object WebApi {
       case _ => "text/plain" // BOX, TEXT, DISCARD
     }
 
-  /** `GET/POST /web/api/tql` (+`/web/api/tql-exec`): the `$` query param
-    * carries the script; a POST body is the script when `$` is absent,
-    * otherwise it becomes the task's payload (http_query.go
-    * handleTqlQuery). Replies use the sink codec's Content-Type; errors
-    * reply the JSON envelope with the reference reasons ("script not
-    * found", "unsupported method"). */
+  /** `GET/POST /db/tql` (routed by [[WebRoutes]]; http_query.go
+    * handleTqlQuery): the `$` query param carries the script; a POST body
+    * is the script when `$` is absent, otherwise it becomes the task's
+    * payload. The other query params bind `param('name')`. Replies use
+    * the sink codec's Content-Type; a script that fails to compile or run
+    * replies 400 with the JSON envelope, as do the reference reasons
+    * "script not found" and (405) "unsupported method". */
   def tqlQuery(spark: SparkSession, method: String,
                params: Map[String, Seq[String]] = Map.empty,
                body: Option[String] = None): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse: String =
-      graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def err(status: Int, reason: String): HttpReply =
-      HttpReply(status, "application/json; charset=utf-8",
-        s"""{"success":false,"reason":${graft.sinks.GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json; charset=utf-8", envelope(success = false, reason, t0))
     val scriptParam = params.get("$").flatMap(_.headOption).filter(_.nonEmpty)
     val (script, payload) = method.toUpperCase match {
       case "POST" => scriptParam match {
@@ -305,12 +320,12 @@ object WebApi {
 
   /** Compile + render a TQL script, with chart sinks going through the
     * chart renderer; `forceChartJson` models the X-Chart-Output: json
-    * request header. */
+    * request header. The one script → reply path of both `/db/tql`
+    * doors. */
   private def runScript(spark: SparkSession, src: String,
                         taskParams: Map[String, Seq[String]],
                         forceChartJson: Boolean = false): HttpReply = {
-    val c0 = graft.tql.Compiler.compileMulti(spark, src,
-      System.currentTimeMillis() * 1000000L, taskParams)
+    val c0 = graft.tql.Compiler.compile(spark, src, params = taskParams)
     val isChart = c0.sink.chartArgs.isDefined
     val c =
       if (isChart && forceChartJson)
@@ -329,20 +344,18 @@ object WebApi {
     HttpReply(200, ct, bodyText, headers)
   }
 
-  /** `GET /db/tql/:path` — stored scripts and static files
-    * (http_query.go handleTqlFile): `.tql` paths execute through the
-    * engine (missing → 404 "not found", compile failure → 500
-    * envelope); `/public/...` paths redirect; other paths serve their
-    * bytes. The file provider abstracts the server-side FS. */
+  /** `GET /db/tql/<path>` (routed by [[WebRoutes]] over
+    * [[ServerFiles.publicFile]]; http_query.go handleTqlFile) — stored
+    * scripts and static files: `.tql` paths execute through the engine
+    * with the query params bound (missing → 404 "not found", compile
+    * failure → 500 envelope); `/public/...` paths redirect; other paths
+    * serve their bytes. The file provider abstracts the server-side FS. */
   def tqlFile(spark: SparkSession, fs: String => Option[Array[Byte]],
               path: String, params: Map[String, Seq[String]] = Map.empty,
               requestHeaders: Map[String, String] = Map.empty): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse: String =
-      graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def err(status: Int, reason: String): HttpReply =
-      HttpReply(status, "application/json; charset=utf-8",
-        s"""{"success":false,"reason":${graft.sinks.GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json; charset=utf-8", envelope(success = false, reason, t0))
     if (path.startsWith("/public/"))
       return HttpReply(302, "", "", Map("Location" -> path))
     if (!path.endsWith(".tql")) {
@@ -411,7 +424,6 @@ object WebApi {
 
   def timersAdd(spark: SparkSession, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     // a malformed request BODY is the client's fault — 400, while a
     // well-formed request the scheduler rejects (bad cron spec) is 500
     // (http_facility_test.go TestTimer: "{" → StatusBadRequest,
@@ -421,21 +433,19 @@ object WebApi {
       catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
     decoded match {
       case Left(msg) =>
-        HttpReply(400, "application/json",
-          s"""{"success":false,"reason":${GoJs.quote(msg)},"elapse":"$elapse"}""")
+        HttpReply(400, "application/json", envelope(success = false, msg, t0))
       case Right(obj) =>
         try {
           val svc = graft.scheduler.Timers.defaultService(spark)
           val r = svc.addSchedule(obj.getOrElse("name", ""), "timer",
             obj.get("autoStart").contains("true"),
             obj.getOrElse("schedule", ""), obj.getOrElse("path", ""))
-          val status = if (r.success) 200 else 500
-          HttpReply(status, "application/json",
-            s"""{"success":${r.success},"reason":${GoJs.quote(r.reason)},"elapse":"$elapse"}""")
+          HttpReply(if (r.success) 200 else 500, "application/json",
+            envelope(r.success, r.reason, t0))
         } catch {
           case e: Exception =>
             HttpReply(500, "application/json",
-              s"""{"success":false,"reason":${GoJs.quote(e.getMessage)},"elapse":"$elapse"}""")
+              envelope(success = false, String.valueOf(e.getMessage), t0))
         }
     }
   }
@@ -443,29 +453,29 @@ object WebApi {
   /** `GET /web/api/timers/:name` (http_facility.go:19-45) — the single
     * schedule envelope; unknown names fail with the definition-file load
     * error like subscribers. */
-  def timerGet(spark: SparkSession, name: String): HttpReply = {
-    val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    graft.scheduler.Timers.defaultService(spark).getSchedule(name) match {
+  def timerGet(spark: SparkSession, name: String): HttpReply =
+    scheduleReply(graft.scheduler.Timers.defaultService(spark), name, System.nanoTime())
+
+  /** One schedule's envelope, or the definition-file load error of an
+    * unknown name (model.go:108-115). */
+  private def scheduleReply(svc: graft.scheduler.Timers.Service, name: String,
+                            t0: Long): HttpReply =
+    svc.getSchedule(name) match {
       case None =>
-        HttpReply(500, "application/json",
-          s"""{"success":false,"reason":${GoJs.quote(
-            s"open ${name.toUpperCase}.json: no such file or directory")},"elapse":"$elapse"}""")
+        HttpReply(500, "application/json", envelope(success = false,
+          s"open ${name.toUpperCase}.json: no such file or directory", t0))
       case Some(r) =>
         HttpReply(200, "application/json",
-          s"""{"success":true,"reason":"success","data":${scheduleJson(r)},"elapse":"$elapse"}""")
+          envelope(success = true, "success", t0, Some(scheduleJson(r))))
     }
-  }
 
   /** `PUT /web/api/timers/:name` (http_facility.go:208-273): get-check
     * first (unknown name fails), then the schedule/task/autoStart update
     * re-registers the entry. */
   def timersUpdate(spark: SparkSession, name: String, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def reply(status: Int, success: Boolean, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json", envelope(success, reason, t0))
     if (name.isEmpty) return reply(400, success = false, "no name specified")
     val obj =
       try flatJson(body)
@@ -476,17 +486,16 @@ object WebApi {
         s"open ${name.toUpperCase}.json: no such file or directory")
     val r = svc.updateSchedule(name, obj.get("autoStart").contains("true"),
       obj.getOrElse("schedule", ""), obj.getOrElse("path", ""))
-    reply(if (r.success) 200 else 500, r.success, r.reason)
+    outcome(t0, r.success, r.reason)
   }
 
   /** `GET /web/api/refs/` (http.go:1812-1847) — the console's static
     * reference-link tree; non-root paths 404 with the reference reason. */
   def refs(path: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     if (path != "/")
       return HttpReply(404, "application/json",
-        s"""{"success":false,"reason":${GoJs.quote(s"'$path' not found")},"elapse":"$elapse"}""")
+        envelope(success = false, s"'$path' not found", t0))
     def item(typ: String, title: String, addr: String, target: String = ""): String = {
       val tgt = if (target.nonEmpty) s""","target":${GoJs.quote(target)}""" else ""
       s"""{"type":${GoJs.quote(typ)},"title":${GoJs.quote(title)},"address":${GoJs.quote(addr)}$tgt}"""
@@ -509,6 +518,7 @@ object WebApi {
       item("wrk", "markdown example", "./tutorials/sample_markdown.wrk"),
       item("wrk", "mermaid example", "./tutorials/sample_mermaid.wrk"),
       item("wrk", "pikchr example", "./tutorials/sample_pikchr.wrk")))
+    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     HttpReply(200, "application/json",
       s"""{"success":true,"reason":"success","elapse":"$elapse",""" +
         s""""data":{"refs":[$refsGroup,$sdk,$cheats]}}""")
@@ -517,19 +527,19 @@ object WebApi {
   def timersDelete(spark: SparkSession, name: String): HttpReply = {
     val t0 = System.nanoTime()
     val r = graft.scheduler.Timers.defaultService(spark).delSchedule(name)
-    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    HttpReply(if (r.success) 200 else 500, "application/json",
-      s"""{"success":${r.success},"reason":${GoJs.quote(r.reason)},"elapse":"$elapse"}""")
+    outcome(t0, r.success, r.reason)
   }
 
   def timersStartStop(spark: SparkSession, name: String, start: Boolean): HttpReply = {
     val t0 = System.nanoTime()
     val svc = graft.scheduler.Timers.defaultService(spark)
     val r = if (start) svc.startSchedule(name) else svc.stopSchedule(name)
-    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    HttpReply(if (r.success) 200 else 500, "application/json",
-      s"""{"success":${r.success},"reason":${GoJs.quote(r.reason)},"elapse":"$elapse"}""")
+    outcome(t0, r.success, r.reason)
   }
+
+  /** A management op's result: 200 on success, 500 on failure. */
+  private def outcome(t0: Long, success: Boolean, reason: String): HttpReply =
+    HttpReply(if (success) 200 else 500, "application/json", envelope(success, reason, t0))
 
   /** One schedule object with the reference's omit-empty field set
     * (scheduler management.go:19-29 — QoS renders only when non-zero,
@@ -565,30 +575,16 @@ object WebApi {
 
   /** `GET /web/api/subscribers/:name` — an unknown name fails with the
     * definition-file load error (model.go:108-115). */
-  def subscriberGet(spark: SparkSession, name: String): HttpReply = {
-    val t0 = System.nanoTime()
-    val svc = graft.scheduler.Timers.defaultService(spark)
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    svc.getSchedule(name) match {
-      case None =>
-        HttpReply(500, "application/json",
-          s"""{"success":false,"reason":${GoJs.quote(
-            s"open ${name.toUpperCase}.json: no such file or directory")},"elapse":"$elapse"}""")
-      case Some(r) =>
-        HttpReply(200, "application/json",
-          s"""{"success":true,"reason":"success","data":${scheduleJson(r)},"elapse":"$elapse"}""")
-    }
-  }
+  def subscriberGet(spark: SparkSession, name: String): HttpReply =
+    scheduleReply(graft.scheduler.Timers.defaultService(spark), name, System.nanoTime())
 
   /** `POST /web/api/subscribers` (http.go:875-973): duplicate names and
     * unknown bridges reject before the schedule registers; only broker
     * bridge types are subscribable ("unknown birdge type" typo kept). */
   def subscribersAdd(spark: SparkSession, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def reply(status: Int, success: Boolean, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json", envelope(success, reason, t0))
     val obj =
       try flatJson(body)
       catch { case e: Exception => return reply(400, success = false, e.getMessage) }
@@ -609,38 +605,34 @@ object WebApi {
           schedule = "", task = obj.getOrElse("task", ""),
           bridge = bridgeName, topic = obj.getOrElse("topic", ""),
           qos = obj.get("QoS").flatMap(_.toIntOption).getOrElse(0))
-        reply(if (r.success) 200 else 500, r.success, r.reason)
+        outcome(t0, r.success, r.reason)
     }
   }
 
   def subscribersDelete(spark: SparkSession, name: String): HttpReply = {
     val t0 = System.nanoTime()
     val r = graft.scheduler.Timers.defaultService(spark).delSchedule(name)
-    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    HttpReply(if (r.success) 200 else 500, "application/json",
-      s"""{"success":${r.success},"reason":${GoJs.quote(r.reason)},"elapse":"$elapse"}""")
+    outcome(t0, r.success, r.reason)
   }
 
   /** `POST /web/api/subscribers/:name/state` — START/STOP (case
     * insensitive); anything else is "invalid state" 400 (http.go:1001). */
   def subscribersState(spark: SparkSession, name: String, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    def reply(status: Int, success: Boolean, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+    def bad(reason: String) =
+      HttpReply(400, "application/json", envelope(success = false, reason, t0))
     val obj =
       try flatJson(body)
-      catch { case e: Exception => return reply(400, success = false, e.getMessage) }
+      catch { case e: Exception => return bad(e.getMessage) }
     val svc = graft.scheduler.Timers.defaultService(spark)
     obj.getOrElse("state", "").toUpperCase match {
       case "START" =>
         val r = svc.startSchedule(name)
-        reply(if (r.success) 200 else 500, r.success, r.reason)
+        outcome(t0, r.success, r.reason)
       case "STOP" =>
         val r = svc.stopSchedule(name)
-        reply(if (r.success) 200 else 500, r.success, r.reason)
-      case _ => reply(400, success = false, "invalid state")
+        outcome(t0, r.success, r.reason)
+      case _ => bad("invalid state")
     }
   }
 
@@ -660,10 +652,8 @@ object WebApi {
 
   def bridgesAdd(body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def reply(status: Int, success: Boolean, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json", envelope(success, reason, t0))
     try {
       val obj = flatJson(body)
       val name = obj.getOrElse("name", "")
@@ -680,9 +670,7 @@ object WebApi {
   def bridgesDelete(name: String): HttpReply = {
     val t0 = System.nanoTime()
     val r = Bridge.delBridge(name)
-    val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
-    HttpReply(if (r.success) 200 else 500, "application/json",
-      s"""{"success":${r.success},"reason":${GoJs.quote(r.reason)},"elapse":"$elapse"}""")
+    outcome(t0, r.success, r.reason)
   }
 
   /** `POST /web/api/bridges/:name/state` — test/exec/query
@@ -692,10 +680,8 @@ object WebApi {
     * a 400 "no command specified", a missing bridge or bad SQL is 500). */
   def bridgesState(spark: SparkSession, name: String, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def reply(status: Int, success: Boolean, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":$success,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json", envelope(success, reason, t0))
     try {
       val req = flatJson(body)
       val command = req.getOrElse("command", "")
@@ -724,8 +710,8 @@ object WebApi {
             val rows = df.collect().map(r =>
               r.toSeq.map(GoJs.jsonMarshal).mkString("[", ",", "]"))
               .mkString("[", ",", "]")
-            HttpReply(200, "application/json",
-              s"""{"success":true,"reason":"success","data":{"column":$cols,"rows":$rows},"elapse":"$elapse"}""")
+            HttpReply(200, "application/json", envelope(success = true, "success", t0,
+              Some(s"""{"column":$cols,"rows":$rows}""")))
           } catch {
             case e: Exception => reply(500, success = false,
               String.valueOf(e.getMessage))
@@ -744,15 +730,12 @@ object WebApi {
     * "invalid out value", other methods are 405. */
   def statzConfig(method: String, body: String): HttpReply = {
     val t0 = System.nanoTime()
-    def elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     def err(status: Int, reason: String) =
-      HttpReply(status, "application/json",
-        s"""{"success":false,"reason":${GoJs.quote(reason)},"elapse":"$elapse"}""")
+      HttpReply(status, "application/json", envelope(success = false, reason, t0))
     method.toUpperCase match {
       case "GET" =>
-        HttpReply(200, "application/json",
-          s"""{"success":true,"reason":"success","data":{"out":${
-            GoJs.quote(Metrics.metricsDestTable)}},"elapse":"$elapse"}""")
+        HttpReply(200, "application/json", envelope(success = true, "success", t0,
+          Some(s"""{"out":${GoJs.quote(Metrics.metricsDestTable)}}""")))
       case "POST" =>
         val parsed =
           try graft.script.Builtins.jsonParse(body)
@@ -763,8 +746,7 @@ object WebApi {
             m.asInstanceOf[scala.collection.Map[String, Any]].get("out") match {
               case Some(s: String) =>
                 Metrics.setMetricsDestTable(s)
-                HttpReply(200, "application/json",
-                  s"""{"success":true,"reason":"success","elapse":"$elapse"}""")
+                HttpReply(200, "application/json", envelope(success = true, "success", t0))
               case _ => err(400, "invalid out value")
             }
           case _ => err(400, "invalid out value")
@@ -870,7 +852,7 @@ object WebApi {
 
   // ---- /web/api/tables REST surface (http_query.go:395-625) ------------
 
-  private def envelope(d: DataFrame, o: graft.sinks.Codecs.Options =
+  private def rowsReply(d: DataFrame, o: graft.sinks.Codecs.Options =
       graft.sinks.Codecs.Options()): HttpReply =
     HttpReply(200, "application/json",
       graft.sinks.Codecs.render(d, "JSON", o))
@@ -886,7 +868,7 @@ object WebApi {
     val glob = one("name").map(_.toUpperCase).map { n =>
       if (n.exists("*?[".contains(_))) n else n + "*"
     }
-    envelope(tables(spark, showAll, glob))
+    rowsReply(tables(spark, showAll, glob))
   }
 
   /** `GET /web/api/tables/:table/tags?name=` — ROWNUM/NAME rows; the
@@ -904,7 +886,7 @@ object WebApi {
       .filter(_.nonEmpty).map(_.toUpperCase)
     val d0 = tags(spark, table)
     val d = filter.map(p => d0.filter(col("NAME").startsWith(p))).getOrElse(d0)
-    envelope(d)
+    rowsReply(d)
   }
 
   /** `GET /web/api/tables/:table/tags/:tag/stat?timeformat=&tz=` —
@@ -921,7 +903,7 @@ object WebApi {
       .find(t => t._1.equalsIgnoreCase(table))
     if (known.isEmpty)
       return HttpReply(500, "application/json",
-        s"""{"success":false,"reason":${graft.sinks.GoJs.quote(
+        s"""{"success":false,"reason":${GoJs.jsonQuote(
           s"Table not found: ${table.toUpperCase}.")}}""")
     if (known.get._2 != "Tag")
       return HttpReply(400, "application/json",
@@ -942,14 +924,14 @@ object WebApi {
       case e: Exception =>
         val m = Option(e.getMessage).filter(_.nonEmpty).getOrElse(e.toString)
         return HttpReply(400, "application/json",
-          s"""{"success":false,"reason":${graft.sinks.GoJs.quote(m)}}""")
+          s"""{"success":false,"reason":${GoJs.jsonQuote(m)}}""")
     }
-    try envelope(tagStat(spark, table, tag), o)
+    try rowsReply(tagStat(spark, table, tag), o)
     catch {
       case e: Exception =>
         val m = Option(e.getMessage).filter(_.nonEmpty).getOrElse(e.toString)
         HttpReply(500, "application/json",
-          s"""{"success":false,"reason":${graft.sinks.GoJs.quote(m)}}""")
+          s"""{"success":false,"reason":${GoJs.jsonQuote(m)}}""")
     }
   }
 }

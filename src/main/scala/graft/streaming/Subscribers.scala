@@ -110,7 +110,7 @@ object Subscribers {
           Reason(success = false, e)
         case Right(script) =>
           try {
-            graft.tql.Tql.run(spark, script, System.nanoTime(),
+            graft.tql.Compiler.run(spark, script, System.nanoTime(),
               params + ("payload" -> Seq(new String(payload, "UTF-8"))))
             Reason(success = true, "success")
           } catch {

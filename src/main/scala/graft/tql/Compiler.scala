@@ -114,24 +114,15 @@ object Compiler extends CompilerSources with CompilerMaps with CompilerExprs {
   private[tql] def withRownum(df: DataFrame, order: Seq[Column] = Nil): DataFrame =
     graft.operators.RowOps.zipRownum(df, "_key", order)
 
-  def compile(spark: SparkSession, script: String): Compiled =
-    compile(spark, script, System.currentTimeMillis() * 1000000L, Map.empty)
-
-  def compile(spark: SparkSession, script: String, nowNs: Long): Compiled =
-    compile(spark, script, nowNs, Map.empty)
-
-  /** `nowNs` pins the clock that `between('now-…', …)` resolves against —
-    * injected for determinism (the reference reads the wall clock);
-    * `params` binds `param('key')` references (the reference's request
-    * query-string params, fm_context.go:22-186). */
-  def compile(spark: SparkSession, script: String, nowNs: Long,
-              params: Map[String, String]): Compiled =
-    compileMulti(spark, script, nowNs, params.map { case (k, v) => k -> Seq(v) })
-
-  /** Multi-valued request params (`p1=1&p1=2`), like the reference's
-    * url.Values — `$.params.p1` in SCRIPT sees the full list. */
-  def compileMulti(spark: SparkSession, script: String, nowNs: Long,
-                   params: Map[String, Seq[String]]): Compiled = {
+  /** Compile a script against a session (its tables registered) — the
+    * one TQL entry point. `nowNs` pins the clock that `between('now-…', …)`
+    * resolves against (default: the wall clock, as the reference reads
+    * it); `params` binds `param('key')` references, multi-valued like the
+    * reference's url.Values request params (fm_context.go:22-186), so
+    * `$.params.p1` in SCRIPT sees the full list. */
+  def compile(spark: SparkSession, script: String,
+              nowNs: Long = System.currentTimeMillis() * 1000000L,
+              params: Map[String, Seq[String]] = Map.empty): Compiled = {
     val stmts = Parser.parseScript(script)
     require(stmts.nonEmpty, "empty script")
     // SRC → MAP* → SINK applicability errors with the reference's kinds
@@ -151,7 +142,7 @@ object Compiler extends CompilerSources with CompilerMaps with CompilerExprs {
     // consumes record order or the key.
     val needKey = maps.exists(st => statementNeedsKey(st.call)) ||
       Set("rownum").exists(o => sinkStmt.text.contains("rownum("))
-    // save/restore: WHEN(do(…)) sub-routines re-enter compileMulti with
+    // save/restore: WHEN(do(…)) sub-routines re-enter compile with
     // their own params — the outer pipeline's context must survive
     val prevParams = currentParams.get
     val prevNow = currentNowNs.get
@@ -206,15 +197,7 @@ object Compiler extends CompilerSources with CompilerMaps with CompilerExprs {
     * reference serves both through its server-side filesystem. */
   private[tql] def contentBytes(path: String): Array[Byte] =
     if (isHttpUrl(path)) {
-      // same egress policy as every other HTTP edge in this build:
-      // loopback only (HttpLoop.executeRaw); a deployment relaxes the
-      // check, not the fetch path
-      val host = java.net.URI.create(path).getHost
-      val addr = try java.net.InetAddress.getByName(host) catch {
-        case _: java.net.UnknownHostException => null
-      }
-      require(addr != null && addr.isLoopbackAddress,
-        s"egress disabled: '$host' is not a loopback address (this build only talks to in-process doubles)")
+      graft.server.HttpLoop.requireLoopback(java.net.URI.create(path).getHost)
       val client = java.net.http.HttpClient.newHttpClient()
       val req = java.net.http.HttpRequest.newBuilder(
         java.net.URI.create(path)).GET().build()
@@ -450,9 +433,11 @@ object Compiler extends CompilerSources with CompilerMaps with CompilerExprs {
     }
   }
 
-  /** Compile + render through the sink codec (the `/db/tql` behavior). */
-  def run(spark: SparkSession, script: String): String =
-    renderCompiled(compile(spark, script))
+  /** Compile + render through the sink codec; arguments as [[compile]]. */
+  def run(spark: SparkSession, script: String,
+          nowNs: Long = System.currentTimeMillis() * 1000000L,
+          params: Map[String, Seq[String]] = Map.empty): String =
+    renderCompiled(compile(spark, script, nowNs, params))
 
 
   // ---------------- sinks ----------------
@@ -607,33 +592,4 @@ object Compiler extends CompilerSources with CompilerMaps with CompilerExprs {
   }
 
   // ---------------- expressions → Column ----------------
-}
-
-/** Public entry points for the TQL surface. */
-object Tql {
-  /** Compile a script against a session (tables must be registered). */
-  def compile(spark: SparkSession, script: String): Compiler.Compiled =
-    Compiler.compile(spark, script)
-
-  /** Compile with a pinned clock for between('now…') determinism. */
-  def compile(spark: SparkSession, script: String, nowNs: Long): Compiler.Compiled =
-    Compiler.compile(spark, script, nowNs)
-
-  /** Compile with request params bound to `param('name')` references. */
-  def compile(spark: SparkSession, script: String,
-              params: Map[String, String]): Compiler.Compiled =
-    Compiler.compile(spark, script, System.currentTimeMillis() * 1000000L, params)
-
-  /** Compile and render through the sink codec — `/db/tql` semantics. */
-  def run(spark: SparkSession, script: String): String =
-    Compiler.run(spark, script)
-
-  /** Render with a pinned clock. */
-  def run(spark: SparkSession, script: String, nowNs: Long): String =
-    Compiler.renderCompiled(Compiler.compile(spark, script, nowNs))
-
-  /** Render with a pinned clock and multi-valued request params. */
-  def run(spark: SparkSession, script: String, nowNs: Long,
-          params: Map[String, Seq[String]]): String =
-    Compiler.renderCompiled(Compiler.compileMulti(spark, script, nowNs, params))
 }

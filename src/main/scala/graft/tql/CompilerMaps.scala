@@ -1010,7 +1010,7 @@ private[tql] trait CompilerMaps { this: Compiler.type =>
         // sub-routine: compile the block once per matching record with its
         // args bound (ARGS()/FAKE(args())/args(i) read them)
         ordered.select(argEs.map(toColumn(_, p)): _*).collect().foreach { r =>
-          val c = compileMulti(spark, sub, currentNowNs.get,
+          val c = compile(spark, sub, currentNowNs.get,
             currentParams.get + ("args" -> r.toSeq.map(fmtV)))
           if (c.sink.format != "DISCARD")
             TqlLog.log("WARN",

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.server.{Backup, QueryDoor, TagTables, WebRoutes}
+import graft.server.{Backup, QueryDoor, TagTables}
 
 /** Backup/mount door — reference shapes from mods/backup/backupd_test.go
   * (validation envelopes, archives listing, mount lifecycle) plus the
@@ -11,7 +11,7 @@ import graft.server.{Backup, QueryDoor, TagTables, WebRoutes}
 class BackupSpec extends SparkSpec {
 
   private def route(method: String, path: String, body: String = "") =
-    WebRoutes.route(spark, method, s"/web/api$path", Map.empty, body)
+    webRoute(method, s"/web/api$path", body = body)
 
   private def freshBase(): String = {
     val d = tempDir("graft_backup")

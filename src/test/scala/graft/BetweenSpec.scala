@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.tql.Tql
 
 class BetweenSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +24,7 @@ class BetweenSpec extends SparkSpec {
 
   test("between('now-dur', 'now') resolves against the injected clock") {
     mkTable()
-    val c = Tql.compile(spark,
+    val c = graft.tql.Compiler.compile(spark,
       """SQL_SELECT('time', 'value', from('tag_tbl', 't1'), between('now-1us', 'now'))
         |CSV()
         |""".stripMargin, nowNs = 3500L)

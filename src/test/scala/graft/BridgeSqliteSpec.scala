@@ -1,7 +1,7 @@
 package graft
 
 import graft.server.Bridge
-import graft.tql.{Compiler, Tql}
+import graft.tql.Compiler
 
 /** Reproduces the reference's SQLite-bridge battery
   * (TestBridgeSqlite, tql_test.go:2258-2572) against the in-session

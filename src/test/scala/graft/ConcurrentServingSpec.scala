@@ -164,10 +164,10 @@ class ConcurrentServingSpec extends SparkSpec {
     // n requests that meet at a barrier hold all n workers at once, so
     // each worker thread serves one of them
     val gate = new CyclicBarrier(n)
-    HttpLoop.handle("/cs/hold") { (_, _, _, _) =>
+    HttpLoop.handle("/cs/hold") { _ =>
       gate.await(30, TimeUnit.SECONDS)
       val group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
-      (200, "text/plain", String.valueOf(group).getBytes("UTF-8"))
+      graft.server.WebApi.HttpReply(200, "text/plain", String.valueOf(group))
     }
     val groups = parallel(n, n)(_ => call("GET", "/cs/hold"))
     groups.foreach(r => assert(r.status == 200 && r.body.startsWith("http-"), r))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 /** func_test.go battery — the expression-level cases not previously
   * mirrored: strTime named Go formats + epoch modes (TestStrTime,

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tql.{ChartRender, Tql}
+import graft.tql.ChartRender
 
 /** Reproduces TestGeoJSON (tql_test.go:2574-2700): SCRIPT-yielded GeoJSON
   * objects through the GEOMAP sink, including require("mathx/spatial")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tql.{ChartRender, Tql}
+import graft.tql.ChartRender
 
 /** Geo marker/feature constructor functions (reference
   * fx_definitions.go:111-119, nums/geography.go): geoPoint/geoCircle/

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.tql.Tql
 
 /** Runs the reference's own TQL golden fixtures (read at test time from
   * the read-only checkout — nothing copied) through our compiler and
@@ -289,7 +288,7 @@ class GoldenSpec extends SparkSpec {
   test("TestLoader_qq: STRING payload pipeline with pinned clock") {
     // the reference harness pins now = 1692329338315327000 for this case
     val expected = normalize(read("TestLoader_qq.csv"))
-    val c = graft.tql.Tql.compile(spark, read("TestLoader_qq.tql"),
+    val c = graft.tql.Compiler.compile(spark, read("TestLoader_qq.tql"),
       nowNs = 1692329338315327000L)
     val got = normalize(trimClose(graft.sinks.Codecs.render(c.output, c.sink.format, c.sink.options)))
     assert(got == expected, s"\n--- got ---\n$got--- want ---\n$expected")

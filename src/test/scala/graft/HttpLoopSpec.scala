@@ -1,7 +1,7 @@
 package graft
 
 import graft.server.HttpLoop
-import graft.tql.Tql
+import graft.server.WebApi.HttpReply
 
 /** TQL HTTP surface against the in-JVM loopback double: the `HTTP()`
   * request-DSL source (TestRestClient, fm_encoder.go:169-183) and the
@@ -113,10 +113,10 @@ class HttpLoopSpec extends SparkSpec {
 
   test("doHttp GET: one request per matching record (task_test.go:1520-1546)") {
     val got = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    HttpLoop.handle("/notify") { (method, query, _, _) =>
-      assert(method == "GET")
-      HttpLoop.parseQuery(query).get("v").foreach(got.add)
-      (200, "text/plain", "ok.".getBytes("UTF-8"))
+    HttpLoop.handle("/notify") { req =>
+      assert(req.method == "GET")
+      req.param("v").foreach(got.add)
+      HttpReply(200, "text/plain", "ok.")
     }
     runTrim(
       s"""FAKE( linspace(0, 2, 2) )
@@ -131,11 +131,11 @@ class HttpLoopSpec extends SparkSpec {
   test("doHttp POST value(): CSV body, text/csv default (task_test.go:1548-1590)") {
     val bodies = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val ctypes = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    HttpLoop.handle("/notify-post") { (method, _, headers, body) =>
-      assert(method == "POST")
-      headers.get("content-type").foreach(ctypes.add)
-      bodies.add(new String(body, "UTF-8").trim)
-      (200, "text/plain", "ok.".getBytes("UTF-8"))
+    HttpLoop.handle("/notify-post") { req =>
+      assert(req.method == "POST")
+      req.headers.get("content-type").foreach(ctypes.add)
+      bodies.add(req.text.trim)
+      HttpReply(200, "text/plain", "ok.")
     }
     runTrim(
       s"""FAKE( linspace(0, 2, 2) )
@@ -288,14 +288,81 @@ class HttpLoopSpec extends SparkSpec {
     assert(resp.contains("0\n1\n2\n"), resp)
   }
 
+  /** (status, Content-Type, body) of one request over the socket. */
+  private def exchange(method: String, pathQuery: String,
+                       body: String = ""): (Int, String, String) = {
+    val c = new java.net.URI(s"http://127.0.0.1:$port$pathQuery").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    try {
+      c.setRequestMethod(method)
+      if (body.nonEmpty) {
+        c.setDoOutput(true)
+        c.getOutputStream.write(body.getBytes("UTF-8")); c.getOutputStream.close()
+      }
+      val code = c.getResponseCode
+      val in = if (code >= 400) c.getErrorStream else c.getInputStream
+      (code, Option(c.getHeaderField("Content-Type")).getOrElse(""),
+        if (in == null) "" else new String(in.readAllBytes(), "UTF-8"))
+    } finally c.disconnect()
+  }
+
+  test("routes match whole path segments: a longer neighbour is 404") {
+    for (path <- Seq("/db/queryx", "/lakesfoo/tags", "/debug/statzz")) {
+      val (code, _, body) = exchange("GET", path)
+      assert(code == 404 && body == s"""{"success":false,"reason":"'$path' not found"}""",
+        s"$path: $code $body")
+    }
+  }
+
+  test("/db/tql replies with the sink's Content-Type and binds query params") {
+    val (c1, ct1, b1) = exchange("POST", "/db/tql", "FAKE( linspace(0, 2, 3) )\nCSV()")
+    assert(c1 == 200 && ct1 == "text/csv; charset=utf-8" && b1 == "0\n1\n2\n\n", s"$c1 $ct1 $b1")
+    val (c2, _, b2) = exchange("POST", "/db/tql?x=7",
+      "FAKE( linspace(1, 1, 1) )\nMAPVALUE(0, parseFloat(param('x')) * 2)\nCSV()")
+    assert(c2 == 200 && b2 == "14\n\n", s"$c2 $b2")
+  }
+
+  test("/db/tql compile error replies a 400 JSON envelope") {
+    val (code, ct, body) = exchange("POST", "/db/tql", "FAKE(")
+    assert(code == 400 && ct.startsWith("application/json"), s"$code $ct $body")
+    graft.script.Builtins.jsonParse(body) match {
+      case m: scala.collection.Map[_, _] =>
+        assert(m.asInstanceOf[scala.collection.Map[String, Any]].get("success")
+          .contains(false), body)
+      case other => fail(s"not a JSON object: $other")
+    }
+  }
+
+  test("GET /db/tql/<file>.tql runs the stored script; a failure reason is valid JSON") {
+    val tmp = java.nio.file.Paths.get(tempDir("tqlfile"))
+    val prev = graft.tql.Compiler.templateRoot
+    graft.tql.Compiler.templateRoot = tmp.toString
+    try {
+      java.nio.file.Files.write(tmp.resolve("stored.tql"),
+        "FAKE( linspace(0, 1, 2) )\nCSV()\n".getBytes("UTF-8"))
+      val (c1, ct1, b1) = exchange("GET", "/db/tql/stored.tql")
+      assert(c1 == 200 && ct1 == "text/csv; charset=utf-8" && b1 == "0\n1\n\n", s"$c1 $ct1 $b1")
+      // a control character in the path reads back through a JSON parser
+      // (Go %q would write it as \x01, which is not JSON)
+      val (c2, _, b2) = exchange("GET", "/db/tql/%01.tql")
+      assert(c2 == 404, s"$c2 $b2")
+      graft.script.Builtins.jsonParse(b2) match {
+        case m: scala.collection.Map[_, _] =>
+          assert(m.asInstanceOf[scala.collection.Map[String, Any]].get("reason")
+            .contains("'/\u0001.tql' not found"), b2)
+        case other => fail(s"not a JSON object: $other")
+      }
+    } finally graft.tql.Compiler.templateRoot = prev
+  }
+
   test("HTTP() multipart inline body (fm_encoder_test.go:210-268)") {
     // every body line keeps its newline so the boundary framing survives;
     // the handler parses the parts back out of the raw bytes
     val boundary = "----Boundary7MA4YWxkTrZu0gW"
     @volatile var gotName = ""; @volatile var gotFile = ""
-    HttpLoop.handle("/upload") { (method, _, _, body) =>
-      assert(method == "POST")
-      val parts = new String(body, "UTF-8").split(
+    HttpLoop.handle("/upload") { req =>
+      assert(req.method == "POST")
+      val parts = req.text.split(
         java.util.regex.Pattern.quote("--" + boundary)).toSeq
       def fieldOf(p: String) = p.split("\n\n", 2) match {
         case Array(head, content) => (head, content.stripSuffix("\n"))
@@ -306,7 +373,7 @@ class HttpLoopSpec extends SparkSpec {
         if (head.contains("name=\"NAME\"")) gotName = content
         if (head.contains("name=\"DATA\"")) gotFile = content
       }
-      (200, "text/plain", "uploaded".getBytes("UTF-8"))
+      HttpReply(200, "text/plain", "uploaded")
     }
     val resp = runTrim(
       s"""HTTP({
@@ -332,13 +399,13 @@ class HttpLoopSpec extends SparkSpec {
   }
 
   test("file('http://…') sources fetch content (task_test.go TestHttpFile)") {
-    HttpLoop.handle("/string") { (m, _, _, _) =>
-      assert(m == "GET"); (200, "text/plain", "ok.".getBytes("UTF-8")) }
-    HttpLoop.handle("/bytes") { (m, _, _, _) =>
-      assert(m == "GET"); (200, "text/plain", "ok.".getBytes("UTF-8")) }
-    HttpLoop.handle("/csvfile") { (m, _, _, _) =>
-      assert(m == "GET"); (200, "text/csv",
-        "1,3.141592,true,\"escaped, string\",123456".getBytes("UTF-8")) }
+    HttpLoop.handle("/string") { req =>
+      assert(req.method == "GET"); HttpReply(200, "text/plain", "ok.") }
+    HttpLoop.handle("/bytes") { req =>
+      assert(req.method == "GET"); HttpReply(200, "text/plain", "ok.") }
+    HttpLoop.handle("/csvfile") { req =>
+      assert(req.method == "GET"); HttpReply(200, "text/csv",
+        "1,3.141592,true,\"escaped, string\",123456") }
 
     assert(runTrim(
       s"STRING(file(\"http://127.0.0.1:$port/string\"))\nCSV()\n") == "ok.\n")

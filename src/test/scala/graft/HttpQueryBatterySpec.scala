@@ -349,8 +349,7 @@ class HttpQueryBatterySpec extends SparkSpec {
     val (c7, _, _) = httpRaw("DELETE", "/debug/statz/config")
     assert(c7 == 405, c7)
     // the same handler serves /web/api/statz/config (TestStatzConfig)
-    val r = graft.server.WebRoutes.route(spark, "GET",
-      "/web/api/statz/config", "")
+    val r = webRoute("GET", "/web/api/statz/config")
     assert(r.status == 200 && r.body.contains(""""success":true"""), r)
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.server.Bridge
-import graft.tql.Tql
 
 /** JDBC bridge passthrough (reference mods/bridge/connector/sql_bridge.go
   * shape): dialect registry, url builders, and a real round-trip through

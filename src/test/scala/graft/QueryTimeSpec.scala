@@ -17,9 +17,9 @@ class QueryTimeSpec extends SparkSpec {
     trimClose(csv).split("\n").toSeq.filter(_.nonEmpty).map(_.split(",")(0))
 
   private def assertSameTime(view: String): Unit = {
-    val viaQuery = timeCells(graft.tql.Tql.run(spark,
+    val viaQuery = timeCells(graft.tql.Compiler.run(spark,
       s"QUERY('VALUE', from('$view', 't1'), between(1700000140000000000, 1700000150000000000))\nCSV()\n"))
-    val viaSql = timeCells(graft.tql.Tql.run(spark,
+    val viaSql = timeCells(graft.tql.Compiler.run(spark,
       s"""SQL("select TIME, VALUE from $view where name = 't1' order by TIME")\nCSV()\n"""))
     assert(viaQuery == Seq("1700000141000000000", "1700000142123456000"), viaQuery)
     assert(viaQuery == viaSql, s"QUERY $viaQuery vs SQL $viaSql")

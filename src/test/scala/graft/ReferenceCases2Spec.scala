@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 /** Round-4 verbatim task_test.go cases: DROP/TAKE offset forms and
   * validation errors (TestDropTake), the unpredicted-bins streaming

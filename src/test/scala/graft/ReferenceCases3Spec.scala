@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 /** Round-7 verbatim task_test.go batteries not yet mirrored elsewhere:
   * SET variable redefinition (TestSetVariables), PUSHKEY/POPKEY stack

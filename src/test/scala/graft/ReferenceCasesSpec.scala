@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 /** Inline test cases mirrored from the reference's TQL suite
   * (mods/tql/tql_test.go — behavior observed, scripts re-expressed):
@@ -304,7 +303,7 @@ class ReferenceCasesSpec extends SparkSpec {
   }
 
   test("CSV_payload_CSV with typed fields and epoch timeformat") {
-    val c = graft.tql.Tql.compile(spark,
+    val c = graft.tql.Compiler.compile(spark,
       """CSV(payload(),
         |  field(0, stringType(), "name"),
         |  field(1, datetimeType("s"), "time"),
@@ -313,7 +312,7 @@ class ReferenceCasesSpec extends SparkSpec {
         |)
         |CSV(timeformat("s"), heading(true))
         |""".stripMargin,
-      Map("payload" -> "temp.name,1691662156,123.456789,true\n"))
+      params = Map("payload" -> Seq("temp.name,1691662156,123.456789,true\n")))
     val out = trimClose(graft.sinks.Codecs.render(c.output, c.sink.format, c.sink.options))
     assert(out == "name,time,value,active\ntemp.name,1691662156,123.456789,true\n")
   }
@@ -348,8 +347,8 @@ class ReferenceCasesSpec extends SparkSpec {
       "wave.sin,1676432361,0.000000",
       "wave.cos,1676432361,1.000000",
       "wave.sin,1676432362,0.406736").mkString("\n")
-    val c = graft.tql.Tql.compile(spark,
-      "CSV(payload(), header(true))\nMARKDOWN()\n", Map("payload" -> payload))
+    val c = graft.tql.Compiler.compile(spark,
+      "CSV(payload(), header(true))\nMARKDOWN()\n", params = Map("payload" -> Seq(payload)))
     val out = trimClose(graft.sinks.Codecs.render(c.output, c.sink.format, c.sink.options))
     assert(out == Seq(
       "|NAME|TIME|VALUE|",
@@ -396,7 +395,7 @@ class ReferenceCasesSpec extends SparkSpec {
 
   test("SQL_NDJSON with timeformat('default')") {
     mkTagSimple()
-    val c = graft.tql.Tql.compile(spark,
+    val c = graft.tql.Compiler.compile(spark,
       """SQL("select TIME, VALUE from tag_simple where name = 'tag1'")
         |MAPVALUE(0, time(value(0)))
         |NDJSON( timeformat('default'), tz('UTC') )

@@ -1,6 +1,6 @@
 package graft
 
-import graft.server.{ServerFiles, WebRoutes}
+import graft.server.ServerFiles
 
 /** `/web/api/files` file manager — body-level mining of
   * http_test.go TestHandleFiles (:2211-2334), TestImageFiles (:552-587)
@@ -55,7 +55,7 @@ class ServerFilesSpec extends SparkSpec {
     graft.tql.Compiler.templateRoot = tmp.toString
     def route(m: String, p: String, body: String = "",
               q: Map[String, Seq[String]] = Map.empty) =
-      WebRoutes.route(spark, m, s"/web/api/files$p", q, body)
+      webRoute(m, s"/web/api/files$p", q, body)
     try {
       // create-directory
       val mk = route("POST", "/docs")

@@ -64,6 +64,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** One request through the server's route table, without a socket;
+    * `query` is %-encoded into the raw query string. */
+  protected def webRoute(method: String, path: String,
+                         query: Map[String, Seq[String]] = Map.empty,
+                         body: String = ""): graft.server.WebApi.HttpReply = {
+    val enc = (s: String) => java.net.URLEncoder.encode(s, "UTF-8")
+    val raw = query.toSeq.flatMap { case (k, vs) => vs.map(v => s"${enc(k)}=${enc(v)}") }
+    graft.server.WebRoutes.route(spark, graft.server.WebRoutes.Request(method, path,
+      raw.mkString("&"), Map.empty, body.getBytes("UTF-8")))
+  }
+
   /** Sink output with the encoder-Close blank line trimmed: the CSV and
     * NDJSON encoders terminate the wire body with one extra newline
     * (reference csv_encode.go / ndjson/encode.go Close — the exact wire
@@ -73,10 +84,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (s.endsWith("\n\n")) s.dropRight(1) else if (s == "\n") "" else s
 
   protected def runTrim(script: String): String =
-    trimClose(graft.tql.Tql.run(spark, script))
+    trimClose(graft.tql.Compiler.run(spark, script))
   protected def runTrim(script: String, nowNs: Long): String =
-    trimClose(graft.tql.Tql.run(spark, script, nowNs))
+    trimClose(graft.tql.Compiler.run(spark, script, nowNs))
   protected def runTrim(script: String, nowNs: Long,
                         params: Map[String, Seq[String]]): String =
-    trimClose(graft.tql.Tql.run(spark, script, nowNs, params))
+    trimClose(graft.tql.Compiler.run(spark, script, nowNs, params))
 }

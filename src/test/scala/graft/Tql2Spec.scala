@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 class Tql2Spec extends SparkSpec {
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import graft.tql.Tql
 
 class Tql3Spec extends SparkSpec {
   import spark.implicits._
@@ -63,18 +62,18 @@ class Tql3Spec extends SparkSpec {
   }
 
   test("param() binds request parameters into the pipeline") {
-    val c = graft.tql.Tql.compile(spark,
+    val c = graft.tql.Compiler.compile(spark,
       """FAKE(linspace(1, 5, 5))
         |FILTER(value(0) >= parseFloat(param('threshold')))
         |MAPVALUE(1, param('label'), 'tag')
         |CSV()
-        |""".stripMargin, Map("threshold" -> "3", "label" -> "prod"))
+        |""".stripMargin, params = Map("threshold" -> Seq("3"), "label" -> Seq("prod")))
     val out = trimClose(graft.sinks.Codecs.render(c.output, "CSV"))
     assert(out == "3,prod\n4,prod\n5,prod\n")
   }
 
   test("STRING source with payload ?? literal, MAPVALUE(-1) prepend, key()") {
-    val out = trimClose(graft.sinks.Codecs.render(graft.tql.Tql.compile(spark,
+    val out = trimClose(graft.sinks.Codecs.render(graft.tql.Compiler.compile(spark,
       """STRING(payload() ?? ` 123
         |       456
         |    `, separator('\n'), trimspace(true))
@@ -84,15 +83,15 @@ class Tql3Spec extends SparkSpec {
         |""".stripMargin).output, "CSV"))
     assert(out == "text_1,123\ntext_2,456\n")
     // payload param overrides the literal
-    val out2 = trimClose(graft.sinks.Codecs.render(graft.tql.Tql.compile(spark,
+    val out2 = trimClose(graft.sinks.Codecs.render(graft.tql.Compiler.compile(spark,
       """STRING(payload() ?? `zzz`, separator('\n'))
         |CSV()
-        |""".stripMargin, Map("payload" -> "a\nb")).output, "CSV"))
+        |""".stripMargin, params = Map("payload" -> Seq("a\nb"))).output, "CSV"))
     assert(out2 == "a\nb\n")
   }
 
   test("BYTES source: binary chunks with separator, label BYTES") {
-    val c = graft.tql.Tql.compile(spark,
+    val c = graft.tql.Compiler.compile(spark,
       """BYTES('ab;cd;ef', separator(';'))
         |CSV()
         |""".stripMargin)

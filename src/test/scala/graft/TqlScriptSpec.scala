@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.tql.Tql
 
 /** SCRIPT("js") inside TQL pipelines — the reference's own test cases from
   * mods/tql/fm_script_test.go reproduced verbatim (expected CSV/JSON

@@ -1,7 +1,6 @@
 package graft
 
 import graft.server.{Catalog, TagTables}
-import graft.tql.Tql
 
 /** TQL-level SHOW wire formats — reproduces fm_dbsrc_test.go's SHOW
   * battery (SQL('show …') → CSV) with the reference's own expectations,

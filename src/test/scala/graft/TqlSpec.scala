@@ -1,6 +1,6 @@
 package graft
 
-import graft.tql.{Expr, Parser, Tql}
+import graft.tql.{Expr, Parser}
 
 class TqlSpec extends SparkSpec {
 

@@ -1,6 +1,5 @@
 package graft
 
-import graft.tql.Tql
 
 /** The reference's TestTqlSql battery (fm_dbsrc_test.go:46-145) —
   * SCRIPT-yielded wide row → SQL insert sink with ? binds into the

@@ -1,6 +1,6 @@
 package graft
 
-import graft.tql.{Tql, TqlLog}
+import graft.tql.TqlLog
 
 /** WHEN(cond, doLog|do(sub-routine)) — the reference's TestDiscardSink and
   * sub-routine cases (task_test.go:702-750, 1590-1620) with their exact

@@ -421,7 +421,7 @@ class WebApiSpec extends SparkSpec {
         Seq("test.query", Long.box(tick), Double.box(1.0)))
       QueryDoor.execute(spark, "exec table_flush('example')")
       def route(path: String, q: Map[String, Seq[String]] = Map.empty) =
-        graft.server.WebRoutes.route(spark, "GET", s"/web/api$path", q, "")
+        webRoute("GET", s"/web/api$path", q)
       // bare name filter = PREFIX semantics (EXAM matches EXAMPLE)
       val pref = route("/tables", Map("name" -> Seq("exam")))
       assert(pref.status == 200 && pref.body.contains("\"EXAMPLE\""), pref.body)
