@@ -108,8 +108,16 @@ object MachTime {
   }
 }
 
-/** `spark.sql.extensions` entry point — installs [[MachTime.Coerce]]. */
+/** graft's one `spark.sql.extensions` entry point
+  * (`core.Sessions.configure` names it). It installs:
+  *  - [[MachTime.Coerce]], a resolution rule (datetime-as-int64 SQL);
+  *  - [[SmallSort]], an AQE query-stage preparation rule (a global sort
+  *    over a small input sorts in one task, with no range exchange).
+  * Rollup routing is an optimizer rule that `Sessions.installRules`
+  * adds per session through `experimental.extraOptimizations`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(_ => MachTime.Coerce)
+    ext.injectQueryStagePrepRule(_ => SmallSort)
+  }
 }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -514,13 +514,5 @@ object RollupRouting {
 
     private def aggE(fn: AggregateFunction): AggregateExpression =
       AggregateExpression(fn, Complete, isDistinct = false)
-  }
-
-  /** SparkSessionExtensions hook: register with
-    * `.withExtensions(new GraftExtensions)` or the
-    * `spark.sql.extensions` conf. */
-  class GraftExtensions extends (SparkSessionExtensions => Unit) {
-    override def apply(e: SparkSessionExtensions): Unit =
-      e.injectOptimizerRule(s => new Route(s))
   }
 }

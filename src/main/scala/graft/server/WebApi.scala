@@ -404,18 +404,7 @@ object WebApi {
   def timersList(spark: SparkSession): HttpReply = {
     val t0 = System.nanoTime()
     val svc = graft.scheduler.Timers.defaultService(spark)
-    val rows = svc.listSchedules().map { r =>
-      val fields = Seq(
-        Some(s""""name":${GoJs.quote(r.name)}"""),
-        Some(s""""type":${GoJs.quote(r.typ)}"""),
-        if (r.autoStart) Some(""""autoStart":true""") else None,
-        Some(s""""state":${GoJs.quote(r.state)}"""),
-        Option(r.task).filter(_.nonEmpty).map(t => s""""task":${GoJs.quote(t)}"""),
-        Option(r.schedule).filter(_.nonEmpty).map(s => s""""schedule":${GoJs.quote(s)}"""),
-        Option(r.bridge).filter(_.nonEmpty).map(b => s""""bridge":${GoJs.quote(b)}"""),
-        Option(r.topic).filter(_.nonEmpty).map(tp => s""""topic":${GoJs.quote(tp)}""")).flatten
-      fields.mkString("{", ",", "}")
-    }
+    val rows = svc.listSchedules().map(scheduleJson)
     val elapse = graft.time.TimeFns.goDurationString(System.nanoTime() - t0)
     HttpReply(200, "application/json",
       s"""{"success":true,"reason":"success","elapse":"$elapse",""" +

@@ -110,8 +110,8 @@ object Subscribers {
           Reason(success = false, e)
         case Right(script) =>
           try {
-            graft.tql.Compiler.run(spark, script, System.nanoTime(),
-              params + ("payload" -> Seq(new String(payload, "UTF-8"))))
+            graft.tql.Compiler.run(spark, script,
+              params = params + ("payload" -> Seq(new String(payload, "UTF-8"))))
             Reason(success = true, "success")
           } catch {
             case e: Exception =>

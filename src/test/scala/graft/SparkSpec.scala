@@ -64,6 +64,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Spark jobs `body` starts, counted once the listener bus drains. */
+  protected def jobsOf(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.sql.graft.ListenerBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
   /** One request through the server's route table, without a socket;
     * `query` is %-encoded into the raw query string. */
   protected def webRoute(method: String, path: String,

@@ -108,6 +108,33 @@ class SubscriberDispatchSpec extends SparkSpec {
     TagTables.resetDynamicForTest(spark)
   }
 
+  test("a tql task's time('now') is the wall clock in epoch ns") {
+    TagTables.resetDynamicForTest(spark)
+    QueryDoor.execute(spark,
+      "create tag table sub_now (name varchar(40) primary key, time datetime basetime, value double summarized)")
+    val script =
+      """CSV(payload(), header(false),
+        |  field(0, stringType(), "name"),
+        |  field(1, datetimeType("s"), "time"),
+        |  field(2, doubleType(), "value"))
+        |MAPVALUE(1, time('now'))
+        |INSERT('name', 'time', 'value', table('sub_now'))
+        |""".stripMargin
+    val loader: Timers.TqlLoader = (_: String) => Right(script)
+    val svc = new Timers.Service(() => spark, loader)
+    svc.register(Timers.ScheduleDef("sub_now", "subscriber", autoStart = false,
+      task = "now.tql", bridge = "q", topic = "t"))
+    val ent = svc.getEntry("sub_now").get.asInstanceOf[Timers.BaseEntry]
+    val disp = new Dispatcher(spark, loader, ent, "now.tql")
+    val before = System.currentTimeMillis() * 1000000L
+    val r = disp.dispatchNats("t", "n,1,0.5".getBytes("UTF-8"))
+    val after = System.currentTimeMillis() * 1000000L
+    assert(r.success, r)
+    val now = spark.sql("SELECT to_timestamp(time) FROM sub_now").collect().head.getLong(0)
+    assert(now >= before - 5000000000L && now <= after + 5000000000L, (before, now, after))
+    TagTables.resetDynamicForTest(spark)
+  }
+
   test("tql load failure fails then stops the entry (sched_subs doTql)") {
     val loader: Timers.TqlLoader = (_: String) => Left("load failed")
     val svc = new Timers.Service(() => spark, loader)

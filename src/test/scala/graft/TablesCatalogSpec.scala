@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.core.Tables
 
@@ -9,20 +7,6 @@ import graft.core.Tables
   * later read is metadata only, a rewrite is seen, and neither threads
   * nor sessions can get a wrong or shared relation. */
 class TablesCatalogSpec extends SparkSpec {
-
-  /** Spark jobs `body` starts, counted once the listener bus drains. */
-  private def jobsOf(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.ListenerBus.drain(sc)
-    sc.addSparkListener(l)
-    try { body; org.apache.spark.sql.graft.ListenerBus.drain(sc) }
-    finally sc.removeSparkListener(l)
-    n.get
-  }
 
   private def write(n: Long, path: String, mode: String = "overwrite"): Unit =
     spark.range(n).selectExpr("id", "id * 2 AS twice").write.mode(mode).parquet(path)

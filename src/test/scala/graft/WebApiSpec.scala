@@ -377,6 +377,30 @@ class WebApiSpec extends SparkSpec {
     }
   }
 
+  test("/web/api/timers lists a subscriber row with its non-zero QoS") {
+    // the timers list renders every schedule through the one schedule
+    // object (scheduler management.go:19-29: QoS omit-empty), so a
+    // subscriber beside a timer carries its QoS there as in GET :name
+    graft.scheduler.Timers.resetForTest()
+    val bridgeName = "qos-bridge"
+    try {
+      assert(WebApi.bridgesAdd(
+        s"""{"name":"$bridgeName","type":"mqtt","path":"broker=127.0.0.1:1883 id=qos"}""")
+        .status == 200)
+      assert(WebApi.subscribersAdd(spark,
+        s"""{"name":"qos-sub","bridge":"$bridgeName","topic":"q/t","task":"sub.tql","QoS":1}""")
+        .status == 200)
+      val listed = WebApi.timersList(spark)
+      assert(listed.status == 200 && listed.body.contains(
+        """{"name":"QOS-SUB","type":"SUBSCRIBER","state":"STOP","task":"sub.tql",""" +
+          s""""bridge":"$bridgeName","topic":"q/t","QoS":1}"""), listed.body)
+      assert(WebApi.subscriberGet(spark, "qos-sub").body.contains(""""QoS":1}"""))
+    } finally {
+      graft.scheduler.Timers.resetForTest()
+      graft.server.Bridge.delBridge(bridgeName)
+    }
+  }
+
   test("/web/api routes are live over the loopback HTTP edge") {
     val port = graft.server.HttpLoop.ensureServer(spark)
     val client = java.net.http.HttpClient.newHttpClient()
